@@ -3,6 +3,7 @@ package graft.plans
 import graft.functions.TextFunctions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -45,13 +46,18 @@ case class LcNoDiacritics(child: Expression) extends UnaryExpression {
 
 /** Runtime function registration (no SparkSessionExtensions wiring
   * needed, so it works on any caller-provided session — including the
-  * driver harness's). Idempotent.
+  * driver harness's). Idempotent: a function the session already has
+  * (an earlier call, or `GraftExtensions`) is left as it is, so repeat
+  * calls do not log a "replaced a previously registered function"
+  * warning.
   */
 object GraftFunctions {
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_normalize", (exprs: Seq[Expression]) => LcNoDiacritics(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    def once(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    once("graft_normalize", exprs => LcNoDiacritics(exprs.head))
+    once("graft_dot", exprs => DotProduct(exprs(0), exprs(1)))
   }
 }

@@ -1,90 +1,66 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Major compaction for the versioned streaming state all four
-  * maintainers accumulate (`VersionedState` layout: index, near-dup,
-  * full engine store, ANN) — the Spark shape of Accumulo's
-  * major compaction (`README.md:50-56`: combiners fold at compact scope;
-  * minor flushes pile up files, a major folds them into one).
+/** Major compaction — the Spark shape of Accumulo's (`README.md:50-56`:
+  * combiners fold at compact scope; minor flushes pile up files, a major
+  * folds them into one). The routine itself is
+  * `VersionedStore.majorCompact`; this object holds each store's
+  * per-part FOLD (the combiner at compact scope), the auto-compaction
+  * dial and the CLI.
   *
-  * Without it, read amplification grows linearly with committed batches:
-  * the index reader folds N delta dirs per query and the dedup reader
-  * unions N part dirs. Compacting `v_0..v_k` (plus any older base) into
-  * one `c<k>/` base restores O(1) read cost; deltas after `k` keep
-  * arriving — the maintainers never pause.
+  * Without compaction, read amplification grows linearly with committed
+  * batches: the index reader folds N delta dirs per query and the dedup
+  * reader unions N part dirs. Compacting `v_0..v_k` (plus any older
+  * base) into one `c<k>/` base restores O(1) read cost; deltas after `k`
+  * keep arriving — the maintainers never pause.
   *
-  * Correctness: the index fold is `IncrementalIndex.mergeAll`, exact at
-  * any granularity by the lossy-UidList merge contract (A1); dedup state
-  * is additive, so its compaction is a pure concatenation. Both are
-  * read-equivalent by construction and StreamingSpec pins it
-  * (components/index identical pre/post).
-  *
-  * Protocol: write `c<k>` with forced `_SUCCESS` (same commit rule as
-  * the maintainers — readers never see a partial base), THEN delete the
-  * subsumed dirs. A reader that resolved its read set before the delete
-  * may still hold paths into subsumed dirs; production deployments
-  * delay the delete by a grace period (the standard object-store
-  * compaction posture) — pass `deleteSubsumed = false` and sweep later.
+  * Correctness: each part's fold is exactly the read path's (the index
+  * fold is `IncrementalIndex.mergeAll`, exact at any granularity by the
+  * lossy-UidList merge contract (A1); additive parts concatenate), so a
+  * base is read-equivalent by construction and StreamingSpec pins it.
+  * Tombstones are applied PHYSICALLY by every fold (the base carries an
+  * empty tombstone part): after compaction no byte of a deleted row
+  * remains in the base — the right-to-be-forgotten eraser the live
+  * delete path defers to.
   */
 object Compaction {
+
+  /** A store's compaction fold: the read set to the base's (part,
+    * table) pairs, in write order.
+    */
+  private[streaming] type Fold = ReadView => Iterable[(String, DataFrame)]
+
+  /** The fold of a single-part store: the read set's one table through
+    * the store's combiner.
+    */
+  private[streaming] def single(merge: DataFrame => DataFrame): Fold =
+    v => Seq("" -> merge(v.read()))
 
   /** Compact the global-index maintainer's state at `dir` through the
     * newest committed version. Returns the compacted-through version,
     * or -1 if there is nothing to compact.
     */
   def compactIndex(spark: SparkSession, dir: String,
-      deleteSubsumed: Boolean = true): Long = {
-    val through = VersionedState.maxVersion(dir, Nil)
-    if (through < 0) return -1L
-    val paths = VersionedState.readPaths(dir, Nil, None, through)
-    IncrementalIndex.mergeAll(spark.read.parquet(paths: _*))
-      .write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(s"$dir/c$through")
-    if (deleteSubsumed) sweep(dir, Nil, through)
-    through
-  }
+      deleteSubsumed: Boolean = true): Long =
+    new VersionedStore(spark, dir).majorCompact(deleteSubsumed)(single(IncrementalIndex.mergeAll))
 
-  /** Compact the near-dup maintainer's additive parts at `dir` through
-    * the newest committed version, applying doc tombstones PHYSICALLY
-    * (per-batch `verdicts/` history is per-batch output, not corpus
-    * state — untouched).
+  /** Compact the near-dup maintainer's additive parts at `dir` (per-batch
+    * `verdicts/` history is per-batch output, not corpus state —
+    * untouched).
     */
   def compactDedup(spark: SparkSession, dir: String,
-      deleteSubsumed: Boolean = true): Long = {
-    val parts = LiveNearDupMaintainer.Parts
-    val through = VersionedState.maxVersion(dir, parts)
-    if (through < 0) return -1L
-    def readPart(p: String) = spark.read.parquet(
-      VersionedState.readPaths(dir, parts, Some(p), through): _*)
-    val tombs = VersionedState.tombstoneSet(
-      VersionedState.readPaths(dir, parts, Some("tombstones"), through) match {
-        case Nil => None
-        case _   => Some(readPart("tombstones"))
-      }, "doc_id")
-    // Reading subsumed dirs while writing the base from them is not a
-    // conflict (parquet reads are immutable snapshots of the file
-    // listing at plan time), and `committed` requires EVERY part's
-    // marker, so a half-written c<through> is never listable.
-    for (p <- parts) {
-      val unioned = readPart(p)
-      val folded = p match {
-        case "tombstones" => unioned.limit(0) // applied below; base is clean
-        case _ =>
-          VersionedState.maskDeleted(VersionedState.withVer(unioned), tombs, "doc_id")
-      }
-      folded.write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-        .parquet(s"$dir/c$through/$p")
+      deleteSubsumed: Boolean = true): Long =
+    new VersionedStore(spark, dir, LiveNearDupMaintainer.Parts, LiveNearDupMaintainer.Tombstone)
+      .majorCompact(deleteSubsumed)(dedupFold)
+
+  private[streaming] val dedupFold: Fold = v =>
+    LiveNearDupMaintainer.Parts.view.map { p =>
+      p -> (if (p == "tombstones") v.read(p).limit(0) else v.mask(v.read(p)))
     }
-    if (deleteSubsumed) sweep(dir, parts, through)
-    through
-  }
 
   /** Compact the ANN maintainer's assignment deltas at `dir`
-    * (concatenation with tombstones applied PHYSICALLY — same
-    * right-to-be-forgotten contract as `compactEngine`).
+    * (concatenation with tombstones applied physically).
     *
     * `retrainCells` re-sizes the IVF index while it has the full pass
     * in hand — the LIVE-store arm of the round-10 scaling fix (a cell
@@ -106,98 +82,65 @@ object Compaction {
     *    Ingest should be quiescent across a RETRAIN compaction: a
     *    delta racing the retrain keeps old-geometry cell ids (recall
     *    loss for those vectors, never wrong results) until the next
-    *    compaction folds and re-assigns it.
+    *    compaction folds and re-assigns it. A retrain lands in a NEW
+    *    c-dir, so it needs a delta above the newest base.
     */
   def compactAnn(spark: SparkSession, dir: String,
-      deleteSubsumed: Boolean = true, retrainCells: Int = 0): Long = {
-    // committed-version detection keys on the CORE parts (a round-8
-    // store has no codes part anywhere); the codes base is REBUILT from
-    // the masked assignments whenever PQ books exist — encodePq is
-    // deterministic per vector, so the rebuild is row-identical to
-    // folding the code deltas AND it covers vectors ingested before PQ
-    // was enabled: compaction is the migration that graduates any store
-    // to full IVF-PQ coverage. No books ⇒ schema-preserved empty base.
-    val core = LiveAnnMaintainer.CoreParts
-    val through = VersionedState.maxVersion(dir, core)
-    if (through < 0) return -1L
-    def readPart(p: String) = spark.read.parquet(
-      VersionedState.readPaths(dir, core, Some(p), through): _*)
-    val tombs = VersionedState.tombstoneSet(
-      VersionedState.readPaths(dir, core, Some("tombstones"), through) match {
-        case Nil => None
-        case _   => Some(readPart("tombstones"))
-      }, "vec_id")
-    val books = LiveAnnMaintainer.readBooks(spark, dir)
+      deleteSubsumed: Boolean = true, retrainCells: Int = 0): Long =
+    new VersionedStore(spark, dir, LiveAnnMaintainer.CoreParts, LiveAnnMaintainer.Tombstone)
+      .majorCompact(deleteSubsumed)(annFold(retrainCells))
+
+  // committed-version detection keys on the CORE parts (a round-8 store
+  // has no codes part anywhere); the codes base is REBUILT from the
+  // masked assignments whenever PQ books exist — encodePq is
+  // deterministic per vector, so the rebuild is row-identical to folding
+  // the code deltas AND it covers vectors ingested before PQ was
+  // enabled: compaction is the migration that graduates any store to
+  // full IVF-PQ coverage. No books ⇒ schema-preserved empty base.
+  private[streaming] def annFold(retrainCells: Int): Fold = v => {
+    import graft.pipeline.Similarity
+    val spark = v.spark
+    val books = LiveAnnMaintainer.readBooks(spark, v.dir)
     // the masked assignment union feeds BOTH the assigned base and the
     // codes re-encode — cache it so the store's largest table is read
     // and tombstone-masked once (the foldedGlobal discipline)
-    val maskedAssigned0 = VersionedState.maskDeleted(
-      VersionedState.withVer(readPart("assigned")), tombs, "vec_id").cache()
-    // the retrain path caches a SECOND corpus-sized table (the
-    // re-assignment); track it here so the finally releases it on the
-    // failure path too, not just after a clean parts loop
-    var retrainCache: Option[org.apache.spark.sql.DataFrame] = None
-    try {
-      import graft.pipeline.Similarity
-      // resolve the retrain FIRST: the re-assigned rows feed both the
-      // assigned base and the codes re-encode below
-      val newCents: Option[Seq[(Int, Seq[Double])]] =
-        if (retrainCells == 0) None
-        else {
-          val live = maskedAssigned0.select("vec_id", "embedding")
-          val k =
-            if (retrainCells > 0) retrainCells
-            else Similarity.autoCellCount(live.count())
-          Some(Similarity.trainIvf(live, k).zipWithIndex
-            .map { case (c, i) => (i, c.toSeq) }.toSeq)
-        }
-      val maskedAssigned = newCents match {
-        case None => maskedAssigned0
-        case Some(cs) =>
-          val re = Similarity.assignIvf(cs.sortBy(_._1).map(_._2.toArray).toArray,
-            maskedAssigned0.select("vec_id", "embedding")).cache()
-          retrainCache = Some(re)
-          re
+    val maskedAssigned0 = v.cached(v.mask(v.read("assigned")))
+    // resolve the retrain FIRST: the re-assigned rows feed both the
+    // assigned base and the codes re-encode below
+    val newCents: Option[Seq[(Int, Seq[Double])]] =
+      if (retrainCells == 0) None
+      else {
+        val live = maskedAssigned0.select("vec_id", "embedding")
+        val k =
+          if (retrainCells > 0) retrainCells
+          else Similarity.autoCellCount(live.count())
+        Some(Similarity.trainIvf(live, k).zipWithIndex
+          .map { case (c, i) => (i, c.toSeq) }.toSeq)
       }
-      // centroid part FIRST: the base must never become visible (core
-      // parts committed) without the centroids its assignments assume.
-      // A retrain writes the new set; otherwise a base-carried part is
-      // copied forward so later compactions preserve an earlier retrain.
-      val carryCents: Option[org.apache.spark.sql.DataFrame] = newCents match {
-        case Some(cs) =>
-          import spark.implicits._
-          Some(cs.toDF("cell", "centroid"))
-        case None =>
-          VersionedState.readPaths(dir, core, Some("centroids"), through)
-            .filter(p => VersionedState.exists(s"$p/_SUCCESS")) match {
-            case Nil => None
-            case ps  => Some(spark.read.parquet(ps.last)) // newest carried set
-          }
-      }
-      carryCents.foreach(_.coalesce(1).write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-        .parquet(s"$dir/c$through/centroids"))
-      for (p <- LiveAnnMaintainer.Parts) {
-        val folded = p match {
-          case "assigned" => maskedAssigned // per-vector rows — erase deleted physically
-          case "codes" => books match {
-            case Some(b) => graft.pipeline.Similarity.encodePq(
-              b, maskedAssigned.select("vec_id", "embedding"))
-            case None => LiveAnnMaintainer.emptyCodes(spark)
-          }
-          case "tombstones" => readPart(p).limit(0) // applied above; base is clean
-          case other        => readPart(other)
-        }
-        folded.write.mode("overwrite")
-          .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-          .parquet(s"$dir/c$through/$p")
-      }
-    } finally {
-      retrainCache.foreach(_.unpersist())
-      maskedAssigned0.unpersist()
+    val maskedAssigned = newCents.fold(maskedAssigned0)(cs =>
+      v.cached(Similarity.assignIvf(cs.sortBy(_._1).map(_._2.toArray).toArray,
+        maskedAssigned0.select("vec_id", "embedding"))))
+    // centroid part FIRST: the base must never become visible (core
+    // parts committed) without the centroids its assignments assume.
+    // A retrain writes the new set; otherwise a base-carried part is
+    // copied forward so later compactions preserve an earlier retrain.
+    val carryCents: Option[DataFrame] = newCents match {
+      case Some(cs) =>
+        import spark.implicits._
+        Some(cs.toDF("cell", "centroid"))
+      case None =>
+        v.paths("centroids").filter(p => VersionedState.exists(s"$p/_SUCCESS"))
+          .lastOption.map(spark.read.parquet(_)) // newest carried set
     }
-    if (deleteSubsumed) sweep(dir, core, through)
-    through
+    carryCents.map(c => "centroids" -> c.coalesce(1)).toSeq.view ++
+      LiveAnnMaintainer.Parts.view.map { p =>
+        p -> (p match {
+          case "assigned" => maskedAssigned // per-vector rows — erase deleted physically
+          case "codes" => books.fold(LiveAnnMaintainer.emptyCodes(spark))(b =>
+            Similarity.encodePq(b, maskedAssigned.select("vec_id", "embedding")))
+          case _ => v.read(p).limit(0) // tombstones: applied above; base is clean
+        })
+      }
   }
 
   /** Compact the full-engine maintainer's store at `dir`: additive
@@ -206,28 +149,20 @@ object Compaction {
     * each part's fold is exactly the read path's, so the compacted base
     * is read-equivalent by construction (StreamingSpec asserts it via
     * engine-result equality).
-    *
-    * Tombstones are applied PHYSICALLY here (the read path's
-    * version-ordered mask, then an empty tombstone part in the base):
-    * after compaction no byte of a deleted document remains anywhere in
-    * the store — this is the right-to-be-forgotten eraser the live
-    * delete path defers to.
     */
   def compactEngine(spark: SparkSession, dir: String,
-      deleteSubsumed: Boolean = true): Long = {
+      deleteSubsumed: Boolean = true): Long =
+    new VersionedStore(spark, dir, LiveEngineMaintainer.CoreParts, LiveEngineMaintainer.Tombstone)
+      .majorCompact(deleteSubsumed)(engineFold)
+
+  // committed-version detection keys on the CORE parts: a round-8 store
+  // (no derived parts anywhere) compacts fine — this fold never READS
+  // the derived parts at all, it rebuilds them from core data, so
+  // compaction doubles as the migration that graduates any old store to
+  // the full round-9 layout.
+  private[streaming] val engineFold: Fold = v => {
     import org.apache.spark.sql.functions.{coalesce, col, lit, reverse, size, sum}
-    import LiveEngineMaintainer.{foldGlobal, maskDeleted, tombstoneSet, withVer}
-    // committed-version detection keys on the CORE parts: a round-8
-    // store (no derived parts anywhere) compacts fine — this method
-    // never READS the derived parts at all, it rebuilds all three from
-    // core data, so compaction doubles as the migration that graduates
-    // any old store to the full round-9 layout.
-    val core = LiveEngineMaintainer.CoreParts
-    val through = VersionedState.maxVersion(dir, core)
-    if (through < 0) return -1L
-    def readPart(p: String) = spark.read.parquet(
-      VersionedState.readPaths(dir, core, Some(p), through): _*)
-    val tombs = tombstoneSet(Some(readPart("tombstones")))
+    import LiveEngineMaintainer.foldGlobal
     // The folded global feeds three parts (global, reverse, trigram) —
     // cache it so the merge-on-read fold runs once, not per write. The
     // reverse/trigram bases are REBUILT from the folded global rather
@@ -236,130 +171,94 @@ object Compaction {
     // right-to-be-forgotten eraser — a deleted document's vocabulary
     // grams must not survive in the base. Both bases are written in
     // `WikiIndex.save`'s sorted layout so prefix/gram probes prune.
-    val foldedGlobal = foldGlobal(withVer(readPart("global")), tombs).cache()
+    val foldedGlobal = v.cached(foldGlobal(VersionedState.withVer(v.read("global")), v.tombstones))
     // documents/postings each feed their own base part AND the
     // doc_lengths derivation — cache the masked frames so the two
     // corpus-sized per-doc tables are read and tombstone-masked once
-    val maskedDocs  = maskDeleted(withVer(readPart("documents")), tombs).cache()
-    val maskedPosts = maskDeleted(withVer(readPart("postings")), tombs).cache()
+    val maskedDocs  = v.cached(v.mask(v.read("documents")))
+    val maskedPosts = v.cached(v.mask(v.read("postings")))
     // docs_fields feeds its own base part AND the field_postings rebuild
-    val maskedFields = maskDeleted(withVer(readPart("docs_fields")), tombs).cache()
+    val maskedFields = v.cached(v.mask(v.read("docs_fields")))
     // Per-doc BM25 token length from the masked postings — EXACT without
     // raw text (every token position lives in exactly one term's offsets
     // array, the WikiIndex.docLengths derivation). Feeds the doc_lengths
-    // base always, and the postings base's denormalized `dl` column
-    // whenever the read set is not UNIFORMLY dl-covered: a round-8
-    // store (no dl anywhere) or a migrated mix of round-8 + round-9
-    // deltas must not let schema inference persist null dl into the
-    // base — the coverage rule `LiveEngineMaintainer.postingsUnion`
-    // applies at read; compaction is where the store GRADUATES to a
-    // complete dl (one extra keyed join, compaction-time only, and the
-    // migration that makes the coverage rule pass forever after).
+    // base always, and the postings base's `dl` column whenever the read
+    // set is not UNIFORMLY dl-covered (the read path's coverage rule,
+    // `LiveEngineMaintainer.postingsUnion`): compaction is where a
+    // round-8 or mixed store graduates to a complete dl, never
+    // persisting null dl into the base.
     val docDl = maskedPosts
       .groupBy("partition", "language", "docId")
       .agg(sum(size(col("offsets"))).cast("double").as("dl"))
-    val postsPaths = VersionedState.readPaths(dir, core, Some("postings"), through)
-    val dlCovered = postsPaths.forall(p =>
-      spark.read.parquet(p).schema.fieldNames.contains("dl"))
-    try {
-      for (p <- LiveEngineMaintainer.Parts) {
-        val folded = p match {
-          case "global"   => foldedGlobal
-          case "reverse"  =>
-            foldedGlobal.withColumn("fieldValue", reverse(col("fieldValue")))
-              .repartition(col("fieldName")).sortWithinPartitions("fieldValue")
-          case "trigram"  =>
-            graft.ingest.WikiIndex.deriveTrigrams(foldedGlobal)
-              .repartition(col("fieldName")).sortWithinPartitions("gram")
-          case "documents"   => maskedDocs
-          case "docs_fields" => maskedFields
-          case "field_postings" =>
-            // rebuilt from core data like reverse/trigram (the metadata
-            // catalog's kind-p rows drive the derivation), so deletes
-            // erase physically and a store predating the part GRADUATES
-            // to the full layout here
-            graft.ingest.IndexBuilder.deriveFieldPostings(
-              maskedFields, readPart("metadata").distinct())
-          case "postings"  =>
-            if (dlCovered) maskedPosts
-            else maskedPosts.drop("dl")
-              .join(docDl, Seq("partition", "language", "docId"))
-          case "doc_lengths" =>
-            // WikiIndex.docLengths' derivation over the masked core
-            // tables (docless-token docs 0)
-            maskedDocs
-              .select("partition", "language", "docId")
-              .join(docDl, Seq("partition", "language", "docId"), "left")
-              .select(col("partition"), col("language"), col("docId"),
-                coalesce(col("dl"), lit(0.0)).as("dl"))
-          case "metadata"   => readPart(p).distinct()
-          case "tombstones" => readPart(p).limit(0) // applied below; base is clean
-          case _            => maskDeleted(withVer(readPart(p)), tombs)
-        }
-        folded.write.mode("overwrite")
-          .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-          .parquet(s"$dir/c$through/$p")
-      }
-    } finally {
-      foldedGlobal.unpersist(); maskedDocs.unpersist(); maskedPosts.unpersist()
-      maskedFields.unpersist()
+    val dlCovered = LiveEngineMaintainer.dlCovered(v.spark, v.paths("postings"))
+    LiveEngineMaintainer.Parts.view.map { p =>
+      p -> (p match {
+        case "global"   => foldedGlobal
+        case "reverse"  =>
+          foldedGlobal.withColumn("fieldValue", reverse(col("fieldValue")))
+            .repartition(col("fieldName")).sortWithinPartitions("fieldValue")
+        case "trigram"  =>
+          graft.ingest.WikiIndex.deriveTrigrams(foldedGlobal)
+            .repartition(col("fieldName")).sortWithinPartitions("gram")
+        case "documents"   => maskedDocs
+        case "docs_fields" => maskedFields
+        case "field_postings" =>
+          // rebuilt from core data like reverse/trigram (the metadata
+          // catalog's kind-p rows drive the derivation), so deletes
+          // erase physically and a store predating the part GRADUATES
+          // to the full layout here
+          graft.ingest.IndexBuilder.deriveFieldPostings(
+            maskedFields, v.read("metadata").distinct())
+        case "postings"  =>
+          if (dlCovered) maskedPosts
+          else maskedPosts.drop("dl")
+            .join(docDl, Seq("partition", "language", "docId"))
+        case "doc_lengths" =>
+          // WikiIndex.docLengths' derivation over the masked core
+          // tables (docless-token docs 0)
+          maskedDocs
+            .select("partition", "language", "docId")
+            .join(docDl, Seq("partition", "language", "docId"), "left")
+            .select(col("partition"), col("language"), col("docId"),
+              coalesce(col("dl"), lit(0.0)).as("dl"))
+        case "metadata"   => v.read(p).distinct()
+        case "tombstones" => v.read(p).limit(0) // applied above; base is clean
+        case _            => v.mask(v.read(p))
+      })
     }
-    if (deleteSubsumed) sweep(dir, core, through)
-    through
   }
 
   /** Auto-compaction policy gate for the maintainers (the Accumulo
-    * dial: N minor flushes trigger a major). Runs `compact` iff the
+    * dial: N minor flushes trigger a major). Folds `store` iff the
     * policy is on (`every > 0`) and the count of PENDING deltas — those
     * above the newest committed base, i.e. the read set's fold depth —
-    * has reached it; counting all committed v-dirs instead would let
-    * already-subsumed dirs (kept by a CLI `keep` run, or by this
-    * method's own grace window) trigger a full major every batch.
+    * has reached it (counting every committed v-dir would let subsumed
+    * dirs still inside a grace window trigger a major every batch).
     *
     * The auto path runs WITH a one-cycle reader grace period: the new
-    * base is written without deleting what it subsumes
-    * (`compact(false)`), and only the dirs the PREVIOUS base subsumed
-    * are swept — so a live reader whose lazy plan still pins paths from
-    * the pre-compaction read set survives the batch turn that compacted
-    * under it, and subsumed dirs live exactly one compaction cycle.
-    * (The CLI retains both postures explicitly: default = eager delete,
-    * `keep`+`sweep` = operator-managed grace.)
-    *
-    * The check is one directory listing, paid per batch. Returns
-    * whether a compaction ran.
+    * base is written without deleting what it subsumes, and only the
+    * dirs the PREVIOUS base subsumed are swept — so a live reader whose
+    * lazy plan still pins paths from the pre-compaction read set
+    * survives the batch turn that compacted under it. The check is one
+    * directory listing per batch. Returns whether a compaction ran.
     */
-  def maybeCompact(every: Int, dir: String, parts: Seq[String])
-      (compact: Boolean => Long): Boolean = {
-    if (every <= 0) return false
-    val pending =
-      VersionedState.readSet(dir, parts, VersionedState.maxVersion(dir, parts))._2.size
-    pending >= every && {
-      val prevBase = VersionedState.committed(dir, 'c', parts).sorted.lastOption
-      compact(false)
-      prevBase.foreach(sweep(dir, parts, _))
-      true
+  private[streaming] def maybeCompact(every: Int, store: VersionedStore)(fold: Fold): Boolean =
+    every > 0 && {
+      val (bases, deltas) = VersionedState.committedSets(store.dir, store.parts)
+      VersionedState.readSetFrom(bases, deltas, Long.MaxValue)._2.size >= every && {
+        store.majorCompact(deleteSubsumed = false)(fold)
+        bases.lastOption.foreach(VersionedState.sweep(store.dir, store.parts, _))
+        true
+      }
     }
-  }
 
-  /** Deferred sweep for grace-period deployments: delete everything the
-    * NEWEST committed base subsumes. The compact-then-sweep-later
-    * posture (`compactX(deleteSubsumed = false)` now, `sweepSubsumed`
-    * after the reader grace window) is the standard object-store
-    * compaction protocol.
+  /** Deferred sweep for grace-period deployments
+    * (`compactX(deleteSubsumed = false)` now, this after the reader grace
+    * window): delete everything the NEWEST committed base subsumes.
     */
   def sweepSubsumed(dir: String, parts: Seq[String]): Unit =
-    VersionedState.committed(dir, 'c', parts).sorted.lastOption
-      .foreach(sweep(dir, parts, _))
-
-  /** Delete dirs subsumed by the committed base `c<through>`: every
-    * delta `v ≤ through` and every older base.
-    */
-  private def sweep(dir: String, parts: Seq[String], through: Long): Unit = {
-    val doomed =
-      VersionedState.committed(dir, 'v', parts).filter(_ <= through).map(v => s"v$v") ++
-        VersionedState.committed(dir, 'c', parts).filter(_ < through).map(k => s"c$k")
-    doomed.foreach(n => VersionedState.deleteRecursively(s"$dir/$n"))
-  }
+    VersionedState.committedSets(dir, parts)._1.lastOption
+      .foreach(VersionedState.sweep(dir, parts, _))
 
   /** Part lists for CLI commit-detection and sweeping — the CORE sets
     * for the stores that grew optional derived parts, so the sweep verb

@@ -3,8 +3,8 @@ package graft.streaming
 import graft.pipeline.Similarity
 import graft.pipeline.Similarity.{IvfIndex, PqIndex}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Live IVF ANN maintenance — the embedding-store face of the
   * delta-based streaming posture: a growing vector corpus is assigned
@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `ivfTopKWith` result equality. (Contrast the dedup maintainer,
   * whose per-batch verdicts are order-dependent by design.)
   *
-  * Layout (`VersionedState`): centroids live ONCE at `<dir>/centroids`
+  * Layout ([[VersionedStore]]): centroids live ONCE at `<dir>/centroids`
   * (k×dim — driver/broadcast sized; written with the same forced
   * `_SUCCESS` commit), trained on the first batch if absent; each
   * version's `assigned` part is that batch's delta; readers union
@@ -45,47 +45,17 @@ class LiveAnnMaintainer(
     iters: Int = 2,
     autoCompactEvery: Int = 0,
     pqM: Int = 0,
-    pqK: Int = 16) {
+    pqK: Int = 16)
+    // Commit protocol keys on the CORE parts (assigned, tombstones); the
+    // `codes` part is optional at read — a round-8 store (no codes part
+    // anywhere) serves flat IVF untouched, and `compactAnn` rebuilds the
+    // codes base from the masked assignments whenever books exist, so
+    // one compaction graduates any store to full IVF-PQ coverage.
+    extends VersionedStore(spark, dir, LiveAnnMaintainer.CoreParts, LiveAnnMaintainer.Tombstone)
+    with StreamSink {
 
-  // Commit protocol keys on the CORE parts (assigned, tombstones); the
-  // `codes` part is optional at read — a round-8 store (no codes part
-  // anywhere) serves flat IVF untouched, and `compactAnn` rebuilds the
-  // codes base from the masked assignments whenever books exist, so one
-  // compaction graduates any store to full IVF-PQ coverage.
-  private val parts = LiveAnnMaintainer.CoreParts
-
-  @volatile private var version: Long = VersionedState.maxVersion(dir, parts)
-
-  def latestVersion: Long = version
-
-  /** Identity of the current read set (newest base + deltas) — serving
-    * caches key a memoized (and Spark-cached) index on this, so a
-    * commit, delete, or compaction evicts instead of serving a stale
-    * assignment (the QueryService.versioned discipline).
-    */
-  def stateKey: (Option[Long], Seq[Long]) =
-    VersionedState.readSet(dir, parts, version)
-
-  /** Serving-path snapshot resolution (ONE directory listing): resolve
-    * `asOf` (None = latest) against the exact on-disk committed
-    * versions and refresh the recovery pointer — the other maintainers'
-    * serveSnapshot contract. Historical versions are well-defined here
-    * because the codebook is FROZEN between compactions: the index at
-    * version v is the tombstone-masked union of the deltas ≤ v under
-    * the centroids that read set resolves (base-first), which is
-    * exactly what `indexFor` folds. None = empty store or an
-    * unknown/swept version (the serving edge's 404).
-    */
-  def serveSnapshot(asOf: Option[Long] = None): Option[ServeSnapshot] = {
-    val r = VersionedState.serveSnapshot(dir, parts, asOf)
-    r.foreach(s => version = math.max(version, s.latest))
-    r
-  }
-
-  /** Versions an `asOf=` snapshot read can resolve exactly — the
-    * serving edge's 404 boundary (swept = gone as a resource).
-    */
-  def committedVersions: Seq[Long] = VersionedState.servableVersions(dir, parts)
+  import LiveAnnMaintainer._
+  import VersionedState.{exists, write}
 
   /** The current centroid set, resolved BASE-FIRST: a compaction that
     * retrained (`Compaction.compactAnn(retrainCells = …)`) writes the
@@ -97,8 +67,7 @@ class LiveAnnMaintainer(
     * assignments use the live geometry. Not memoized: the set can
     * change at any compaction.
     */
-  def centroids: Option[Array[Array[Double]]] =
-    centroidsFor(VersionedState.readSet(dir, parts, version))
+  def centroids: Option[Array[Array[Double]]] = centroidsFor(snapshotKey(latestVersion))
 
   /** Centroid set for an ALREADY-RESOLVED read set — base-first (a
     * retrained base's geometry wins over the store-level frozen set,
@@ -107,10 +76,9 @@ class LiveAnnMaintainer(
     * the centroids that read set resolves always belong together.
     */
   def centroidsFor(key: (Option[Long], Seq[Long])): Option[Array[Array[Double]]] = {
-    val fromBase = VersionedState.pathsOf(dir, key, Some("centroids"))
-      .filter(p => VersionedState.exists(s"$p/_SUCCESS")).headOption
+    val fromBase = view(key).paths("centroids").find(p => exists(s"$p/_SUCCESS"))
     val path = fromBase.getOrElse(s"$dir/centroids")
-    if (!VersionedState.exists(s"$path/_SUCCESS")) return None
+    if (!exists(s"$path/_SUCCESS")) return None
     Some(spark.read.parquet(path)
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2))
@@ -125,7 +93,7 @@ class LiveAnnMaintainer(
 
   def pqBooks: Option[Array[Array[Array[Double]]]] =
     cachedBooks.orElse {
-      val books = LiveAnnMaintainer.readBooks(spark, dir)
+      val books = readBooks(spark, dir)
       if (books.isDefined) cachedBooks = books
       books
     }
@@ -136,9 +104,7 @@ class LiveAnnMaintainer(
     * vec_id): a vector re-embedded AFTER its tombstone serves again.
     */
   def latestIndex: Option[IvfIndex] =
-    centroids.flatMap { cents =>
-      maskedPart("assigned").map(IvfIndex(cents, _))
-    }
+    centroids.flatMap(cents => viewAt(latestVersion).masked("assigned").map(IvfIndex(cents, _)))
 
   /** The queryable IVF index at a COMMITTED version ≤ `upTo` (time
     * travel — the engine store's `indexAt` for the ANN store): the
@@ -149,8 +115,7 @@ class LiveAnnMaintainer(
     * did the index serve at v", not "latest minus nothing". None when
     * no version ≤ upTo is committed (or the set was swept).
     */
-  def indexAt(upTo: Long): Option[IvfIndex] =
-    indexFor(VersionedState.readSet(dir, parts, upTo))
+  def indexAt(upTo: Long): Option[IvfIndex] = indexFor(snapshotKey(upTo))
 
   /** `indexAt` over an ALREADY-RESOLVED read set (a `ServeSnapshot.
     * keyAt`) — the serving path's form: no second listing, and a
@@ -160,7 +125,8 @@ class LiveAnnMaintainer(
     */
   def indexFor(key: (Option[Long], Seq[Long])): Option[IvfIndex] =
     try centroidsFor(key).flatMap { cents =>
-      maskedFor(key, "assigned", requireAll = true).map(IvfIndex(cents, _))
+      val v = view(key)
+      v.exact("assigned")(v.mask).map(IvfIndex(cents, _))
     } catch { case _: org.apache.spark.sql.AnalysisException => None }
 
   /** The queryable PQ index at the latest committed version — compose
@@ -172,7 +138,8 @@ class LiveAnnMaintainer(
     */
   def latestPq: Option[PqIndex] =
     pqBooks.flatMap { books =>
-      maskedPart("codes", requireAll = true).map(PqIndex(books, _))
+      val v = viewAt(latestVersion)
+      v.exact("codes")(v.mask).map(PqIndex(books, _))
     }
 
   /** vec_ids already carrying a LIVE code in the existing codes parts
@@ -184,39 +151,10 @@ class LiveAnnMaintainer(
     * no live code).
     */
   private def codedVecIds: DataFrame = {
-    val ps = VersionedState.readPaths(dir, parts, Some("codes"), version)
-      .filter(p => VersionedState.exists(s"$p/_SUCCESS"))
-    if (ps.isEmpty) LiveAnnMaintainer.emptyCodes(spark).select("vec_id")
-    else {
-      val tombPs = VersionedState.readPaths(dir, parts, Some("tombstones"), version)
-      val tombs = VersionedState.tombstoneSet(
-        if (tombPs.isEmpty) None else Some(spark.read.parquet(tombPs: _*)), "vec_id")
-      VersionedState.maskDeleted(
-        VersionedState.withVer(spark.read.parquet(ps: _*)), tombs, "vec_id")
-        .select("vec_id")
-    }
-  }
-
-  private def maskedPart(part: String, requireAll: Boolean = false): Option[DataFrame] =
-    maskedFor(VersionedState.readSet(dir, parts, version), part, requireAll)
-
-  /** Tombstone-masked union of one part over an already-resolved read
-    * set — the key-based core behind `maskedPart` (fresh listing at the
-    * recovery pointer) and `indexFor` (serving snapshot, no listing).
-    */
-  private def maskedFor(key: (Option[Long], Seq[Long]), part: String,
-      requireAll: Boolean = false): Option[DataFrame] = {
-    val ps = VersionedState.pathsOf(dir, key, Some(part))
-    if (ps.isEmpty ||
-        (requireAll && !ps.forall(p => VersionedState.exists(s"$p/_SUCCESS"))))
-      None
-    else {
-      val tombPs = VersionedState.pathsOf(dir, key, Some("tombstones"))
-      val tombs = VersionedState.tombstoneSet(
-        if (tombPs.isEmpty) None else Some(spark.read.parquet(tombPs: _*)), "vec_id")
-      Some(VersionedState.maskDeleted(
-        VersionedState.withVer(spark.read.parquet(ps: _*)), tombs, "vec_id"))
-    }
+    val v = viewAt(latestVersion)
+    val ps = v.paths("codes").filter(p => exists(s"$p/_SUCCESS"))
+    if (ps.isEmpty) emptyCodes(spark).select("vec_id")
+    else v.mask(spark.read.parquet(ps: _*)).select("vec_id")
   }
 
   /** One micro-batch of embeddings (vec_id, embedding). The first
@@ -226,10 +164,7 @@ class LiveAnnMaintainer(
     * centroids).
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batchId <= version ||
-        parts.forall(p => VersionedState.exists(s"$dir/v$batchId/$p/_SUCCESS")))
-      version = math.max(version, batchId)
-    else {
+    commit(batchId) { vdir =>
       val cents = centroids.getOrElse {
         // cells = Similarity.AutoCells sizes from the FIRST batch
         // (~√n clamped [16, 4096]); as the store outgrows that, a
@@ -241,16 +176,13 @@ class LiveAnnMaintainer(
           else Similarity.autoCellCount(batch.count())
         val trained = Similarity.trainIvf(batch, k, iters)
         import spark.implicits._
-        trained.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-          .toSeq.toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-          .parquet(s"$dir/centroids")
+        write(trained.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+          .toSeq.toDF("cell", "centroid").coalesce(1), s"$dir/centroids")
         trained
       }
-      write(Similarity.assignIvf(cents, batch), s"$dir/v$batchId/assigned")
+      write(Similarity.assignIvf(cents, batch), s"$vdir/assigned")
       val codesDelta =
-        if (pqM <= 0) LiveAnnMaintainer.emptyCodes(spark)
+        if (pqM <= 0) emptyCodes(spark)
         else {
           // Coverage reconciliation is keyed on "first PQ batch of THIS
           // maintainer instance" (cachedBooks empty), NOT on pq_books
@@ -263,12 +195,9 @@ class LiveAnnMaintainer(
           val books = pqBooks.getOrElse {
             val trained = Similarity.trainPq(batch, pqM, pqK, iters)
             import spark.implicits._
-            trained.zipWithIndex.flatMap { case (book, mi) =>
+            write(trained.zipWithIndex.flatMap { case (book, mi) =>
               book.zipWithIndex.map { case (cw, ci) => (mi, ci, cw.toSeq) }
-            }.toSeq.toDF("m", "code", "codeword")
-              .coalesce(1).write.mode("overwrite")
-              .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-              .parquet(s"$dir/pq_books")
+            }.toSeq.toDF("m", "code", "codeword").coalesce(1), s"$dir/pq_books")
             cachedBooks = Some(trained)
             trained
           }
@@ -279,7 +208,7 @@ class LiveAnnMaintainer(
             // encode the batch plus every live vector not yet coded
             // (read set BEFORE this version commits). O(store) once at
             // enable/restart; a fully-covered store contributes nothing.
-            val uncoded = maskedPart("assigned").map { asg =>
+            val uncoded = viewAt(latestVersion).masked("assigned").map { asg =>
               asg.select("vec_id", "embedding")
                 .join(codedVecIds, Seq("vec_id"), "left_anti")
                 .join(fresh.select("vec_id"), Seq("vec_id"), "left_anti")
@@ -288,9 +217,8 @@ class LiveAnnMaintainer(
               uncoded.map(_.unionByName(fresh)).getOrElse(fresh))
           }
         }
-      write(codesDelta, s"$dir/v$batchId/codes")
-      write(LiveAnnMaintainer.emptyTombstones(spark), s"$dir/v$batchId/tombstones")
-      version = math.max(version, batchId)
+      write(codesDelta, s"$vdir/codes")
+      write(emptyTombstones, s"$vdir/tombstones")
     }
     maybeCompact()
   }
@@ -298,16 +226,8 @@ class LiveAnnMaintainer(
   // Policy-driven major compaction (`Compaction.maybeCompact` dial);
   // the frozen codebook is store-level state and never folds. Also the
   // tombstone eraser for deleted vectors.
-  private def maybeCompact(): Unit = {
-    Compaction.maybeCompact(autoCompactEvery, dir, parts)(
-      Compaction.compactAnn(spark, dir, _))
-    ()
-  }
-
-  private def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(path)
+  private def maybeCompact(): Unit =
+    Compaction.maybeCompact(autoCompactEvery, this)(Compaction.annFold(retrainCells = 0))
 
   /** One DELETE micro-batch: `deletes` carries a `vec_id` column. Same
     * LSM contract as the engine store — O(|deletes|) tombstone bytes,
@@ -315,29 +235,13 @@ class LiveAnnMaintainer(
     * re-embedding after the tombstone resurrects the vector.
     */
   def processDeletes(deletes: DataFrame, batchId: Long): Unit = {
-    if (batchId <= version ||
-        parts.forall(p => VersionedState.exists(s"$dir/v$batchId/$p/_SUCCESS")))
-      version = math.max(version, batchId)
-    else {
-      write(LiveAnnMaintainer.emptyAssigned(spark), s"$dir/v$batchId/assigned")
-      write(LiveAnnMaintainer.emptyCodes(spark), s"$dir/v$batchId/codes")
-      write(deletes.select("vec_id").distinct(), s"$dir/v$batchId/tombstones")
-      version = math.max(version, batchId)
+    commit(batchId) { vdir =>
+      write(VersionedState.emptyFrame(spark, AssignedSchema), s"$vdir/assigned")
+      write(emptyCodes(spark), s"$vdir/codes")
+      write(deletes.select("vec_id").distinct(), s"$vdir/tombstones")
     }
     maybeCompact()
   }
-
-  /** Attach to a streaming Dataset with (vec_id, embedding) columns;
-    * same restart contract as the other maintainers.
-    */
-  def attach(embStream: Dataset[Row], checkpoint: String): StreamingQuery =
-    WriterLease.register(dir, embStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF, batchId)
-      }
-      .start())
 }
 
 object LiveAnnMaintainer {
@@ -366,32 +270,15 @@ object LiveAnnMaintainer {
     */
   val Parts: Seq[String] = Seq("assigned", "codes", "tombstones")
 
-  private[streaming] def emptyTombstones(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(s.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("vec_id", LongType))))
-  }
+  private[streaming] val Tombstone = StructType.fromDDL("vec_id BIGINT")
 
-  /** Schema-preserved empty `assigned` delta (the delete path writes
-    * one so the commit protocol stays uniform across version kinds).
+  /** Schema of an `assigned` delta (the delete path writes an empty one
+    * so the commit protocol stays uniform across version kinds).
     */
-  private[streaming] def emptyAssigned(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(s.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("cell", IntegerType),
-        StructField("nrm", DoubleType))))
-  }
+  private val AssignedSchema =
+    StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, cell INT, nrm DOUBLE")
 
   /** Schema-preserved empty `codes` delta (PQ off, and the delete path). */
-  private[streaming] def emptyCodes(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(s.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("code", ArrayType(IntegerType)))))
-  }
+  private[streaming] def emptyCodes(s: SparkSession): DataFrame = VersionedState.emptyFrame(s,
+    StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, code ARRAY<INT>"))
 }

@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.pipeline.Dedup
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming near-duplicate dedup at ingest — the Structured Streaming
   * face of `Dedup.minhashPairsIncremental`, completing §2.10's dedup
@@ -29,11 +28,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * rule); docs kept by an earlier batch are never revoked — the online
   * contract batch ingestion needs.
   *
-  * Commit protocol and layout are `LiveIndexMaintainer`'s
-  * (`VersionedState`: `_SUCCESS` markers forced per write, recovery
-  * scans committed versions, a replayed batch skips against its own
-  * committed output). Dedup artifacts are purely ADDITIVE — kept docs
-  * are only ever appended — so each version dir holds ONLY its batch's
+  * Commit protocol and layout are the shared [[VersionedStore]]'s (a
+  * version counts only when EVERY part committed, so a crash between
+  * part writes leaves no readable version). Dedup artifacts are purely
+  * ADDITIVE — kept docs are only ever appended — so each version dir
+  * holds ONLY its batch's
   * kept delta, reads just union base + deltas (no fold needed, unlike
   * the index's lossy-UidList merge-on-read), and a micro-batch writes
   * O(|batch|) — never O(corpus) — at any accumulated size.
@@ -46,86 +45,36 @@ class LiveNearDupMaintainer(
     tau: Double = 0.6,
     bands: Int = 32,
     shingleN: Int = 3,
-    autoCompactEvery: Int = 0) {
+    autoCompactEvery: Int = 0)
+    extends VersionedStore(spark, dir, LiveNearDupMaintainer.Parts, LiveNearDupMaintainer.Tombstone)
+    with StreamSink {
 
-  private val parts = LiveNearDupMaintainer.Parts
-
-  // A version counts only when EVERY part committed (docs is written
-  // last, so a crash between part writes leaves no readable version).
-  // Read sets come from the shared LSM layout (`VersionedState`): the
-  // newest compacted base plus later deltas — dedup state is purely
-  // additive, so readers just union, no fold needed.
-  @volatile private var version: Long = VersionedState.maxVersion(dir, parts)
-
-  private def readUnion(part: String, upTo: Long): Option[DataFrame] = {
-    val ps = VersionedState.readPaths(dir, parts, Some(part), upTo)
-    if (ps.isEmpty) None else Some(spark.read.parquet(ps: _*))
-  }
-
-  /** Tombstone-masked read of a doc-keyed part (docs/sets/bands): the
-    * same version-ordered LSM masking as the engine/ANN stores, keyed
-    * on doc_id — a deleted corpus doc stops matching future batches,
-    * and a re-ingest after its tombstone re-enters dedup as fresh.
-    */
-  private def readMasked(part: String, upTo: Long): Option[DataFrame] = {
-    val tombs = VersionedState.tombstoneSet(readUnion("tombstones", upTo), "doc_id")
-    readUnion(part, upTo).map(df =>
-      VersionedState.maskDeleted(VersionedState.withVer(df), tombs, "doc_id"))
-  }
+  import VersionedState.write
 
   /** The KEPT corpus (deduped documents): union of committed deltas,
     * minus tombstoned docs.
     */
-  def latest: Option[DataFrame] = readMasked("docs", version)
-
-  def latestVersion: Long = version
+  def latest: Option[DataFrame] = viewAt(latestVersion).masked("docs")
 
   /** Keep/drop verdicts for one committed batch (doc_id, verdict). */
   def verdictsFor(batchId: Long): DataFrame =
     spark.read.parquet(s"$dir/verdicts/v$batchId")
 
-  // Corpus state visible to a (re)played batch: everything committed
-  // strictly below its id (merging a replayed delta against its own
-  // output would double-count; basing on the predecessor makes the
-  // write idempotent).
-  private def baseVersionFor(batchId: Long): Long =
-    (VersionedState.committed(dir, 'v', parts) ++
-      VersionedState.committed(dir, 'c', parts))
-      .filter(_ < batchId).foldLeft(-1L)(math.max)
-
-  private def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(path)
-
-  /** Attach to a streaming Dataset with the `documents` schema and
-    * start filtering. Caller owns the returned query's lifecycle; reuse
-    * the SAME `checkpoint` across restarts (LiveIndexMaintainer's
-    * restart contract).
-    */
-  def attach(docsStream: Dataset[Row], checkpoint: String): StreamingQuery =
-    WriterLease.register(dir, docsStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF, batchId)
-      }
-      .start())
-
   /** One micro-batch of the filtering loop (the `foreachBatch` body,
     * callable directly for tests and backfills).
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batchId <= version ||
-        parts.forall(p => VersionedState.exists(s"$dir/v$batchId/$p/_SUCCESS")))
-      version = math.max(version, batchId) // committed replay: skip
-    else {
+    commit(batchId) { vdir =>
       val b = batch.cache()
-      val baseV = baseVersionFor(batchId)
+      // Corpus state visible to a (re)played batch: everything
+      // committed strictly below its id (merging a replayed delta
+      // against its own output would double-count; basing on the
+      // predecessor makes the write idempotent).
+      val corpus = viewAt(batchId - 1)
       val setsNew = Dedup.shingleSets(b, shingleN).cache()
       val bandsNew = Dedup.minhashBands(setsNew, bands).cache()
-      val setsOld = readMasked("sets", baseV).getOrElse(setsNew.limit(0))
-      val bandsOld = readMasked("bands", baseV).getOrElse(bandsNew.limit(0))
+      val setsOld = corpus.masked("sets").getOrElse(setsNew.limit(0))
+      val bandsOld = corpus.masked("bands").getOrElse(bandsNew.limit(0))
       val pairs = Dedup.minhashPairsFromParts(
         setsOld, bandsOld, setsNew, bandsNew, tau)
 
@@ -150,29 +99,20 @@ class LiveNearDupMaintainer(
 
       // delta-only writes: this batch's keepers, O(|batch|) bytes
       val keptIds = freshIds.join(dropIds, Seq("doc_id"), "left_anti")
-      write(setsNew.join(keptIds, Seq("doc_id"), "left_semi"),
-        s"$dir/v$batchId/sets")
-      write(bandsNew.join(keptIds, Seq("doc_id"), "left_semi"),
-        s"$dir/v$batchId/bands")
-      write(b.join(dropIds, Seq("doc_id"), "left_anti"),
-        s"$dir/v$batchId/docs")
-      write(LiveNearDupMaintainer.emptyTombstones(spark), s"$dir/v$batchId/tombstones")
+      write(setsNew.join(keptIds, Seq("doc_id"), "left_semi"), s"$vdir/sets")
+      write(bandsNew.join(keptIds, Seq("doc_id"), "left_semi"), s"$vdir/bands")
+      write(b.join(dropIds, Seq("doc_id"), "left_anti"), s"$vdir/docs")
+      write(emptyTombstones, s"$vdir/tombstones")
       Seq(b, setsNew, bandsNew, dropIds).foreach(_.unpersist())
-      version = math.max(version, batchId)
     }
     maybeCompact()
   }
 
-  // Policy-driven major compaction (`Compaction.maybeCompact` dial,
-  // with its one-cycle reader grace window); per-batch `verdicts/`
-  // history is untouched — only corpus state folds. Also the tombstone
-  // eraser: the base is clean at the first major after the delete, and
-  // the deltas holding the deleted bytes are swept one cycle later.
-  private def maybeCompact(): Unit = {
-    Compaction.maybeCompact(autoCompactEvery, dir, parts)(
-      Compaction.compactDedup(spark, dir, _))
-    ()
-  }
+  // Policy-driven major compaction (`Compaction.maybeCompact` dial) —
+  // also the tombstone eraser; per-batch `verdicts/` history is
+  // untouched, only corpus state folds.
+  private def maybeCompact(): Unit =
+    Compaction.maybeCompact(autoCompactEvery, this)(Compaction.dedupFold)
 
   /** One DELETE micro-batch: `deletes` carries a `doc_id` column. The
     * corpus-state contract of the other stores — O(|deletes|) tombstone
@@ -182,18 +122,12 @@ class LiveNearDupMaintainer(
     * (per-batch output), untouched.
     */
   def processDeletes(deletes: DataFrame, batchId: Long): Unit = {
-    if (batchId <= version ||
-        parts.forall(p => VersionedState.exists(s"$dir/v$batchId/$p/_SUCCESS")))
-      version = math.max(version, batchId)
-    else {
-      val emptyDocs = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], LiveEngineMaintainer.DocumentsSchema)
-      write(emptyDocs, s"$dir/v$batchId/docs")
-      write(Dedup.shingleSets(emptyDocs, shingleN), s"$dir/v$batchId/sets")
-      write(Dedup.minhashBands(Dedup.shingleSets(emptyDocs, shingleN), bands),
-        s"$dir/v$batchId/bands")
-      write(deletes.select("doc_id").distinct(), s"$dir/v$batchId/tombstones")
-      version = math.max(version, batchId)
+    commit(batchId) { vdir =>
+      val emptyDocs = VersionedState.emptyFrame(spark, LiveEngineMaintainer.DocumentsSchema)
+      write(emptyDocs, s"$vdir/docs")
+      write(Dedup.shingleSets(emptyDocs, shingleN), s"$vdir/sets")
+      write(Dedup.minhashBands(Dedup.shingleSets(emptyDocs, shingleN), bands), s"$vdir/bands")
+      write(deletes.select("doc_id").distinct(), s"$vdir/tombstones")
     }
     maybeCompact()
   }
@@ -206,9 +140,5 @@ object LiveNearDupMaintainer {
     */
   val Parts: Seq[String] = Seq("docs", "sets", "bands", "tombstones")
 
-  private[streaming] def emptyTombstones(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(s.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("doc_id", LongType))))
-  }
+  private[streaming] val Tombstone = org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
 }

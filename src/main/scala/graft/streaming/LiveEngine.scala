@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.ingest.{IndexBuilder, WikiIndex}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Live maintenance of the FULL queryable store — every table the
   * search engine serves from, not just the global index
@@ -16,8 +15,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * everything ingested so far — StreamingSpec pins engine-result
   * equality against a from-scratch batch build.
   *
-  * Same `VersionedState` LSM layout and commit protocol as the other
-  * maintainers; per batch this writes the batch's delta of each part:
+  * Same [[VersionedStore]] lifecycle as the other maintainers; per
+  * batch this writes the batch's delta of each part. CORE parts (a
+  * version commits once all of them have):
   *
   *   - `docs_fields`, `documents`, `postings`, `events` — per-document
   *     rows, purely additive → readers union (the batch's event pivot
@@ -28,29 +28,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     A1's contract).
   *   - `metadata` — (field, kind, language, normalizer) catalog rows →
   *     readers union + distinct (a language seen twice is one row).
-  *   - `tombstones` — DELETE markers (`processDeletes`): (partition,
-  *     docId) rows masking every ingest of that doc in an EARLIER
-  *     version. The LSM delete posture (Lucene liveDocs / Accumulo
-  *     delete entries): per-doc parts anti-join the tombstones at read
-  *     scope, version-ordered — a doc RE-ingested after its tombstone
-  *     is alive again — and `Compaction.compactEngine` applies them
-  *     physically (the compacted base carries no trace of a deleted
-  *     document and an empty tombstone part: the right-to-be-forgotten
-  *     eraser). Exact global-index rows also drop deleted uids at fold
-  *     scope so driver-local candidate sets (and the count-only fast
-  *     path, which never touches the event store) stay exact; lossy
-  *     rows keep their count — they are candidate-superset-only and
-  *     every candidate they produce re-verifies against the
-  *     tombstone-filtered event view.
+  *   - `tombstones` — DELETE markers (`processDeletes`), (partition,
+  *     docId) rows (Lucene liveDocs / Accumulo delete entries): per-doc
+  *     parts are masked at read scope, version-ordered, and
+  *     `Compaction.compactEngine` erases them physically. Exact
+  *     global-index rows also drop deleted uids at fold scope so
+  *     driver-local candidate sets (and the count-only fast path, which
+  *     never touches the event store) stay exact; lossy rows keep their
+  *     count — they are candidate-superset-only and every candidate they
+  *     produce re-verifies against the tombstone-filtered event view.
   *
-  * Row versions for the ordering come from PROVENANCE, not a stored
-  * column: a row's version is the `v<k>`/`c<k>` directory it was read
-  * from (`input_file_name`), so deltas stay byte-identical to a batch
-  * build's tables. (Store-format note: tombstones joined the commit
-  * protocol in round 8; `doc_lengths`, `reverse` and `trigram` joined
-  * in round 9; `field_postings` in round 10 for builds that declare
-  * `offsetsFields`. Commits key on the CORE parts; derived parts are
-  * optional at read with complete-coverage-or-rebuild semantics.)
+  * DERIVED parts, optional at read with complete-coverage-or-rebuild
+  * semantics:
   *
   *   - `doc_lengths` — per-document BM25 token lengths, per-doc rows →
   *     readers union + tombstone-mask like the other doc parts, so
@@ -59,16 +48,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     through the same version-ordered rule as everywhere else.
   *   - `reverse` / `trigram` — the suffix- and infix-probe access
   *     paths, written as PER-BATCH PROJECTIONS of the batch's global
-  *     delta (reversed value / vocabulary grams). Readers fold
-  *     `reverse` through the same merge-on-read as `global` (it is the
-  *     same rows keyed by reversed value) and union+distinct `trigram`
-  *     (vocabulary-set semantics; rows carry no doc ids, so a
+  *     delta (reversed value / vocabulary grams), so the prefix probe
+  *     pushes into the delta scans exactly as on a saved index. Readers
+  *     fold `reverse` through the same merge-on-read as `global` (it is
+  *     the same rows keyed by reversed value) and union+distinct
+  *     `trigram` (vocabulary-set semantics; rows carry no doc ids, so a
   *     fully-deleted value is a harmless candidate superset until
-  *     compaction erases it). This closes the round-8 trade where a
-  *     live store answered suffix/infix queries by deriving
-  *     `reverse(fieldValue)` on the fly — an unprunable full-vocabulary
-  *     scan; now the prefix probe pushes into the delta scans exactly
-  *     as on a saved index.
+  *     compaction erases it).
+  *   - `field_postings` — positional postings of the fields a build
+  *     declares in `offsetsFields`.
   *
   * Write amplification per micro-batch is O(|batch|) for every part at
   * any accumulated size; read amplification is bounded by compaction
@@ -103,104 +91,42 @@ class LiveEngineMaintainer(
       * table (pass Map.empty to inherit, the common case).
       */
     synonyms: Map[String, Seq[String]] = Map.empty,
-    synonymFields: Set[String] = Set("TEXT")) {
+    synonymFields: Set[String] = Set("TEXT"))
+    // A round-8 store, or a crash window between the core commit and a
+    // derived write, serves through WikiIndex's derived fallbacks; the
+    // next `compactEngine` rebuilds every derived part from core data.
+    extends VersionedStore(spark, dir, LiveEngineMaintainer.CoreParts, LiveEngineMaintainer.Tombstone)
+    with StreamSink {
 
   import LiveEngineMaintainer._
-
-  // Commit protocol keys on the CORE parts only: a version is committed
-  // when every core part's _SUCCESS exists. The three DERIVED parts
-  // (doc_lengths/reverse/trigram — projections of core data, round-9
-  // additions) are written with every new delta but are OPTIONAL at
-  // read: a round-8 store (or a crash window between core commit and a
-  // derived write) serves through WikiIndex's derived fallbacks instead
-  // of becoming invisible, and the next `compactEngine` graduates the
-  // store to the full layout (it rebuilds all three from core data).
-  private val parts = CoreParts
-
-  @volatile private var version: Long = VersionedState.maxVersion(dir, parts)
+  import VersionedState.{exists, withVer, write}
 
   private val synPath = s"$dir/synonyms"
-  if (synonyms.nonEmpty && !VersionedState.exists(s"$synPath/_SUCCESS"))
-    graft.ingest.WikiIndex.synonymRows(spark, synonyms, synonymFields)
-      .coalesce(1).write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(synPath)
+  if (synonyms.nonEmpty && !exists(s"$synPath/_SUCCESS"))
+    write(WikiIndex.synonymRows(spark, synonyms, synonymFields).coalesce(1), synPath)
 
   private def storeSynonyms: Option[DataFrame] =
-    if (VersionedState.exists(s"$synPath/_SUCCESS"))
-      Some(spark.read.parquet(synPath))
+    if (exists(s"$synPath/_SUCCESS")) Some(spark.read.parquet(synPath))
     else None
 
-  def latestVersion: Long = version
-
-  /** Serving-path snapshot resolution (ONE directory listing): resolve
-    * `asOf` (None = latest) against the exact on-disk committed
-    * versions and refresh the recovery pointer — the analytics
-    * maintainers' serveSnapshot contract brought to the engine store,
-    * so a serving process beside an out-of-process writer tracks new
-    * commits instead of the constructor-time pointer ([[graft.api
-    * .HttpShim]]'s live mode resolves every request through this).
-    */
-  def serveSnapshot(asOf: Option[Long] = None): Option[ServeSnapshot] = {
-    val r = VersionedState.serveSnapshot(dir, parts, asOf)
-    r.foreach(s => version = math.max(version, s.latest))
-    r
-  }
-
-  /** The (base, delta-list) directory set `indexAt(upTo)` would read
-    * RIGHT NOW — one driver-side directory listing, no Spark job.
-    * Snapshot caches (`QueryService.versioned`) key memoized engines on
-    * this: a compaction that sweeps or rebases the dirs a cached
-    * snapshot was resolved from changes the key, telling the cache to
-    * evict and re-resolve instead of serving DataFrames whose resolved
-    * paths no longer exist.
-    */
-  def snapshotKey(upTo: Long): (Option[Long], Seq[Long]) =
-    VersionedState.readSet(dir, parts, upTo)
-
-  private def readUnion(part: String, upTo: Long): Option[DataFrame] = {
-    val ps = VersionedState.readPaths(dir, parts, Some(part), upTo)
-    if (ps.isEmpty) None else Some(spark.read.parquet(ps: _*))
-  }
-
-  /** A derived part's union, present only when EVERY dir in the read
-    * set carries it — a partially-covered derived part must not serve
-    * (its union would silently miss the uncovered versions' rows);
-    * None falls back to the WikiIndex derived projection, which is
-    * always complete.
-    */
-  private def derivedUnion(part: String, upTo: Long): Option[DataFrame] = {
-    val ps = VersionedState.readPaths(dir, parts, Some(part), upTo)
-    if (ps.isEmpty || !ps.forall(p => VersionedState.exists(s"$p/_SUCCESS"))) None
-    else Some(spark.read.parquet(ps: _*))
-  }
-
   /** The postings union with the `dl` COLUMN trusted only when EVERY
-    * read-set dir carries it — the derivedUnion coverage rule applied
-    * to a column instead of a part. A migrated store unions round-8
-    * postings deltas (no dl) with round-9+ ones; if schema inference
-    * picks a dl-bearing footer, the legacy rows read dl as null and
-    * their BM25 contribution silently coalesces toward 0 (and a later
-    * compaction could persist the nulls into the base). Uncovered ⇒
-    * drop the column: ranked serving takes `bm25Scored`'s documented
-    * pre-round-9 fallback (join the doc_lengths view — same values,
-    * one extra join), and `Compaction.compactEngine` rebuilds a
-    * complete dl for the whole base. The check is one driver-side
-    * footer read per read-set dir (bounded by compaction cadence),
-    * never a data scan.
+    * read-set dir carries it — the derived-part coverage rule applied
+    * to a column. A migrated store unions round-8 postings deltas (no
+    * dl) with later ones; trusting a partly-null dl would silently
+    * score the legacy rows toward 0, so uncovered ⇒ drop the column and
+    * ranked serving joins the doc_lengths view instead (same values).
+    * The check is one driver-side footer read per read-set dir.
     */
-  private def postingsUnion(upTo: Long): DataFrame = {
-    val ps = VersionedState.readPaths(dir, parts, Some("postings"), upTo)
-    val df = spark.read.parquet(ps: _*)
-    if (!df.columns.contains("dl") ||
-        ps.forall(p => spark.read.parquet(p).schema.fieldNames.contains("dl"))) df
+  private def postingsUnion(v: ReadView): DataFrame = {
+    val df = v.read("postings")
+    if (!df.columns.contains("dl") || dlCovered(spark, v.paths("postings"))) df
     else df.drop("dl")
   }
 
   /** The full queryable store at the latest committed version — feed it
     * straight to `new WikiSearchEngine(spark, m.latestIndex.get)`.
     */
-  def latestIndex: Option[WikiIndex] = indexAt(version)
+  def latestIndex: Option[WikiIndex] = indexAt(latestVersion)
 
   /** LSM TIME TRAVEL: the store exactly as of committed version `upTo`
     * — a consistent historical snapshot (ingests AND deletes after
@@ -211,46 +137,41 @@ class LiveEngineMaintainer(
     * no read set (None) — the standard LSM trade; pair with the
     * `keep`/grace sweep protocols to retain history windows.
     */
-  def indexAt(upTo: Long): Option[WikiIndex] =
-    readUnion("docs_fields", upTo).map { df =>
-      val tombs = tombstoneSet(readUnion("tombstones", upTo))
-      val maskedFields = maskDeleted(withVer(df), tombs)
-      val metadata = readUnion("metadata", upTo).get.distinct()
+  def indexAt(upTo: Long): Option[WikiIndex] = {
+    val v = viewAt(upTo)
+    v.union("docs_fields").map { df =>
+      val maskedFields = v.mask(df)
+      val metadata = v.read("metadata").distinct()
       WikiIndex(
         docsFields = maskedFields,
-        documents = maskDeleted(withVer(readUnion("documents", upTo).get), tombs),
-        globalIndex = foldGlobal(withVer(readUnion("global", upTo).get), tombs),
+        documents = v.mask(v.read("documents")),
+        globalIndex = foldGlobal(withVer(v.read("global")), v.tombstones),
         metadata = metadata,
-        termPostings = maskDeleted(withVer(postingsUnion(upTo)), tombs),
-        storedEvents = readUnion("events", upTo).map(e => maskDeleted(withVer(e), tombs)),
-        // reverse folds like global (same rows keyed by reversed value);
-        // trigram is a vocabulary SET (dedup on union). A store where
-        // any read-set dir lacks these parts (round-8 format, or a
-        // crash window) falls back to WikiIndex's derived forms.
-        storedReverse = derivedUnion("reverse", upTo).map(r => foldGlobal(withVer(r), tombs)),
-        storedTrigram = derivedUnion("trigram", upTo).map(_.distinct()),
-        storedDocLengths =
-          derivedUnion("doc_lengths", upTo).map(d => maskDeleted(withVer(d), tombs)),
+        termPostings = v.mask(postingsUnion(v)),
+        storedEvents = v.masked("events"),
+        // A derived part serves only when EVERY read-set dir carries it
+        // (a partially-covered union would silently miss the uncovered
+        // versions' rows); otherwise WikiIndex's derived forms, which
+        // are always complete. reverse folds like global (same rows
+        // keyed by reversed value); trigram is a vocabulary SET (dedup
+        // on union).
+        storedReverse = v.exact("reverse")(r => foldGlobal(withVer(r), v.tombstones)),
+        storedTrigram = v.exact("trigram")(_.distinct()),
+        storedDocLengths = v.exact("doc_lengths")(v.mask),
         // per-doc rows like postings: union the deltas and mask. A read
         // set not fully covered (a store predating the part, or a crash
         // window) REBUILDS the table from core data — the metadata
         // catalog says which fields are positional, so field-generic
         // proximity serves on any live store, never only batch-built
         // ones. Lazy either way; empty when nothing is declared.
-        fieldPostings = Some(
-          derivedUnion("field_postings", upTo)
-            .map(fp => maskDeleted(withVer(fp), tombs))
-            .getOrElse(IndexBuilder.deriveFieldPostings(maskedFields, metadata))),
+        fieldPostings = Some(v.exact("field_postings")(v.mask)
+          .getOrElse(IndexBuilder.deriveFieldPostings(maskedFields, metadata))),
         // store-level query-semantics state, version-independent: every
         // snapshot (including historical ones) serves the store's
         // synonym table, exactly as a loaded batch store would
         storedSynonyms = storeSynonyms)
     }
-
-  private def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(path)
+  }
 
   /** The non-tombstone parts of one version's delta (nine, plus
     * `field_postings` when the build declares `offsetsFields`), all
@@ -261,26 +182,22 @@ class LiveEngineMaintainer(
     * so a live store keeps the saved layout's pushed-prefix access
     * paths at O(|batch|) write amplification.
     */
-  private def writeIndexParts(ix: WikiIndex, batchId: Long): Unit = {
-    write(ix.docsFields, s"$dir/v$batchId/docs_fields")
-    write(ix.documents, s"$dir/v$batchId/documents")
-    write(ix.globalIndex, s"$dir/v$batchId/global")
-    write(ix.termPostings, s"$dir/v$batchId/postings")
-    write(ix.events, s"$dir/v$batchId/events")
-    write(ix.metadata, s"$dir/v$batchId/metadata")
-    write(ix.docLengths, s"$dir/v$batchId/doc_lengths")
+  private def writeIndexParts(ix: WikiIndex, vdir: String): Unit = {
+    write(ix.docsFields, s"$vdir/docs_fields")
+    write(ix.documents, s"$vdir/documents")
+    write(ix.globalIndex, s"$vdir/global")
+    write(ix.termPostings, s"$vdir/postings")
+    write(ix.events, s"$vdir/events")
+    write(ix.metadata, s"$vdir/metadata")
+    write(ix.docLengths, s"$vdir/doc_lengths")
     write(ix.globalIndex.withColumn("fieldValue", reverse(col("fieldValue"))),
-      s"$dir/v$batchId/reverse")
-    write(WikiIndex.deriveTrigrams(ix.globalIndex), s"$dir/v$batchId/trigram")
+      s"$vdir/reverse")
+    write(WikiIndex.deriveTrigrams(ix.globalIndex), s"$vdir/trigram")
     // present exactly when the build declared offsetsFields — an
     // undeclared store simply never carries the part and the read side
     // derives (empty) from metadata
-    ix.fieldPostings.foreach(fp => write(fp, s"$dir/v$batchId/field_postings"))
+    ix.fieldPostings.foreach(fp => write(fp, s"$vdir/field_postings"))
   }
-
-  private def alreadyCommitted(batchId: Long): Boolean =
-    batchId <= version ||
-      parts.forall(p => VersionedState.exists(s"$dir/v$batchId/$p/_SUCCESS"))
 
   /** One micro-batch: build the batch's index tables with the SAME
     * extraction as batch ingest and write each as this version's delta
@@ -288,32 +205,20 @@ class LiveEngineMaintainer(
     * part). Replay is idempotent (deltas depend only on the batch's rows).
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (alreadyCommitted(batchId)) version = math.max(version, batchId)
-    else {
-      val s = batch.sparkSession
-      val ix = IndexBuilder.fromDocumentsTable(
-        s, batch, numPartitions, extraFields, offsetsFields)
-      writeIndexParts(ix, batchId)
-      write(emptyTombstones(s), s"$dir/v$batchId/tombstones")
-      version = math.max(version, batchId)
+    commit(batchId) { vdir =>
+      writeIndexParts(IndexBuilder.fromDocumentsTable(
+        batch.sparkSession, batch, numPartitions, extraFields, offsetsFields), vdir)
+      write(emptyTombstones, s"$vdir/tombstones")
     }
     maybeCompact()
   }
 
-  // Policy-driven major compaction (autoCompactEvery > 0): fold the
-  // store into one base once the PENDING delta count (read-set fold
-  // depth) reaches the dial — bounded read amplification with no
-  // operator in the loop. The auto path runs with a one-cycle reader
-  // grace window (`Compaction.maybeCompact`): dirs the new base
-  // subsumes are swept at the NEXT major, so live readers survive a
-  // compaction under them. Doubles as the tombstone eraser: every
-  // auto-compaction applies deletes physically in the base; the
-  // deleted doc's delta bytes are swept one cycle later.
-  private def maybeCompact(): Unit = {
-    Compaction.maybeCompact(autoCompactEvery, dir, parts)(
-      Compaction.compactEngine(spark, dir, _))
-    ()
-  }
+  // Policy-driven major compaction (`Compaction.maybeCompact` dial, with
+  // its one-cycle reader grace window). Doubles as the tombstone eraser:
+  // deletes are applied physically in the new base; the deleted doc's
+  // delta bytes are swept one cycle later.
+  private def maybeCompact(): Unit =
+    Compaction.maybeCompact(autoCompactEvery, this)(Compaction.engineFold)
 
   /** One DELETE micro-batch: `deletes` carries a `doc_id` column; this
     * version's delta is the tombstone rows plus empty doc parts (uniform
@@ -323,34 +228,19 @@ class LiveEngineMaintainer(
     * physical erasure happens at `Compaction.compactEngine`.
     */
   def processDeletes(deletes: DataFrame, batchId: Long): Unit = {
-    if (alreadyCommitted(batchId)) version = math.max(version, batchId)
-    else {
+    commit(batchId) { vdir =>
       val s = deletes.sparkSession
       val tomb = deletes
         .withColumn("partition", pmod(col("doc_id"), lit(numPartitions)).cast("int"))
         .withColumn("docId", col("doc_id").cast("string"))
         .select("partition", "docId").distinct()
-      val empty = IndexBuilder.fromDocumentsTable(
-        s, s.createDataFrame(s.sparkContext.emptyRDD[Row], DocumentsSchema),
-        numPartitions, extraFields, offsetsFields)
-      writeIndexParts(empty, batchId)
-      write(tomb, s"$dir/v$batchId/tombstones")
-      version = math.max(version, batchId)
+      writeIndexParts(IndexBuilder.fromDocumentsTable(
+        s, VersionedState.emptyFrame(s, DocumentsSchema),
+        numPartitions, extraFields, offsetsFields), vdir)
+      write(tomb, s"$vdir/tombstones")
     }
     maybeCompact()
   }
-
-  /** Attach to a streaming Dataset with the `documents` schema; same
-    * restart contract as the other maintainers (reuse the checkpoint).
-    */
-  def attach(docsStream: Dataset[Row], checkpoint: String): StreamingQuery =
-    WriterLease.register(dir, docsStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId)
-      }
-      .start())
 }
 
 object LiveEngineMaintainer {
@@ -386,18 +276,15 @@ object LiveEngineMaintainer {
       StructField("n_chars", LongType)))
   }
 
-  /** Provenance versioning and version-ordered masking are the shared
-    * LSM-delete machinery in `VersionedState` (the ANN maintainer uses
-    * the same, keyed on vec_id).
+  /** Delete markers: (partition, docId); masking keys on docId. */
+  private[streaming] val Tombstone =
+    org.apache.spark.sql.types.StructType.fromDDL("partition INT, docId STRING")
+
+  /** Every read-set postings dir carries the denormalized `dl` column
+    * (one driver-side footer read per dir).
     */
-  private[streaming] def withVer(df: DataFrame): DataFrame =
-    VersionedState.withVer(df)
-
-  private[streaming] def tombstoneSet(tombs: Option[DataFrame]): Option[DataFrame] =
-    VersionedState.tombstoneSet(tombs, "docId")
-
-  private[streaming] def maskDeleted(rows: DataFrame, tombs: Option[DataFrame]): DataFrame =
-    VersionedState.maskDeleted(rows, tombs, "docId")
+  private[streaming] def dlCovered(spark: SparkSession, postings: Seq[String]): Boolean =
+    postings.forall(p => spark.read.parquet(p).schema.fieldNames.contains("dl"))
 
   /** Merge-on-read fold of the global index under tombstones. EXACT
     * fragment rows are exploded to uids, masked version-ordered, and
@@ -430,10 +317,4 @@ object LiveEngineMaintainer {
             lit(false).as("ignore"))
         IncrementalIndex.mergeAll(live.unionByName(lossy))
     }
-
-  private[streaming] def emptyTombstones(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(s.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("partition", IntegerType), StructField("docId", StringType))))
-  }
 }

@@ -2,15 +2,14 @@ package graft.streaming
 
 import graft.ingest.IndexBuilder
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Live index maintenance from a document stream — the Spark-native
   * shape of the reference's LIVE ingest mode (streamed Mutations into
   * Accumulo with combiners merging at flush/compact/SCAN,
   * `WikipediaIngester.java:90-136` + SURVEY.md §2.10), as a Structured
-  * Streaming `foreachBatch` loop over an LSM-style versioned store
-  * (`VersionedState`):
+  * Streaming `foreachBatch` loop over a single-part LSM-style
+  * [[VersionedStore]]:
   *
   *   docs stream → per-batch DELTA postings (SAME extraction as batch
   *   ingest, `IndexBuilder.documentIndexRows`) → `v<batchId>/` holds
@@ -31,85 +30,32 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Read-path cost: one co-keyed aggregation over base + N deltas; N is
   * bounded by compaction cadence (the same dial as Accumulo's
   * minor-compaction count before a major).
-  *
-  * Versions are immutable committed dirs (a version counts only once
-  * its `_SUCCESS` marker exists — a crash mid-write leaves a partial
-  * dir that recovery and readers ignore; the marker is forced per
-  * write because object-store deployments commonly disable it
-  * globally).
   */
 class LiveIndexMaintainer(
     spark: SparkSession,
     dir: String,
     numPartitions: Int,
-    autoCompactEvery: Int = 0) {
-
-  // Recover the committed pointer on (re)construction: a restarted
-  // maintainer resumes at the last committed version, not from scratch —
-  // Structured Streaming's checkpoint resumes at the next batch id and
-  // the pre-crash batches exist only as committed versions.
-  @volatile private var version: Long = VersionedState.maxVersion(dir, Nil)
+    autoCompactEvery: Int = 0) extends VersionedStore(spark, dir) with StreamSink {
 
   /** Merged read view of the global index at the latest committed
     * version, if any batch has been processed yet: newest compacted
     * base + later deltas, folded through the lossy-UidList merge.
     */
-  def latest: Option[DataFrame] = {
-    val paths = VersionedState.readPaths(dir, Nil, None, version)
-    if (paths.isEmpty) None
-    else Some(IncrementalIndex.mergeAll(spark.read.parquet(paths: _*)))
-  }
-
-  def latestVersion: Long = version
-
-  /** Attach to a streaming Dataset with the `documents` schema
-    * (doc_id, text, lang, source, n_chars) and start maintaining the
-    * index. Caller owns the returned query's lifecycle.
-    *
-    * Restart contract: reuse the SAME `checkpoint` across restarts (the
-    * standard Structured Streaming rule) — batch ids then continue past
-    * the recovered versions. A replayed batch is either skipped against
-    * its own committed delta or rewrites the identical delta (a delta
-    * depends only on the batch's rows, never on prior state — the write
-    * is idempotent by construction, no predecessor bookkeeping needed).
-    */
-  def attach(docsStream: Dataset[Row], checkpoint: String): StreamingQuery =
-    WriterLease.register(dir, docsStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF, batchId)
-      }
-      .start())
+  def latest: Option[DataFrame] = mergedAt(Long.MaxValue)(IncrementalIndex.mergeAll)
 
   /** One micro-batch of the maintenance loop (the `foreachBatch` body,
     * callable directly for tests and backfills).
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    // Post-crash replay of an already-committed batch: the delta is
-    // already on disk (or folded into a compacted base covering this
-    // id), and rewriting it in place would race a concurrent reader.
-    if (batchId <= version ||
-        VersionedState.exists(s"$dir/v$batchId/_SUCCESS"))
-      version = math.max(version, batchId)
-    else {
-      val delta = IndexBuilder.buildGlobalIndex(
-        IndexBuilder.documentIndexRows(batch, numPartitions))
-      // overwrite is safe here: the target is absent or a partial
-      // crash leftover, which the commit protocol hides from readers.
-      delta.write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-        .parquet(s"$dir/v$batchId")
-      version = math.max(version, batchId) // committed — advance last
-    }
+    commit(batchId)(VersionedState.write(IndexBuilder.buildGlobalIndex(
+      IndexBuilder.documentIndexRows(batch, numPartitions)), _))
     // Policy-driven major compaction (autoCompactEvery > 0): once the
     // committed delta count reaches the dial, fold base+deltas into one
     // c<k> — read amplification stays bounded without an operator in
     // the loop. Runs inside the batch turn, so the maintainer pauses
     // for one fold every N batches (Accumulo's blocking-major analogue;
     // size the dial to the corpus like its compaction ratio).
-    Compaction.maybeCompact(autoCompactEvery, dir, Nil)(
-      Compaction.compactIndex(spark, dir, _))
-    ()
+    Compaction.maybeCompact(autoCompactEvery, this)(
+      Compaction.single(IncrementalIndex.mergeAll))
   }
 }

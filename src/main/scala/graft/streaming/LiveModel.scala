@@ -18,78 +18,32 @@ import org.apache.spark.sql.functions._
   * verbatim. A streaming corpus thus refreshes its importance model
   * per micro-batch without ever re-scanning accumulated data.
   *
-  * Shared `VersionedState` layout: `v<id>` count deltas, `c<k>` bases
+  * A single-part [[VersionedStore]]: `v<id>` count deltas, `c<k>` bases
   * (compact() folds the read set through the same keyed sum — a
-  * DataFrame job, since the state is vocabulary-sized), `_SUCCESS`
-  * commit markers, time travel via `modelAt(upTo)`.
+  * DataFrame job, since the state is vocabulary-sized), time travel via
+  * `modelAt(upTo)`.
   */
 class LiveDsirModelMaintainer(
     spark: SparkSession,
-    dir: String) {
+    dir: String) extends VersionedStore(spark, dir) {
 
   import graft.pipeline.Curation
-
-  @volatile private var version: Long = VersionedState.maxVersion(dir, Nil)
-
-  def latestVersion: Long = version
-
-  /** Versions an `asOf=` snapshot read can resolve exactly — the
-    * serving edge's 404 boundary (swept = gone as a resource).
-    */
-  def committedVersions: Seq[Long] = VersionedState.servableVersions(dir, Nil)
-
-  /** Identity of the read set a snapshot at `upTo` resolves to (newest
-    * base + deltas above it) — serving caches key memoized merged state
-    * on this, so a commit or compaction evicts instead of serving stale
-    * or re-merging per request (the QueryService.versioned discipline).
-    */
-  def stateKey(upTo: Long = Long.MaxValue): (Option[Long], Seq[Long]) =
-    VersionedState.readSet(dir, Nil, math.min(upTo, version))
-
-  /** Serving-path snapshot resolution (ONE directory listing): resolve
-    * `asOf` against the exact on-disk committed versions — None for an
-    * empty store or an unknown/swept version — and refresh the recovery
-    * pointer, so a reader serving beside a concurrent writer reads the
-    * resolved version's data instead of silently capping at a stale
-    * in-memory pointer.
-    */
-  def serveSnapshot(asOf: Option[Long] = None): Option[ServeSnapshot] = {
-    val r = VersionedState.serveSnapshot(dir, Nil, asOf)
-    r.foreach(s => version = math.max(version, s.latest))
-    r
-  }
 
   /** Fold one micro-batch of documents into a count-table delta. The
     * only corpus-touching work is the batch's own explode+count pass;
     * `isTarget` marks the batch rows that belong to the target
-    * distribution. Replay of a committed id is a no-op (the LiveIngest
-    * protocol — a delta depends only on the batch's rows).
+    * distribution. Replay of a committed id is a no-op (a delta depends
+    * only on the batch's rows).
     */
-  def processBatch(batch: DataFrame, isTarget: Column, batchId: Long): Unit = {
-    if (batchId <= version ||
-        VersionedState.exists(s"$dir/v$batchId/_SUCCESS")) {
-      version = math.max(version, batchId)
-      return
-    }
-    Curation.dsirCounts(batch, isTarget)
-      .write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(s"$dir/v$batchId")
-    version = batchId
-  }
+  def processBatch(batch: DataFrame, isTarget: Column, batchId: Long): Unit =
+    commit(batchId)(VersionedState.write(Curation.dsirCounts(batch, isTarget), _))
 
   /** The merged count table at version `upTo` — union of the read set
     * + one keyed integer sum (distributed; nothing driver-sized about
     * a vocabulary). Maintenance/test path (fresh listing); serving
     * reads the resolved snapshot's exact set via `modelFor`.
     */
-  def countsAt(upTo: Long = Long.MaxValue): Option[DataFrame] = {
-    val cap = math.min(upTo, version)
-    if (cap < 0) return None
-    val paths = VersionedState.readPaths(dir, Nil, None, cap)
-    if (paths.isEmpty) return None
-    Some(mergeFrom(paths))
-  }
+  def countsAt(upTo: Long = Long.MaxValue): Option[DataFrame] = mergedAt(upTo)(merge)
 
   /** The merged count table over EXACTLY the given read set — the sketch
     * stores' `cmsFor` contract: no second listing, a swept path is None
@@ -98,19 +52,10 @@ class LiveDsirModelMaintainer(
     * silent-empty-merge window — a sweep racing the later job surfaces
     * as a task failure (500), never as a 200 from different state.
     */
-  def countsFor(key: (Option[Long], Seq[Long])): Option[DataFrame] = {
-    val paths = VersionedState.pathsOf(dir, key, None)
-    if (paths.isEmpty ||
-        !paths.forall(p => VersionedState.exists(s"$p/_SUCCESS"))) None
-    else
-      try Some(mergeFrom(paths))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-  }
+  def countsFor(key: (Option[Long], Seq[Long])): Option[DataFrame] = view(key).exact()(merge)
 
-  private def mergeFrom(paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
-      .groupBy("token")
-      .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
+  private def merge(rows: DataFrame): DataFrame =
+    rows.groupBy("token").agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
 
   /** The quantized importance model at `upTo` — the SAME derivation the
     * batch operator uses (`Curation.dsirModel`), over the merged table.
@@ -126,14 +71,6 @@ class LiveDsirModelMaintainer(
     * one distributed keyed sum, then the standard compact-then-sweep
     * protocol.
     */
-  def compact(deleteSubsumed: Boolean = true): Long = {
-    val at = version
-    require(at >= 0, "nothing to compact: no committed version")
-    countsAt(at).get
-      .write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(s"$dir/c$at")
-    if (deleteSubsumed) Compaction.sweepSubsumed(dir, Nil)
-    at
-  }
+  def compact(deleteSubsumed: Boolean = true): Long =
+    majorCompact(deleteSubsumed)(Compaction.single(merge))
 }

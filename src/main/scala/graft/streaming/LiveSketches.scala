@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * instead of index state: each micro-batch folds into ONE fixed-size
   * partial count-min sketch (`Sketches.CmsAggregator` — the partial-agg
   * pass is the only corpus-touching work, O(|batch|) rows read, d·w
-  * longs written), persisted as a `v<batchId>` delta in the shared
-  * `VersionedState` layout. A read at version `upTo` merges the
+  * longs written), persisted as a `v<batchId>` delta of a single-part
+  * [[VersionedStore]]. A read at version `upTo` merges the
   * read-set's rows DRIVER-SIDE — ≤(1 base + pending deltas) vectors of
   * d·w longs each, a sketch constant, never the corpus — so serving
   * cost is independent of both corpus and batch count after compaction.
@@ -23,85 +23,26 @@ import org.apache.spark.sql.functions._
   * scope gives one consistent answer at any flush boundary,
   * WikipediaIngester.java:98-135) carried to sketch state.
   *
-  * Time travel (`cmsAt(v)`), restart recovery (version rediscovery from
-  * committed markers), and the compact-then-sweep protocol all come
-  * with the shared layout. `compact()` folds every committed version
-  * into a `c<latest>` base — after it, a reader merges exactly one row
-  * until the next delta lands.
+  * Time travel (`cmsAt(v)`), restart recovery, and the
+  * compact-then-sweep protocol all come with the store. `compact()`
+  * folds every committed version into a `c<latest>` base — after it, a
+  * reader merges exactly one row until the next delta lands.
   */
 class LiveSketchMaintainer(
     spark: SparkSession,
     dir: String,
     val d: Int = 4,
     val w: Int = 512,
-    keyCol: String = "user_id") {
+    keyCol: String = "user_id") extends VersionedStore(spark, dir) with StreamSink {
 
   private val cms = udaf(new graft.functions.Sketches.CmsAggregator(d, w))
 
-  @volatile private var version: Long = VersionedState.maxVersion(dir, Nil)
-
-  def latestVersion: Long = version
-
-  /** Versions an `asOf=` snapshot read can resolve exactly — the
-    * serving edge's 404 boundary (swept = gone as a resource).
-    */
-  def committedVersions: Seq[Long] = VersionedState.servableVersions(dir, Nil)
-
-  /** Identity of the read set a snapshot at `upTo` resolves to (newest
-    * base + deltas above it) — serving caches key memoized merged state
-    * on this, so a commit or compaction evicts instead of serving stale
-    * or re-merging per request (the QueryService.versioned discipline).
-    */
-  def stateKey(upTo: Long = Long.MaxValue): (Option[Long], Seq[Long]) =
-    VersionedState.readSet(dir, Nil, math.min(upTo, version))
-
-  /** Serving-path snapshot resolution (ONE directory listing): resolve
-    * `asOf` against the exact on-disk committed versions — None for an
-    * empty store or an unknown/swept version — and refresh the recovery
-    * pointer, so a reader serving beside a concurrent writer reads the
-    * resolved version's data instead of silently capping at a stale
-    * in-memory pointer.
-    */
-  def serveSnapshot(asOf: Option[Long] = None): Option[ServeSnapshot] = {
-    val r = VersionedState.serveSnapshot(dir, Nil, asOf)
-    r.foreach(s => version = math.max(version, s.latest))
-    r
-  }
-
-  /** Attach as a Structured Streaming sink — the `LiveIngest.attach`
-    * protocol: checkpointed batch ids continue past recovered versions,
-    * and a post-crash replay of a committed id is SKIPPED (the delta
-    * depends only on the batch's rows, so the skip loses nothing and a
-    * rewrite would race a concurrent reader).
-    */
-  def attach(stream: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    WriterLease.register(dir, stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) => processBatch(batch.toDF, batchId)
-      }
-      .start())
-
   /** Fold one micro-batch into a delta sketch. One partial-aggregable
     * pass over the batch (map-side combined d·w-long buffers are all
-    * that shuffles); the delta is a single (version, sk) row. Replay of
-    * an already-committed id is a no-op (see `attach`).
+    * that shuffles); the delta is a single (version, sk) row.
     */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batchId <= version ||
-        VersionedState.exists(s"$dir/v$batchId/_SUCCESS")) {
-      version = math.max(version, batchId)
-      return
-    }
-    batch.agg(cms(col(keyCol)).as("sk"))
-      .coalesce(1).write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(s"$dir/v$batchId")
-    version = batchId
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    commit(batchId)(VersionedState.write(batch.agg(cms(col(keyCol)).as("sk")).coalesce(1), _))
 
   /** The merged sketch at version `upTo` (default: latest) — element-wise
     * sum over the read set's partial rows, driver-side over bounded
@@ -110,61 +51,40 @@ class LiveSketchMaintainer(
     * Maintenance/test path: lists the dir fresh; SERVING must read the
     * resolved snapshot's exact set via `cmsFor` instead.
     */
-  def cmsAt(upTo: Long = Long.MaxValue): Seq[Long] = {
-    val cap = math.min(upTo, version)
-    if (cap < 0) return new Array[Long](d * w).toSeq
-    mergeFrom(VersionedState.readPaths(dir, Nil, None, cap))
-  }
+  def cmsAt(upTo: Long = Long.MaxValue): Seq[Long] =
+    mergedAt(upTo)(merge).getOrElse(new Array[Long](d * w).toSeq)
 
   /** The merged sketch over EXACTLY the given read set (a resolved
     * `ServeSnapshot.keyAt`) — NO second directory listing, so a
     * compaction sweep landing between snapshot resolution and this read
     * cannot silently shrink the merge to the zero sketch: a swept path
-    * is None, which the serving edge maps to its 404 (the "never a
-    * silent answer from different state" contract).
+    * is None, which the serving edge maps to its 404.
     */
-  def cmsFor(key: (Option[Long], Seq[Long])): Option[Seq[Long]] = {
-    val paths = VersionedState.pathsOf(dir, key, None)
-    if (paths.isEmpty ||
-        !paths.forall(p => VersionedState.exists(s"$p/_SUCCESS"))) None
-    else
-      try Some(mergeFrom(paths))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-  }
+  def cmsFor(key: (Option[Long], Seq[Long])): Option[Seq[Long]] = view(key).exact()(merge)
 
-  private def mergeFrom(paths: Seq[String]): Seq[Long] = {
+  private def merge(rows: DataFrame): Seq[Long] = {
     val acc = new Array[Long](d * w)
-    if (paths.nonEmpty)
-      spark.read.parquet(paths: _*).collect().foreach { r =>
-        val sk = r.getSeq[Long](r.fieldIndex("sk"))
-        var i = 0
-        while (i < acc.length) { acc(i) += sk(i); i += 1 }
-      }
+    rows.collect().foreach { r =>
+      val sk = r.getSeq[Long](r.fieldIndex("sk"))
+      var i = 0
+      while (i < acc.length) { acc(i) += sk(i); i += 1 }
+    }
     acc.toSeq
   }
 
-  /** Fold every committed version into a `c<latest>` base. The merge
-    * happens driver-side over the bounded read set; the base is one
-    * row. `deleteSubsumed = false` defers the sweep for a reader grace
-    * window (`Compaction.sweepSubsumed(dir, Nil)` later), the standard
-    * protocol of the other stores.
+  /** Fold every committed version into a `c<latest>` base of one row.
+    * `deleteSubsumed = false` defers the sweep for a reader grace
+    * window (`Compaction.sweepSubsumed(dir, Nil)` later).
     */
   def compact(deleteSubsumed: Boolean = true): Long = {
-    val at = version
-    require(at >= 0, "nothing to compact: no committed version")
-    val merged = cmsAt(at)
     import spark.implicits._
-    Seq(Tuple1(merged)).toDF("sk")
-      .coalesce(1).write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(s"$dir/c$at")
-    if (deleteSubsumed) Compaction.sweepSubsumed(dir, Nil)
-    at
+    majorCompact(deleteSubsumed)(Compaction.single(rows =>
+      Seq(Tuple1(merge(rows))).toDF("sk").coalesce(1)))
   }
 }
 
 /** The bottom-k quantile twin of `LiveSketchMaintainer`, PER GROUP —
-  * demonstrating the layout is generic over associative sketches:
+  * demonstrating the store is generic over associative sketches:
   * `qsMerge` (k-smallest-by-hash of a union = k-smallest of the
   * k-smallest) plays the role counter addition plays for CMS, so the
   * live per-group sample is bit-identical to the batch sample under
@@ -182,133 +102,53 @@ class LiveSketchMaintainer(
 class LiveQuantileMaintainer(
     spark: SparkSession,
     dir: String,
-    val k: Int = 512) {
+    val k: Int = 512) extends VersionedStore(spark, dir) with StreamSink {
 
   import graft.functions.Sketches
 
   private val sample = udaf(new Sketches.BottomKSample(k), Sketches.longDoubleEnc)
 
-  @volatile private var version: Long = VersionedState.maxVersion(dir, Nil)
-
-  def latestVersion: Long = version
-
-  /** Versions an `asOf=` snapshot read can resolve exactly — the
-    * serving edge's 404 boundary (swept = gone as a resource).
-    */
-  def committedVersions: Seq[Long] = VersionedState.servableVersions(dir, Nil)
-
-  /** Identity of the read set a snapshot at `upTo` resolves to (newest
-    * base + deltas above it) — serving caches key memoized merged state
-    * on this, so a commit or compaction evicts instead of serving stale
-    * or re-merging per request (the QueryService.versioned discipline).
-    */
-  def stateKey(upTo: Long = Long.MaxValue): (Option[Long], Seq[Long]) =
-    VersionedState.readSet(dir, Nil, math.min(upTo, version))
-
-  /** Serving-path snapshot resolution (ONE directory listing): resolve
-    * `asOf` against the exact on-disk committed versions — None for an
-    * empty store or an unknown/swept version — and refresh the recovery
-    * pointer, so a reader serving beside a concurrent writer reads the
-    * resolved version's data instead of silently capping at a stale
-    * in-memory pointer.
-    */
-  def serveSnapshot(asOf: Option[Long] = None): Option[ServeSnapshot] = {
-    val r = VersionedState.serveSnapshot(dir, Nil, asOf)
-    r.foreach(s => version = math.max(version, s.latest))
-    r
-  }
-
-  /** The `attach` streaming sink, identical protocol to the CMS store's
-    * (checkpointed ids, committed replays skipped).
-    */
-  def attach(stream: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    WriterLease.register(dir, stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) => processBatch(batch.toDF, batchId)
-      }
-      .start())
-
   /** One partial-aggregable pass over the batch: per-group ≤k-pair
     * buffers are all that shuffles; the delta is ≤|groups| rows.
-    * Replay of an already-committed id is a no-op (see `attach`).
     */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batchId <= version ||
-        VersionedState.exists(s"$dir/v$batchId/_SUCCESS")) {
-      version = math.max(version, batchId)
-      return
-    }
-    batch.groupBy("g").agg(sample(col("key"), col("v")).as("sk"))
-      .coalesce(1).write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(s"$dir/v$batchId")
-    version = batchId
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    commit(batchId)(VersionedState.write(
+      batch.groupBy("g").agg(sample(col("key"), col("v")).as("sk")).coalesce(1), _))
 
   /** Per-group merged samples at version `upTo`, finished with the
     * rank-rule quantiles — driver-side over |groups|·k·versions pairs.
     * Maintenance/test path (fresh listing); serving reads the resolved
     * snapshot's exact set via `quantilesFor`.
     */
-  def quantilesAt(upTo: Long = Long.MaxValue): Map[String, Sketches.QsOut] = {
-    val cap = math.min(upTo, version)
-    if (cap < 0) return Map.empty
-    val paths = VersionedState.readPaths(dir, Nil, None, cap)
-    if (paths.isEmpty) return Map.empty
-    mergeFrom(paths)
-  }
+  def quantilesAt(upTo: Long = Long.MaxValue): Map[String, Sketches.QsOut] =
+    mergedAt(upTo)(finish).getOrElse(Map.empty)
 
   /** Per-group quantiles over EXACTLY the given read set — the CMS
     * store's `cmsFor` contract (no second listing; a swept path is
     * None → the serving edge's 404, never a silently empty merge).
     */
-  def quantilesFor(key: (Option[Long], Seq[Long]))
-      : Option[Map[String, Sketches.QsOut]] = {
-    val paths = VersionedState.pathsOf(dir, key, None)
-    if (paths.isEmpty ||
-        !paths.forall(p => VersionedState.exists(s"$p/_SUCCESS"))) None
-    else
-      try Some(mergeFrom(paths))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-  }
+  def quantilesFor(key: (Option[Long], Seq[Long])): Option[Map[String, Sketches.QsOut]] =
+    view(key).exact()(finish)
 
-  private def mergeFrom(paths: Seq[String]): Map[String, Sketches.QsOut] = {
-    val partials = spark.read.parquet(paths: _*).collect().map { r =>
+  private def merge(rows: DataFrame): Map[String, Sketches.QsBuf] =
+    rows.collect().map { r =>
       val sk = r.getStruct(r.fieldIndex("sk"))
       (r.getString(r.fieldIndex("g")),
         Sketches.QsBuf(sk.getSeq[Double](0), sk.getSeq[Double](1)))
+    }.groupBy(_._1).map { case (g, bs) =>
+      g -> bs.map(_._2).reduce(Sketches.qsMerge(_, _, k))
     }
-    partials.groupBy(_._1).map { case (g, bs) =>
-      g -> Sketches.qsFinish(
-        bs.map(_._2).reduce(Sketches.qsMerge(_, _, k)))
-    }
-  }
+
+  private def finish(rows: DataFrame): Map[String, Sketches.QsOut] =
+    merge(rows).map { case (g, b) => g -> Sketches.qsFinish(b) }
 
   /** Fold every committed version into a `c<latest>` base (per-group
     * MERGED partials — NOT finished quantiles, so ingest continues to
     * merge past it). Same compact-then-sweep protocol as the CMS store.
     */
   def compact(deleteSubsumed: Boolean = true): Long = {
-    val at = version
-    require(at >= 0, "nothing to compact: no committed version")
-    val paths = VersionedState.readPaths(dir, Nil, None, at)
-    val merged = spark.read.parquet(paths: _*).collect().map { r =>
-      val sk = r.getStruct(r.fieldIndex("sk"))
-      (r.getString(r.fieldIndex("g")),
-        Sketches.QsBuf(sk.getSeq[Double](0), sk.getSeq[Double](1)))
-    }.groupBy(_._1).map { case (g, bs) =>
-      (g, bs.map(_._2).reduce(Sketches.qsMerge(_, _, k)))
-    }.toSeq.sortBy(_._1)
     import spark.implicits._
-    merged.toDF("g", "sk")
-      .coalesce(1).write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .parquet(s"$dir/c$at")
-    if (deleteSubsumed) Compaction.sweepSubsumed(dir, Nil)
-    at
+    majorCompact(deleteSubsumed)(Compaction.single(rows =>
+      merge(rows).toSeq.sortBy(_._1).toDF("g", "sk").coalesce(1)))
   }
 }

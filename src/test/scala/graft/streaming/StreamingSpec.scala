@@ -1210,7 +1210,10 @@ class StreamingSpec extends SparkSuite {
           assert(VersionedState.readSet(dir, LiveEngineMaintainer.CoreParts,
             VersionedState.maxVersion(dir, LiveEngineMaintainer.CoreParts))._2.size < dial,
             s"seed=$seed dial=$dial batch=$batchId pending deltas")
-        else if (batchId == 3L) Compaction.compactEngine(spark, dir) // mid-sequence manual major
+        else if (batchId == 3L) { // mid-sequence manual major, then a re-run with no new delta
+          Compaction.compactEngine(spark, dir)
+          Compaction.compactEngine(spark, dir)
+        }
       }
       val expected = alive.keys.toSeq.sorted.map(docRow)
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -1603,6 +1606,7 @@ class StreamingSpec extends SparkSuite {
       // stop being resources (the serving edge's 404 boundary) ---------
       val latest = (nb - 1).toLong
       cm.compact(); qm.compact(); mm.compact()
+      cm.compact(); qm.compact(); mm.compact() // re-run with no new delta
       assert(cm.committedVersions == Seq(latest) &&
         qm.committedVersions == Seq(latest) && mm.committedVersions == Seq(latest))
       val fullCms = keys.toDF("user_id").agg(cmsU(col("user_id")).as("sk"))
