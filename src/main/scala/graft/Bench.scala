@@ -3,8 +3,9 @@ object Bench {
 
   /** The seeded reference-shape concurrent workload (ANDs of 3-5 random
     * common TEXT words, README.md:192-204 shape) — one definition shared
-    * by Bench and ProfileServe so the profiler always replays exactly
-    * the benchmarked workload. Plain-token vocab only: a quote or
+    * by Bench and IngestLoadProbe (and the serving-under-scale runs in
+    * SCALE.md's round-10 appendix), so each replays exactly the
+    * benchmarked workload. Plain-token vocab only: a quote or
     * backslash in a sampled token would make the interpolated JEXL
     * unparseable and crash the whole run.
     */

@@ -114,7 +114,7 @@ object Sessions {
       // (guide §2.2/§2.5): shuffles START at initialPartitionNum and
       // AQE coalesces DOWN to advisory-sized partitions from the
       // actual map output. Measured both ways at both scales
-      // (SCALE.md round-13 appendix, OPTIMIZATION_r13.md §9): at sf100
+      // (OPTIMIZATION_r13.md §9): at sf100
       // q3's 600M-row orders⋈lineitem sort-merge join on the default
       // 32 partitions ran as spilling ~GB sorts — 939 s cold; started
       // at 512 and AQE-coalesced it is 404 s cold / 84 s warm. But a

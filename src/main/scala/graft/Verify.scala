@@ -1,17 +1,26 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. With entry
+  * names after the two dirs, dumps only those entries and their oracle
+  * SQL — the dev loop for oracle-checking one entry.
+  * Usage: Verify <sfDir> <outDir> [name ...]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [name ...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val names = args.drop(2).toSet
+    val unknown = names -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown registry entries: ${unknown.mkString(", ")}")
+    val picked = if (names.isEmpty) SparkEntry.queries.keySet else names
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.iterator.filter(kv => picked(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -30,7 +39,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.iterator.filter(kv => picked(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

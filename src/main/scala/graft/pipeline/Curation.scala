@@ -520,7 +520,7 @@ object Curation {
     // variant was also measured: column pruning makes the total's copy
     // of `per` non-identical, so AQE cannot reuse the exchange and the
     // corpus aggregates twice (concurrently — still 2.4× slower than
-    // this). A/B medians (tools/AbCuration): 0.710 eager / 0.292
+    // this). A/B medians (OPTIMIZATION_r13.md §5): 0.710 eager / 0.292
     // crossJoin / 0.151 window. Weight arithmetic is unchanged integer
     // math (n_tokens·1000 div total); the `when` guard keeps the
     // empty/all-empty contract (weight 0, no ANSI divide-by-zero),
@@ -770,7 +770,7 @@ object Curation {
   // r13 note: a one-pass rewrite (single corpus explode into a
   // (doc, tgt, token, occ) table feeding BOTH the count-table
   // re-aggregation and the scoring join) was implemented and measured
-  // against this composition (tools/AbCuration, 5 interleaved warm
+  // against this composition (OPTIMIZATION_r13.md §4, 5 interleaved warm
   // passes at sf0.1): medians 0.635 s vs 0.629 s — parity. The second
   // explode here partial-aggregates map-side straight to vocabulary
   // size, so it costs one tokenization pass but no corpus-scale
@@ -844,7 +844,7 @@ object Curation {
     * (cu_dsir_oov paid the corpus tokenize+aggregate three times per
     * call; with the floor in-plan it is twice, and the floor/model
     * copies of `cnt` share one exchange via AQE stage reuse —
-    * plans/r13/cu_dsir_oov_after.txt). A/B medians (tools/AbCuration,
+    * plans/r13/cu_dsir_oov_after.txt). A/B medians (OPTIMIZATION_r13.md §4,
     * two runs): 0.851→0.699 s and 0.873→0.742 s.
     *
     * Bit-identical to `dsirOovFloor`: Spark's `round()` on a double is

@@ -769,7 +769,10 @@ object RelationalQueries {
       // Exactness needs ONLY monotonicity (bucket order = value order
       // for ANY monotone bucketing — the same argument as the old
       // floor(v/W), where it held for any W > 0); equal values have
-      // equal bits, so no tie ever splits across buckets. The driver
+      // equal bits, except ±0.0 — the one Spark-equal pair with distinct
+      // bits, which lands in two adjacent buckets (-0.0 just below 0.0);
+      // that split is still order-consistent, since no value sorts
+      // between them. The driver
       // collect is ≤ |G| · occupied buckets, occupied ≤ 256·binades
       // present (≤ 2^20 hard at any domain; ~2k for a price-like
       // column spanning ~8 binades — same order as the old |G|·4096
@@ -808,8 +811,8 @@ object RelationalQueries {
         .toDF("g", "b", "cumBefore")
       // Pass 2: rank ONLY the bracketing buckets' rows (global rank =
       // bucket's cumulative predecessor count + within-bucket
-      // row_number — exact because floor(v/W) is monotone in v, so
-      // every value in an earlier bucket sorts before every value
+      // row_number — exact because the sortable-bits bucket is monotone
+      // in v, so every value in an earlier bucket sorts before every value
       // here). The only window runs over ~n/buckets-row slices; the
       // fact table is never globally sorted, and the two order
       // statistics selected are EXACTLY the full sort's.

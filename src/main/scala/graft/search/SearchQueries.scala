@@ -57,33 +57,9 @@ object SearchQueries {
       (ix, new WikiSearchEngine(serving, ix))
     })._2
 
-  /** An engine bound to the CALLER's session and ITS conf — no AQE
-    * override, no session clone. For profiling tools that A/B serving
-    * configs (`ProfileServe`): `engine` above pins the production
-    * serving conf, which would silently defeat the tool's knobs. Reuses
-    * the persisted index build; the returned engine is NOT cached.
-    */
-  def engineOn(s: SparkSession, dir: String): WikiSearchEngine = {
-    engine(s, dir) // ensure the index is built and persisted
-    new WikiSearchEngine(s, WikiIndex.load(s, saveDirFor(dir)))
-  }
-
   def index(s: SparkSession, dir: String): WikiIndex = {
     engine(s, dir); cache(dir)._1
   }
-
-  /** Memoized `engineOn`: a caller-session engine for callers that must
-    * JOIN engine output with caller-session tables. Cached per dir like
-    * `engine` — the index load (parquet footers + metadata collect) is
-    * not free per invocation; unlike `engineOn` the conf is whatever the
-    * caller's session has, so profiling tools keep using the uncached
-    * variant. (ws_hybrid used this through round 11; r12 moved it onto
-    * the engine's own AQE-off serving session — kept for library
-    * callers that genuinely hold caller-session state.)
-    */
-  private val callerCache = TrieMap.empty[String, WikiSearchEngine]
-  def callerEngine(s: SparkSession, dir: String): WikiSearchEngine =
-    callerCache.getOrElseUpdate(dir, engineOn(s, dir))
 
   /** An engine with a QUERY-TIME SYNONYM table over the standard saved
     * index (`EngineConfig.synonyms` — the `ws_syn_q` surface): 'spark'
@@ -633,12 +609,12 @@ object SearchQueries {
       // — and so does the RETURNED frame: like the other engine-backed
       // entries (ws_facets, ws_complete_q), collect/show is fine from
       // anywhere, but registering it as a temp view or joining it with
-      // caller-session frames is a cross-session analysis error; use
-      // callerEngine for callers that must hold caller-session state.
+      // caller-session frames is a cross-session analysis error.
       // The embeddings table is loaded on the serving session too —
-      // previously the whole query ran
-      // on the caller's AQE-on session (callerEngine) and a warm
-      // ProfileQuery measured 9 sequential AQE stage-materialization
+      // previously the whole query ran on the caller's AQE-on session
+      // (through a caller-session engine, `callerEngine` in
+      // `git show 47c603b:src/main/scala/graft/search/SearchQueries.scala`)
+      // and a warm ProfileQuery measured 9 sequential AQE stage-materialization
       // jobs summing 1.0 s inside a 2.1 s wall. The serving-path
       // argument is the engine's own (documented at `engine()`): both
       // pages are FIXED bounded-result DAGs (TakeOrderedAndProject +

@@ -1,15 +1,15 @@
 package graft.tools
 
 import graft.{Sessions, Tables}
-import graft.streaming.{Compaction, LiveEngineMaintainer, LiveIndexMaintainer, LiveNearDupMaintainer}
+import graft.streaming.{Compaction, LiveEngineMaintainer, LiveIndexMaintainer, LiveNearDupMaintainer, StreamSink}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Diagnostic: measures what `Compaction` buys (and costs) for both
-  * streaming maintainers — read-set size, merged-read wall, compaction
-  * wall, and on-disk bytes — and proves read-equivalence pre/post on
-  * real corpus data. Feeds the SCALE.md compaction appendix.
+/** Diagnostic: measures what `Compaction` buys (and costs) for the
+  * index, near-dup and engine maintainers — read-set size, merged-read
+  * wall, compaction wall, and on-disk bytes — and proves
+  * read-equivalence pre/post on real corpus data. Feeds the SCALE.md compaction appendix.
   *
   * Usage: `runMain graft.tools.CompactionBench [sfDir] [nBatches]`
   */
@@ -25,10 +25,12 @@ object CompactionBench {
     val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def canon(df: DataFrame): Seq[String] = df
-    .select(col("fieldValue"), col("fieldName"), col("partition"), col("language"),
-      col("count"), array_sort(col("uids")).as("uids"), col("ignore"))
-    .collect().map(_.toString).sorted.toSeq
+  private def canon(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** One store under test: how to open it on a dir, how to compact that
+    * dir, and its canonical read (the rows compaction must preserve). */
+  private final case class Store[S <: StreamSink](name: String, open: String => S,
+      compact: String => Long, read: S => DataFrame)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
@@ -37,26 +39,40 @@ object CompactionBench {
     spark.sparkContext.setLogLevel("ERROR")
     val docs = Tables.load(spark, sfDir, "documents").cache()
     docs.count()
+    def ingest(m: StreamSink): Unit = (0 until n).foreach(b =>
+      m.processBatch(docs.filter(pmod(col("doc_id"), lit(n)) === b), b.toLong))
+    val indexRead = (m: LiveIndexMaintainer) => m.latest.get
+      .select(col("fieldValue"), col("fieldName"), col("partition"), col("language"),
+        col("count"), array_sort(col("uids")).as("uids"), col("ignore"))
 
-    // ---- index maintainer: n delta batches → compact -------------------
-    val ixDir = java.nio.file.Files.createTempDirectory("graft-cbench-ix").toString
-    val ix = new LiveIndexMaintainer(spark, ixDir, numPartitions = 8)
-    val (_, ingestWall) = timed {
-      (0 until n).foreach(b =>
-        ix.processBatch(docs.filter(pmod(col("doc_id"), lit(n)) === b), b.toLong))
+    // each store: n delta batches → read → compact → reopen → read, and
+    // the two reads must be identical
+    val stores = Seq[Store[_ <: StreamSink]](
+      Store("index", new LiveIndexMaintainer(spark, _, numPartitions = 8),
+        Compaction.compactIndex(spark, _), indexRead),
+      Store("dedup", new LiveNearDupMaintainer(spark, _, tau = 0.6),
+        Compaction.compactDedup(spark, _), (m: LiveNearDupMaintainer) => m.latest.get.select("doc_id")),
+      // the engine store's read is a cold serve of a 2-term AND
+      Store("engine", new LiveEngineMaintainer(spark, _, numPartitions = 8),
+        Compaction.compactEngine(spark, _), (m: LiveEngineMaintainer) =>
+          new graft.query.WikiSearchEngine(spark, m.latestIndex.get)
+            .run("TEXT == 'spark' and TEXT == 'join'")))
+    def bench[S <: StreamSink](st: Store[S]): Seq[String] = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-cbench-${st.name}").toString
+      val m = st.open(dir)
+      val (_, ingestWall) = timed(ingest(m))
+      val deltaBytes = du(dir)
+      val (pre, preWall) = timed(canon(st.read(m)))
+      val (_, compactWall) = timed(st.compact(dir))
+      val baseBytes = du(dir)
+      val (post, postWall) = timed(canon(st.read(st.open(dir))))
+      require(pre == post, s"${st.name} compaction must be read-equivalent")
+      println(f"${st.name}: n=$n ingest=$ingestWall%.2fs deltas=${deltaBytes / 1024}%dKiB " +
+        f"read_pre=$preWall%.2fs compact=$compactWall%.2fs base=${baseBytes / 1024}%dKiB " +
+        f"read_post=$postWall%.2fs rows=${pre.size}")
+      pre
     }
-    val deltaBytes = du(ixDir)
-    val (preRows, preWall) = timed(ix.latest.get.count())
-    val preCanon = canon(ix.latest.get)
-    val (_, compactWall) = timed(Compaction.compactIndex(spark, ixDir))
-    val baseBytes = du(ixDir)
-    val ix2 = new LiveIndexMaintainer(spark, ixDir, numPartitions = 8)
-    val (postRows, postWall) = timed(ix2.latest.get.count())
-    require(preRows == postRows && preCanon == canon(ix2.latest.get),
-      "index compaction must be read-equivalent")
-    println(f"index: n=$n ingest=$ingestWall%.2fs deltas=${deltaBytes / 1024}%dKiB " +
-      f"read_pre=$preWall%.2fs compact=$compactWall%.2fs base=${baseBytes / 1024}%dKiB " +
-      f"read_post=$postWall%.2fs rows=$preRows")
+    val preCanon = stores.map(bench(_)).head // the index store's read
 
     // ---- auto-compaction policy: same ingest, dial = 4 -----------------
     // Sustained ingest with autoCompactEvery: majors fire inside the
@@ -65,60 +81,14 @@ object CompactionBench {
     // ingest wall, the payoff in read wall and a bounded dir count.
     val acDir = java.nio.file.Files.createTempDirectory("graft-cbench-ac").toString
     val ac = new LiveIndexMaintainer(spark, acDir, numPartitions = 8, autoCompactEvery = 4)
-    val (_, acIngestWall) = timed {
-      (0 until n).foreach(b =>
-        ac.processBatch(docs.filter(pmod(col("doc_id"), lit(n)) === b), b.toLong))
-    }
+    val (_, acIngestWall) = timed(ingest(ac))
     val acBytes = du(acDir)
     val acDirs = Option(new java.io.File(acDir).listFiles()).map(_.length).getOrElse(0)
-    val (acRows, acReadWall) = timed(ac.latest.get.count())
-    require(acRows == preRows && canon(ac.latest.get) == preCanon,
-      "auto-compacted read must equal the manual maintainer's")
+    val (acCanon, acReadWall) = timed(canon(indexRead(ac)))
+    require(acCanon == preCanon, "auto-compacted read must equal the manual maintainer's")
     println(f"index-auto4: n=$n ingest=$acIngestWall%.2fs dirs=$acDirs%d " +
-      f"bytes=${acBytes / 1024}%dKiB read=$acReadWall%.2fs rows=$acRows")
+      f"bytes=${acBytes / 1024}%dKiB read=$acReadWall%.2fs rows=${acCanon.size}")
 
-    // ---- dedup maintainer: n batches → compact -------------------------
-    val ddDir = java.nio.file.Files.createTempDirectory("graft-cbench-dd").toString
-    val dd = new LiveNearDupMaintainer(spark, ddDir, tau = 0.6)
-    val (_, ddIngestWall) = timed {
-      (0 until n).foreach(b =>
-        dd.processBatch(docs.filter(pmod(col("doc_id"), lit(n)) === b), b.toLong))
-    }
-    val ddDeltaBytes = du(ddDir)
-    val (ddPreRows, ddPreWall) = timed(dd.latest.get.count())
-    val ddPreIds = dd.latest.get.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val (_, ddCompactWall) = timed(Compaction.compactDedup(spark, ddDir))
-    val ddBaseBytes = du(ddDir)
-    val dd2 = new LiveNearDupMaintainer(spark, ddDir, tau = 0.6)
-    val (ddPostRows, ddPostWall) = timed(dd2.latest.get.count())
-    require(ddPreRows == ddPostRows &&
-      ddPreIds == dd2.latest.get.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq,
-      "dedup compaction must be read-equivalent")
-    println(f"dedup: n=$n ingest=$ddIngestWall%.2fs deltas=${ddDeltaBytes / 1024}%dKiB " +
-      f"read_pre=$ddPreWall%.2fs compact=$ddCompactWall%.2fs base=${ddBaseBytes / 1024}%dKiB " +
-      f"read_post=$ddPostWall%.2fs kept=$ddPreRows")
-
-    // ---- full-engine maintainer: n batches → serve → compact → serve --
-    val enDir = java.nio.file.Files.createTempDirectory("graft-cbench-en").toString
-    val en = new LiveEngineMaintainer(spark, enDir, numPartitions = 8)
-    val (_, enIngestWall) = timed {
-      (0 until n).foreach(b =>
-        en.processBatch(docs.filter(pmod(col("doc_id"), lit(n)) === b), b.toLong))
-    }
-    val enDeltaBytes = du(enDir)
-    def serve(m: LiveEngineMaintainer): Long = {
-      val eng = new graft.query.WikiSearchEngine(spark, m.latestIndex.get)
-      eng.run("TEXT == 'spark' and TEXT == 'join'").count()
-    }
-    val (preHits, enPreWall) = timed(serve(en))
-    val (_, enCompactWall) = timed(Compaction.compactEngine(spark, enDir))
-    val enBaseBytes = du(enDir)
-    val en2 = new LiveEngineMaintainer(spark, enDir, numPartitions = 8)
-    val (postHits, enPostWall) = timed(serve(en2))
-    require(preHits == postHits, "engine compaction must serve identically")
-    println(f"engine: n=$n ingest=$enIngestWall%.2fs deltas=${enDeltaBytes / 1024}%dKiB " +
-      f"serve_pre=$enPreWall%.2fs compact=$enCompactWall%.2fs base=${enBaseBytes / 1024}%dKiB " +
-      f"serve_post=$enPostWall%.2fs hits=$preHits")
     spark.stop()
   }
 }

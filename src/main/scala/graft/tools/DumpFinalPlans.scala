@@ -2,11 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-/** Round-13 optimization evidence: like DumpPlans, but EXECUTES the
-  * query first and dumps the FINAL adaptive plan — the only view that
-  * shows whether AQE's runtime stage cache actually deduplicated
-  * canonically-identical exchanges (ReusedExchange / reused query
-  * stages never appear in the initial isFinalPlan=false dump). Usage:
+/** Round-13 optimization evidence: EXECUTES each named query, then dumps
+  * its FINAL adaptive plan to `<outDir>/<query>_<suffix>.txt` — the only
+  * view that shows whether AQE's runtime stage cache actually deduplicated
+  * canonically-identical exchanges (ReusedExchange / reused query stages
+  * never appear in the initial isFinalPlan=false dump). Usage:
   *   graft.tools.DumpFinalPlans <sfDir> <outDir> <suffix> <query>[,<query>...]
   */
 object DumpFinalPlans {

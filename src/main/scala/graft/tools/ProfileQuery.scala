@@ -2,12 +2,10 @@ package graft.tools
 
 import graft.Sessions
 
-import scala.collection.mutable
-
 /** Per-job breakdown of one registry query (not part of the driver
   * surface): runs the named query once warm, then once instrumented,
   * printing every Spark job's wall time, stage names and task counts —
-  * the "where do the seconds go" view TimeQueries lacks. Accepts a
+  * the "where do the seconds go" view TripleRun's timings lack. Accepts a
   * comma-separated list so a sweep shares one session (and its warm
   * caches) instead of paying a JVM+session spin-up per query. Usage:
   *   graft.tools.ProfileQuery <sfDir> <query>[,<query>...]
@@ -28,47 +26,11 @@ object ProfileQuery {
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm: codegen, parquet footers, caches
 
-    case class J(id: Int, var t0: Long = 0L, var t1: Long = 0L,
-        var stages: Seq[String] = Nil, var tasks: Int = 0)
-    val jobs = mutable.LinkedHashMap.empty[Int, J]
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.synchronized {
-          jobs(e.jobId) = J(e.jobId, e.time,
-            stages = e.stageInfos.map(s => s"${s.name.takeWhile(_ != '(').trim}[${s.numTasks}]"),
-            tasks = e.stageInfos.map(_.numTasks).sum)
-        }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        jobs.synchronized { jobs.get(e.jobId).foreach(_.t1 = e.time) }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val t0 = System.nanoTime()
-    fn(spark, sfDir).count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    // wait for the listener bus to drain (bounded poll). "Nothing
-    // incomplete" alone is not quiescence: a short final job may have
-    // NEITHER of its events delivered yet, so the map looks complete
-    // while a whole job is still in flight — require the snapshot
-    // (job count, #incomplete) to also hold stable across two
-    // consecutive polls before trusting it.
-    val deadline = System.nanoTime() + 5_000_000_000L
-    var snap   = (-1, -1)
-    var stable = 0
-    while (stable < 2 && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      val cur = jobs.synchronized((jobs.size, jobs.values.count(_.t1 == 0L)))
-      if (cur == snap && cur._2 == 0) stable += 1 else stable = 0
-      snap = cur
-    }
-    spark.sparkContext.removeSparkListener(l)
-    val (js, dropped) =
-      jobs.synchronized(jobs.values.toSeq).partition(_.t1 != 0L)
-    if (dropped.nonEmpty)
-      println(s"  WARNING: ${dropped.size} job(s) missing onJobEnd at the " +
-        "drain deadline — job count/time below UNDERSTATE the query")
-    println(f"$name: wall=$wall%.3f s, jobs=${js.size}, job-time sum=${js.map(j => j.t1 - j.t0).sum / 1e3}%.3f s")
+    val (_, trace) = JobTrace(spark.sparkContext)(fn(spark, sfDir).count())
+    val js = trace.jobs
+    println(f"$name: wall=${trace.wall}%.3f s, jobs=${js.size}, job-time sum=${js.map(j => j.end - j.start).sum / 1e3}%.3f s")
     js.foreach { j =>
-      println(f"  job ${j.id}%3d ${(j.t1 - j.t0) / 1e3}%7.3f s tasks=${j.tasks}%4d  ${j.stages.mkString(" | ")}")
+      println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.3f s tasks=${j.tasks}%4d  ${j.stages.mkString(" | ")}")
     }
   }
 }

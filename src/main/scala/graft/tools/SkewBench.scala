@@ -3,10 +3,7 @@ package graft.tools
 import graft.{Sessions, Tables}
 import graft.ingest.IndexBuilder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
-
-import scala.collection.mutable
 
 /** Empirical check of SCALE.md's hot-term-skew claim (not part of the
   * driver surface): plants a term in 50% of the sf corpus, builds the
@@ -18,10 +15,6 @@ import scala.collection.mutable
   * Usage: graft.tools.SkewBench [sfDir] [salts=16]
   */
 object SkewBench {
-
-  private case class StageAgg(var tasks: Int = 0, var maxBytes: Long = 0L,
-      var sumBytes: Long = 0L, var maxMs: Long = 0L)
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val salts = args.lift(1).map(_.stripPrefix("salts=").toInt).getOrElse(16)
@@ -48,47 +41,16 @@ object SkewBench {
       .cache()
     val totalRows = rows.count()
 
-    val stages = mutable.Map.empty[Int, StageAgg]
-    val l = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.taskMetrics != null)
-        stages.synchronized {
-          val s = stages.getOrElseUpdate(e.stageId, StageAgg())
-          val b = e.taskMetrics.shuffleReadMetrics.totalBytesRead
-          s.tasks += 1; s.sumBytes += b
-          s.maxBytes = math.max(s.maxBytes, b)
-          s.maxMs = math.max(s.maxMs, e.taskMetrics.executorRunTime)
-        }
-    }
-
     def measured(label: String)(body: => Long): Unit = {
-      stages.synchronized(stages.clear())
-      spark.sparkContext.addSparkListener(l)
-      val t0  = System.nanoTime()
-      val out = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      // drain: poll until the task count holds stable for TWO
-      // consecutive 200ms windows (one quiet window can be a bus-thread
-      // GC pause with events still pending, which would undercount the
-      // exact measurement this tool exists for), bounded by a deadline
-      // so a busy bus can't spin the loop forever.
-      val deadline = System.nanoTime() + 10_000_000_000L
-      var prev   = -1L
-      var stable = 0
-      var cur    = stages.synchronized(stages.values.map(_.tasks.toLong).sum)
-      while (stable < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(200); prev = cur
-        cur = stages.synchronized(stages.values.map(_.tasks.toLong).sum)
-        if (cur == prev) stable += 1 else stable = 0
-      }
-      spark.sparkContext.removeSparkListener(l)
+      val (out, trace) = JobTrace(spark.sparkContext)(body)
       // the final-agg stage is the one with the largest max task
       // shuffle read — the reducer the hot key lands on
-      val worst = stages.synchronized(stages.values.toSeq).filter(_.sumBytes > 0)
-        .sortBy(-_.maxBytes).headOption.getOrElse(StageAgg())
+      val worst = trace.stages.filter(_.sumBytes > 0)
+        .sortBy(-_.maxBytes).headOption.getOrElse(JobTrace.Stage())
       val skewRatio =
         if (worst.tasks == 0 || worst.sumBytes == 0) 0.0
         else worst.maxBytes.toDouble / (worst.sumBytes.toDouble / worst.tasks)
-      println(f"$label%-22s rows=$out%8d wall=$sec%6.2f s  " +
+      println(f"$label%-22s rows=$out%8d wall=${trace.wall}%6.2f s  " +
         f"worst-stage: tasks=${worst.tasks}%3d maxTaskShuffleRead=${worst.maxBytes / 1024}%6d KiB " +
         f"(${skewRatio}%4.1fx mean) maxTaskTime=${worst.maxMs}%5d ms")
     }

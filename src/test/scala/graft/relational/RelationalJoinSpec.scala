@@ -190,7 +190,8 @@ class RelationalJoinSpec extends SparkSuite {
           case _ => rnd.nextInt(3000) + rnd.nextInt(100) / 100.0
         }
         (flags(rnd.nextInt(3)), v)
-      } :+ ("A", 0.0) // a group guaranteed non-empty with a zero value
+      } ++ Seq(("A", 0.0), // a group guaranteed non-empty with a zero value
+        ("N", -0.0), ("N", 0.0)) // Spark-equal, distinct bits: adjacent buckets
       val d = java.nio.file.Files.createTempDirectory(s"graft_q30_rand$trial").toString
       rows.toDF("l_returnflag", "l_extendedprice")
         .coalesce(2).write.mode("overwrite").parquet(s"$d/lineitem.parquet")
