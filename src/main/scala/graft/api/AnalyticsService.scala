@@ -86,12 +86,7 @@ class AnalyticsService(
   // filter job over the cached model. Bounded at 4096 entries — driver
   // state stays fixed no matter the vocabulary; stale-snapshot keys
   // age out by LRU order.
-  private val tokenLru = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(((Option[Long], Seq[Long]), Long), String), Option[Long]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(((Option[Long], Seq[Long]), Long), String), Option[Long]]): Boolean =
-        size() > 4096
-    })
+  private val tokenLru = new graft.Lru[(((Option[Long], Seq[Long]), Long), String), Option[Long]](4096)
 
   /** Point estimate for one key from the merged CMS at the resolved
     * version, as JSON — the heavy-hitter badge endpoint. After the
@@ -146,11 +141,10 @@ class AnalyticsService(
     modelCache.use(snap)(
       m.modelFor(snap.keyAt).getOrElse(swept(snap)).cache()) { model =>
       val lruKey = ((snap.keyAt, snap.at), token)
-      val lr = Option(tokenLru.get(lruKey)).getOrElse {
-        val got = model.filter(col("token") === token).limit(1).collect()
+      // negative entries cache "absent" too
+      val lr = tokenLru.getOrElseUpdate(lruKey) {
+        model.filter(col("token") === token).limit(1).collect()
           .headOption.map(_.getAs[Long]("lr"))
-        tokenLru.put(lruKey, got) // negative entries cache "absent" too
-        got
       }.getOrElse(throw new NoSuchElementException(s"token not in model: $token"))
       s"""{"version":${snap.at},"token":${QueryService.jstr(token)},"lr":$lr}"""
     }

@@ -120,26 +120,29 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
     val params = queryParams(ex)
     val (q, auths) = queryAndAuths(params)
     val limit = intParam(params, "limit", default = 100, min = 1, max = 1000000)
-    val results = serviceFor(params).query(q, auths, limit)
+    val target = serviceFor(params)
+    // the media type resolves BEFORE execution: an unsupported format is
+    // a 400 that must not cost a query
+    val render: Results => (String, String) =
+      params.get("format").orElse(fromAccept(ex)).getOrElse("xml") match {
+        case "xml"  => r => ("application/xml", r.toXml)
+        case "json" => r => ("application/json", r.toJson)
+        case "yaml" => r => ("text/x-yaml", r.toYaml)
+        case "html" => r => ("text/html", r.toHtml)
+        case other  => throw new IllegalArgumentException(s"unsupported format: $other")
+      }
+    val results = target.query(q, auths, limit)
     // per-query serving metrics on the wire (set before safely() sends
     // headers): end-to-end parse→plan→execute→collect time + row count
     ex.getResponseHeaders.set("X-Query-Millis",
       ((System.nanoTime() - t0) / 1e6).round.toString)
     ex.getResponseHeaders.set("X-Result-Count", results.documents.size.toString)
-    val fmt = params.get("format").orElse(fromAccept(ex)).getOrElse("xml")
-    fmt match {
-      case "xml"  => ("application/xml", results.toXml)
-      case "json" => ("application/json", results.toJson)
-      case "yaml" => ("text/x-yaml", results.toYaml)
-      case "html" => ("text/html", results.toHtml)
-      case other  => throw new IllegalArgumentException(s"unsupported format: $other")
-    }
+    render(results)
   })
 
   server.createContext("/content", (ex: HttpExchange) => safely(ex) {
     val params = liveOnly(queryParams(ex))
-    val id = params.getOrElse("id",
-      throw new IllegalArgumentException("missing required parameter: id"))
+    val id = required(params, "id")
     svc.content(id) match {
       case Some(text) => ("text/plain; charset=utf-8", text)
       case None       => throw new NoSuchElementException(s"document not found: $id")
@@ -159,8 +162,7 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
   //  - `GET /facets?query=…&field=SOURCE&auths=…` → facet counts as JSON
   server.createContext("/rank", (ex: HttpExchange) => safely(ex) {
     val params = liveOnly(queryParams(ex))
-    val terms = params.getOrElse("terms",
-      throw new IllegalArgumentException("missing required parameter: terms"))
+    val terms = required(params, "terms")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     if (terms.isEmpty) throw new IllegalArgumentException("terms is empty")
     val limit = intParam(params, "limit", default = 10, min = 1, max = 1000000)
@@ -168,12 +170,8 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
     // as (after_score, after_id); both-or-neither
     (params.get("after_score"), params.get("after_id")) match {
       case (Some(s), Some(id)) =>
-        val afterScore =
-          try s.toDouble
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"bad after_score: $s") }
-        ("application/json",
-          svc.rankAfter(terms, afterScore, id, limit, authsOf(params)))
+        ("application/json", svc.rankAfter(terms,
+          numeric("after_score", s)(_.toDouble), id, limit, authsOf(params)))
       case (None, None) =>
         ("application/json", svc.rank(terms, limit, authsOf(params)))
       case _ => throw new IllegalArgumentException(
@@ -196,16 +194,10 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
   //    retrieval serving edge (400 when the server has no embeddings)
   server.createContext("/hybrid", (ex: HttpExchange) => safely(ex) {
     val params = liveOnly(queryParams(ex))
-    val terms = params.getOrElse("terms",
-      throw new IllegalArgumentException("missing required parameter: terms"))
+    val terms = required(params, "terms")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     if (terms.isEmpty) throw new IllegalArgumentException("terms is empty")
-    val vec = params.get("vec").map { v =>
-      try v.toLong
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(s"bad vec: $v") }
-    }.getOrElse(throw new IllegalArgumentException(
-      "missing required parameter: vec"))
+    val vec = longParam(params, "vec")
     val limit = intParam(params, "limit", default = 20, min = 1, max = 10000)
     val depth = intParam(params, "depth", default = 50, min = 1, max = 100000)
     val kRrf  = intParam(params, "krrf", default = 60, min = 1, max = 1000000)
@@ -219,8 +211,7 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
   //    (edit distance ≤ 1) with document frequency, best-first, as JSON
   server.createContext("/fuzzy", (ex: HttpExchange) => safely(ex) {
     val params = liveOnly(queryParams(ex))
-    val term = params.getOrElse("term",
-      throw new IllegalArgumentException("missing required parameter: term"))
+    val term = required(params, "term")
     if (term.trim.isEmpty) throw new IllegalArgumentException("term is empty")
     val limit = intParam(params, "limit", default = 10, min = 1, max = 1000)
     ("application/json", svc.fuzzy(term.trim, limit, authsOf(params)))
@@ -231,16 +222,9 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
   server.createContext("/histogram", (ex: HttpExchange) => safely(ex) {
     val params = liveOnly(queryParams(ex))
     val (q, auths) = queryAndAuths(params)
-    val field = params.getOrElse("field",
-      throw new IllegalArgumentException("missing required parameter: field")).toUpperCase
-    def longParam(k: String, default: Long): Long =
-      params.get(k).map { v =>
-        try v.toLong
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"bad $k: $v") }
-      }.getOrElse(default)
-    val lo = longParam("lo", 0L)
-    val width = longParam("width", 100L)
+    val field = required(params, "field").toUpperCase
+    val lo = optLong(params, "lo").getOrElse(0L)
+    val width = optLong(params, "width").getOrElse(100L)
     if (width <= 0) throw new IllegalArgumentException(s"width must be > 0: $width")
     val buckets = intParam(params, "buckets", default = 10, min = 1, max = 10000)
     ("application/json", svc.histogram(q, field, lo, width, buckets, auths))
@@ -251,8 +235,7 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
   //    best-first, as JSON
   server.createContext("/mlt", (ex: HttpExchange) => safely(ex) {
     val params = liveOnly(queryParams(ex))
-    val doc = params.getOrElse("doc",
-      throw new IllegalArgumentException("missing required parameter: doc"))
+    val doc = required(params, "doc")
     if (doc.trim.isEmpty) throw new IllegalArgumentException("doc is empty")
     val limit = intParam(params, "limit", default = 10, min = 1, max = 10000)
     ("application/json", svc.moreLikeThis(doc.trim, limit, authsOf(params)))
@@ -261,8 +244,7 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
   server.createContext("/facets", (ex: HttpExchange) => safely(ex) {
     val params = liveOnly(queryParams(ex))
     val (q, auths) = queryAndAuths(params)
-    val field = params.getOrElse("field",
-      throw new IllegalArgumentException("missing required parameter: field"))
+    val field = required(params, "field")
     ("application/json", svc.facets(q, field, auths))
   })
 
@@ -272,8 +254,7 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
   server.createContext("/collapse", (ex: HttpExchange) => safely(ex) {
     val params = liveOnly(queryParams(ex))
     val (q, auths) = queryAndAuths(params)
-    val field = params.getOrElse("field",
-      throw new IllegalArgumentException("missing required parameter: field"))
+    val field = required(params, "field")
     ("application/json", svc.collapse(q, field, auths))
   })
 
@@ -288,8 +269,7 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
   //    auth-gated like every vocabulary-returning route
   server.createContext("/complete", (ex: HttpExchange) => safely(ex) {
     val params = liveOnly(queryParams(ex))
-    val prefix = params.getOrElse("prefix",
-      throw new IllegalArgumentException("missing required parameter: prefix"))
+    val prefix = required(params, "prefix")
     if (prefix.trim.isEmpty) throw new IllegalArgumentException("prefix is empty")
     val limit = intParam(params, "limit", default = 10, min = 1, max = 10000)
     ("application/json", svc.complete(prefix.trim, limit, authsOf(params)))
@@ -337,8 +317,7 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
 
   server.createContext("/model/dsir", (ex: HttpExchange) => safely(ex) {
     val params = queryParams(ex)
-    val token = params.getOrElse("token",
-      throw new IllegalArgumentException("missing required parameter: token"))
+    val token = required(params, "token")
     if (token.trim.isEmpty) throw new IllegalArgumentException("token is empty")
     ("application/json", analytics.dsirToken(token.trim, asOfOf(params), authsOf(params)))
   })
@@ -355,16 +334,10 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
     val k      = intParam(params, "k", default = 10, min = 1, max = 1000)
     val nprobe = intParam(params, "nprobe", default = 4, min = 1, max = 1024)
     val query = (params.get("id"), params.get("q")) match {
-      case (Some(id), None) =>
-        Left(try id.toLong
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"bad id: $id") })
+      case (Some(id), None) => Left(numeric("id", id)(_.toLong))
       case (None, Some(csv)) =>
-        val v = csv.split(",").map(_.trim).filter(_.nonEmpty).map { s =>
-          try s.toFloat
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"bad vector component: $s") }
-        }
+        val v = csv.split(",").map(_.trim).filter(_.nonEmpty)
+          .map(numeric("vector component", _)(_.toFloat))
         if (v.isEmpty) throw new IllegalArgumentException("q is empty")
         Right(v)
       case _ => throw new IllegalArgumentException(
@@ -389,13 +362,9 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
     * resolver shared by /query and /count so the two cannot drift.
     */
   private def serviceFor(params: Map[String, String]): QueryService =
-    params.get("asOf") match {
+    asOfOf(params) match {
       case None => svc
-      case Some(v) =>
-        val ver =
-          try v.toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"bad asOf: $v") }
+      case Some(ver) =>
         serviceAt(ver).getOrElse(throw new NoSuchElementException(
           s"no committed snapshot at version $ver"))
     }
@@ -415,11 +384,8 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
   /** The required `query` param + parsed `auths` CSV — ONE parser for
     * every route that takes them, so the routes cannot drift.
     */
-  private def queryAndAuths(params: Map[String, String]): (String, Seq[String]) = {
-    val q = params.getOrElse("query",
-      throw new IllegalArgumentException("missing required parameter: query"))
-    (q, authsOf(params))
-  }
+  private def queryAndAuths(params: Map[String, String]): (String, Seq[String]) =
+    (required(params, "query"), authsOf(params))
 
   /** The `auths` CSV alone — for routes without a boolean query (/rank,
     * /fuzzy, /snippets). ONE parser shared with queryAndAuths so every
@@ -443,24 +409,31 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
     v
   }
 
-  /** Required long param → 400 on absence or non-numeric. */
-  private def longParam(params: Map[String, String], k: String): Long = {
-    val v = params.getOrElse(k,
-      throw new IllegalArgumentException(s"missing required parameter: $k"))
-    try v.toLong
+  /** Param `k`'s value `v` read by `parse` — ONE numeric reader for
+    * every route: a malformed number is a 400 `bad <k>: <v>`.
+    */
+  private def numeric[T](k: String, v: String)(parse: String => T): T =
+    try parse(v)
     catch { case _: NumberFormatException =>
       throw new IllegalArgumentException(s"bad $k: $v") }
-  }
 
-  /** Optional `asOf=` for the analytics routes (which resolve it against
-    * their own store's committed versions, not `serviceAt`).
+  /** Optional long param → 400 on non-numeric. */
+  private def optLong(params: Map[String, String], k: String): Option[Long] =
+    params.get(k).map(numeric(k, _)(_.toLong))
+
+  /** Required param → 400 on absence. */
+  private def required(params: Map[String, String], k: String): String =
+    params.getOrElse(k, throw new IllegalArgumentException(s"missing required parameter: $k"))
+
+  /** Required long param → 400 on absence or non-numeric. */
+  private def longParam(params: Map[String, String], k: String): Long =
+    numeric(k, required(params, k))(_.toLong)
+
+  /** Optional `asOf=` version — parsed here only: `serviceFor` resolves
+    * it against `serviceAt`, the analytics routes against their own
+    * store's committed versions.
     */
-  private def asOfOf(params: Map[String, String]): Option[Long] =
-    params.get("asOf").map { v =>
-      try v.toLong
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(s"bad asOf: $v") }
-    }
+  private def asOfOf(params: Map[String, String]): Option[Long] = optLong(params, "asOf")
 
   private def fromAccept(ex: HttpExchange): Option[String] = {
     val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
@@ -494,7 +467,6 @@ class HttpShim(service: QueryService, port: Int = 0, poolSize: Int = 8,
         case e: IllegalArgumentException => (400, "text/plain", s"bad request: ${e.getMessage}")
         case e: graft.query.QueryParser.ParseException =>
           (400, "text/plain", s"bad request: ${e.getMessage}")
-        case e: NumberFormatException    => (400, "text/plain", s"bad request: ${e.getMessage}")
         // anything else is a SERVER fault (engine/Spark failure) — a 4xx
         // here would misdirect monitoring and suppress client retries
         case e: Exception =>

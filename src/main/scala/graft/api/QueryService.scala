@@ -20,17 +20,6 @@ case class Results(documents: Seq[Document]) {
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
       .replace("\"", "&quot;").replace("'", "&apos;")
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'            => "\\\""
-      case '\\'           => "\\\\"
-      case '\n'           => "\\n"
-      case '\r'           => "\\r"
-      case '\t'           => "\\t"
-      case c if c < ' '   => f"\\u${c.toInt}%04x"
-      case c              => c.toString
-    }
-
   /** The reference's XML media type (`Query.java:94-138`). */
   def toXml: String = {
     val sb = new StringBuilder("<results>")
@@ -44,11 +33,12 @@ case class Results(documents: Seq[Document]) {
   }
 
   def toJson: String = {
+    import QueryService.jstr
     val docs = documents.map { d =>
       val fs = d.fields
-        .map(f => s"""{"name":"${jsonEscape(f.name)}","value":"${jsonEscape(f.value)}"}""")
+        .map(f => s"""{"name":${jstr(f.name)},"value":${jstr(f.value)}}""")
         .mkString("[", ",", "]")
-      s"""{"id":"${jsonEscape(d.id)}","pointer":"${jsonEscape(d.pointer)}","fields":$fs}"""
+      s"""{"id":${jstr(d.id)},"pointer":${jstr(d.pointer)},"fields":$fs}"""
     }
     s"""{"documents":${docs.mkString("[", ",", "]")}}"""
   }
@@ -187,13 +177,15 @@ class QueryService(engine: WikiSearchEngine,
     * `{"count":N,"fast":bool}`. `fast` reports whether the index-only
     * path answered — i.e. the count came from plan-time postings with no
     * event-store access — the operational signal a result-count badge
-    * endpoint wants to monitor.
+    * endpoint wants to monitor. One engine call plans the query once;
+    * the fallback executes that same plan.
     */
   def count(q: String, auths: Seq[String] = Nil): String = {
-    val fast = engine.fastCount(q, auths)
-    val n = fast.getOrElse(
-      engine.countDocs(q, auths).collect().head.getAs[Long]("cnt"))
-    s"""{"count":$n,"fast":${fast.isDefined}}"""
+    val (n, fast) = engine.planCount(q, auths) match {
+      case Left(n)   => (n, true)
+      case Right(df) => (df.collect().head.getAs[Long]("cnt"), false)
+    }
+    s"""{"count":$n,"fast":$fast}"""
   }
 
   /** Keyset-paged BM25 retrieval (`WikiSearchEngine.rankPage`): the page

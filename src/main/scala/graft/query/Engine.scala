@@ -205,27 +205,16 @@ class WikiSearchEngine(
   // ---- public API ---------------------------------------------------------
 
   /** Run a query; returns (partition, language, docId, fields, DOCUMENT). */
-  def run(query: String, auths: Seq[String] = Nil): DataFrame = {
-    val ast0 = QueryParser.parse(query)
-    if (QExpr.allNegated(ast0))
-      throw new IllegalArgumentException(
-        s"all-negation queries are invalid (FieldIndexQueryReWriter.removeNegationViolations): $query")
-    validateNearPlacement(ast0, conjunctive = true)
-    val ast = rewriteQuery(ast0)
+  def run(query: String, auths: Seq[String] = Nil): DataFrame =
+    execute(new Planned(validated(query), auths))
 
-    val authFilter = langAuth(auths)
-
-    val analysis = new Analysis
-    analyze(ast, analysis) match {
-      case Some(tree) =>
-        // ONE plan-time index job resolves every leaf's postings and
-        // cardinality (the reference likewise reads the global index once
-        // at plan time, `RangeCalculator.queryGlobalIndex`); EQ postings
-        // come back as bounded local relations, so the candidate
-        // semi-join below broadcasts — no per-branch jobs, no repeated
-        // index scans.
-        val stats = collectLeafStats(tree, needCards(tree))
-        val cand  = materialize(tree, stats, authFilter, auths)
+  /** The event-store program for a planned query: candidates → event
+    * scan → residual filter → results.
+    */
+  private def execute(p: Planned): DataFrame = {
+    val authFilter = langAuth(p.auths)
+    p.cand match {
+      case Some(cand) =>
         // Candidates restrict the stored event view by semi-join (index
         // nested-loop doc fetch J3, as a distributed semi-join). When the
         // candidate set is driver-local its shard set is known at plan
@@ -255,20 +244,21 @@ class WikiSearchEngine(
         // nearEnforced: any f:near leaf in this tree materialized as a
         // NearLeaf intersection above — TRUE residual is sound HERE only
         finish(events.filter(
-          Compiler.compile(ast, config.unevaluatedFields, residualNorms,
+          Compiler.compile(p.ast, config.unevaluatedFields, residualNorms,
             nearEnforced = true)))
       case None => // full scan (AbstractQueryLogic.java:838-884)
         // no index plan ⇒ nothing enforces a NearLeaf ⇒ nearEnforced
         // stays false and a (theoretically unreachable) near term here
         // fails loudly instead of matching everything
         finish(eventView(authFilter, None)
-          .filter(Compiler.compile(ast, norms = residualNorms)))
+          .filter(Compiler.compile(p.ast, norms = residualNorms)))
     }
   }
 
   /** Count-only serving — "how many hits" without fetching any of them
     * (beyond the reference, whose query logics always emit the full
-    * result set). Returns one row, `cnt BIGINT`.
+    * result set). Returns one row, `cnt BIGINT`. Plans the query once
+    * (`planCount`).
     *
     * FAST PATH (`fastCount`): when the plan is pure boolean-over-EQ —
     * every leaf an `EqLeaf` whose postings carry no lossy `ignore` rows,
@@ -285,15 +275,22 @@ class WikiSearchEngine(
     *
     * Anything else (lossy rows, scans, near/phrase/fuzzy-fallback,
     * unevaluated fields) falls back to counting the residual-verified
-    * `run` — same result, executed distributed.
+    * `run` program of the SAME planned query — same result, executed
+    * distributed.
     */
   def countDocs(query: String, auths: Seq[String] = Nil): DataFrame =
-    fastCount(query, auths) match {
-      case Some(n) =>
-        spark.range(1).select(lit(n).cast("bigint").as("cnt"))
-      case None =>
-        run(query, auths).agg(count(lit(1)).cast("bigint").as("cnt"))
-    }
+    planCount(query, auths).fold(
+      n => spark.range(1).select(lit(n).cast("bigint").as("cnt")), identity)
+
+  /** One planning pass for a count: the driver-local fast-path count
+    * (Left), or the unexecuted fallback count over the same planned
+    * query (Right, one `cnt BIGINT` row). `QueryService.count` serves
+    * `{count, fast}` from this, so a fallback count plans once.
+    */
+  private[graft] def planCount(query: String, auths: Seq[String] = Nil): Either[Long, DataFrame] = {
+    val p = new Planned(validated(query), auths)
+    fastCountOf(p).toLeft(execute(p).agg(count(lit(1)).cast("bigint").as("cnt")))
+  }
 
   /** True iff the EXPRESSION (not just the plan) is computable exactly
     * from exact postings: EQ leaves on indexed fields, NE only in
@@ -326,27 +323,18 @@ class WikiSearchEngine(
     * requires residual verification (package-visible so the spec can
     * assert which path engaged).
     */
-  private[graft] def fastCount(query: String, auths: Seq[String] = Nil): Option[Long] = {
-    val ast0 = QueryParser.parse(query)
-    if (QExpr.allNegated(ast0))
-      throw new IllegalArgumentException(
-        s"all-negation queries are invalid (FieldIndexQueryReWriter.removeNegationViolations): $query")
-    validateNearPlacement(ast0, conjunctive = true)
-    val ast = rewriteQuery(ast0)
-    if (config.unevaluatedFields.nonEmpty || !exactCountable(ast)) return None
-    val analysis = new Analysis
-    analyze(ast, analysis).flatMap { tree =>
-      if (!treeLeaves(tree).forall(_.isInstanceOf[EqLeaf])) None
-      else {
-        val stats = collectLeafStats(tree, withScanCards = false)
-        if (!stats.valuesIterator.forall(_.rows.forall(r => !r.ignore))) None
-        else materialize(tree, stats, langAuth(auths), auths) match {
-          case LocalCand(docs, Nil, _) => Some(docs.size.toLong)
-          case _                       => None // defensive: shards imply lossy rows
-        }
-      }
-    }
-  }
+  private[graft] def fastCount(query: String, auths: Seq[String] = Nil): Option[Long] =
+    fastCountOf(new Planned(validated(query), auths))
+
+  /** The fast-path count of a planned query. Shape checks run before
+    * the planned value's lazy stats, so a declined shape costs no
+    * plan-time index job here.
+    */
+  private def fastCountOf(p: Planned): Option[Long] =
+    if (config.unevaluatedFields.nonEmpty || !exactCountable(p.ast) ||
+        !p.tree.exists(treeLeaves(_).forall(_.isInstanceOf[EqLeaf])) ||
+        p.stats.valuesIterator.exists(_.rows.exists(_.ignore))) None
+    else p.cand.collect { case LocalCand(docs, Nil, _) => docs.size.toLong }
 
   /** Document point-fetch — `ContentLogic.runQuery`
     * (`query/.../logic/ContentLogic.java:56-107`): `DOCUMENT:partition/lang/id`
@@ -814,17 +802,6 @@ class WikiSearchEngine(
       .select(col("docId"), col("language"))
       .orderBy("docId")
 
-  /** Ordered window form (the Lucene SpanNear-in-order shape, between
-    * `near` (any order) and `phraseSnippets`' adjacency): occurrence
-    * positions strictly increasing in `terms` order with total span ≤
-    * `k`. Same n-way stored-offset join; the predicate chains the
-    * order constraint.
-    */
-  def orderedNear(terms: Seq[String], k: Int, auths: Seq[String] = Nil): DataFrame =
-    nearDocKeys(terms, k, langAuth(auths), ordered = true)
-      .select(col("docId"), col("language"))
-      .orderBy("docId")
-
   /** The NEAR document-key set (full key, for plan composition): shared
     * by the public `near` surface and the `f:near` query-language leaf,
     * so the two cannot diverge.
@@ -951,10 +928,8 @@ class WikiSearchEngine(
     * scan) — a planning probe for tests/diagnostics; runs no jobs beyond
     * bare-term rewrites.
     */
-  private[query] def indexAnswerable(query: String): Boolean = {
-    val ast = rewriteQuery(QueryParser.parse(query))
-    analyze(ast, new Analysis).isDefined
-  }
+  private[query] def indexAnswerable(query: String): Boolean =
+    new Planned(validated(query), Nil).tree.isDefined
 
   /** Human-readable access-path report: the engine-level EXPLAIN (the
     * reference surfaces this through RangeCalculator debug logging; at
@@ -963,22 +938,21 @@ class WikiSearchEngine(
     * the materialization decision (driver-local broadcast vs
     * distributed, and the static shard footprint the event scan will
     * prune to). Runs the same single plan-time index job as `run`
-    * (served from the term cache when warm) but executes nothing.
+    * (served from the term cache when warm) but executes nothing. A
+    * query that fails validation reports `REJECTED: <reason>`.
     */
   def explainAccess(query: String, auths: Seq[String] = Nil): String = {
-    val ast0 = QueryParser.parse(query)
-    if (QExpr.allNegated(ast0))
-      return s"REJECTED: all-negation query: $query"
-    try validateNearPlacement(ast0, conjunctive = true)
-    catch { case e: IllegalArgumentException => return s"REJECTED: ${e.getMessage}" }
-    val ast = rewriteQuery(ast0)
-    analyze(ast, new Analysis) match {
+    val ast =
+      try validated(query)
+      catch { case e: IllegalArgumentException => return s"REJECTED: ${e.getMessage}" }
+    // scanCards: the report shows range/wildcard cardinalities even
+    // when no AND decision needs them
+    val p = new Planned(ast, auths, scanCards = true)
+    p.tree.zip(p.cand) match {
       case None =>
         "FULL SCAN: no index-answerable subtree; the residual predicate evaluates every event"
-      case Some(tree) =>
-        // withScanCards unconditionally: the report should show range/
-        // wildcard cardinalities even when no AND decision needs them
-        val stats = collectLeafStats(tree, withScanCards = true)
+      case Some((tree, cand)) =>
+        val stats = p.stats
         val sb = new StringBuilder("INDEX PATH\n")
         def render(n: PlanNode, indent: String): Unit = n match {
           case EqLeaf(tag, field, forms) =>
@@ -1009,8 +983,6 @@ class WikiSearchEngine(
               s"$indent  NOT ${g.field} IN {${g.forms.mkString(", ")}} (anti-join on exact postings)\n"))
         }
         render(tree, "  ")
-        val cand = materialize(tree, stats,
-          df => if (auths.isEmpty) df else df.filter(col("language").isin(auths: _*)), auths)
         val mat = cand match {
           case LocalCand(docs, Nil, card) =>
             s"candidates: DRIVER-LOCAL ${docs.size} docs (IN predicate on the event scan); est card=$card"
@@ -1028,6 +1000,39 @@ class WikiSearchEngine(
   }
 
   // ---- planning -----------------------------------------------------------
+
+  /** Step 1 of the ONE planning front end behind every query entry point
+    * (the reference's `AbstractQueryLogic.runQuery` lifecycle): parse →
+    * all-negation rule → near/phrase placement → rewrite. An
+    * IllegalArgumentException from here is a validation failure, which
+    * `explainAccess` reports as its `REJECTED` body.
+    */
+  private def validated(query: String): QExpr = {
+    val ast = QueryParser.parse(query)
+    if (QExpr.allNegated(ast))
+      throw new IllegalArgumentException(
+        s"all-negation queries are invalid (FieldIndexQueryReWriter.removeNegationViolations): $query")
+    validateNearPlacement(ast, conjunctive = true)
+    rewriteQuery(ast)
+  }
+
+  /** Step 2: the planned query `run`, `countDocs`/`fastCount`,
+    * `explainAccess` and `indexAnswerable` consume — the rewritten
+    * expression, its plan tree (None = full scan) and, forced only by
+    * the consumers that need them, the leaf stats of the ONE plan-time
+    * index job (the reference likewise reads the global index once at
+    * plan time, `RangeCalculator.queryGlobalIndex`) and the
+    * materialized candidates. `scanCards` collects range/wildcard
+    * cardinalities even where no AND decision needs them.
+    */
+  private final class Planned(val ast: QExpr, val auths: Seq[String],
+      scanCards: Boolean = false) {
+    val tree: Option[PlanNode] = analyze(ast, new Analysis)
+    lazy val stats: Map[Int, LeafStats] =
+      tree.fold(Map.empty[Int, LeafStats])(t => collectLeafStats(t, scanCards || needCards(t)))
+    lazy val cand: Option[MCand] =
+      tree.map(tree => materialize(tree, stats, langAuth(auths), auths))
+  }
 
   /** Unfielded bare terms → OR over the fields where the global index
     * knows the value (`AbstractQueryLogic.java:601-633`,
@@ -1056,9 +1061,9 @@ class WikiSearchEngine(
 
   /** The full pre-planning rewrite chain: bare terms fielded first (so
     * a bare synonym-bearing term expands too), then synonym expansion.
-    * Every query entry point (`run`, `countDocs`/`fastCount`,
-    * `explainAccess`) goes through THIS, so the plan and the residual
-    * always compile the same rewritten expression.
+    * Called only from `validated`, the one planning front end behind
+    * every query entry point, so the plan and the residual always
+    * compile the same rewritten expression.
     */
   private def rewriteQuery(e: QExpr): QExpr =
     rewriteSynonyms(rewriteBareTerms(e))
@@ -1143,21 +1148,10 @@ class WikiSearchEngine(
   private case class OrNode(children: Seq[PlanNode]) extends PlanNode
   private case class AndNode(positives: Seq[PlanNode], negatives: Seq[EqLeaf]) extends PlanNode
 
+  /** Leaf-tag source for one analysis: tags key the plan-time stats. */
   private final class Analysis {
-    val leaves = scala.collection.mutable.ArrayBuffer.empty[PlanNode]
     private var nextTag = 0
-    def eqLeaf(field: String, forms: Seq[String]): EqLeaf = {
-      val l = EqLeaf(nextTag, field, forms); nextTag += 1; leaves += l; l
-    }
-    def scanLeaf(ix: DataFrame, fiVerify: Option[DataFrame]): ScanLeaf = {
-      val l = ScanLeaf(nextTag, ix, fiVerify); nextTag += 1; leaves += l; l
-    }
-    def nearLeaf(field: String, terms: Seq[String], k: Int, ordered: Boolean): NearLeaf = {
-      val l = NearLeaf(nextTag, field, terms, k, ordered); nextTag += 1; leaves += l; l
-    }
-    def phraseLeaf(field: String, terms: Seq[String]): PhraseLeaf = {
-      val l = PhraseLeaf(nextTag, field, terms); nextTag += 1; leaves += l; l
-    }
+    def tag(): Int = { nextTag += 1; nextTag - 1 }
   }
 
   /** Symbolic plan for the expression, or None when it is not
@@ -1198,7 +1192,7 @@ class WikiSearchEngine(
       }.flatten
       val negatives = rest.collect {
         case t: Term if t.op == Op.NE && indexedFields.contains(t.field) =>
-          an.eqLeaf(t.field, probeForms(t.field, t.literal))
+          EqLeaf(an.tag(), t.field, probeForms(t.field, t.literal))
       }
       val all = fused ++ positives
       if (all.isEmpty) None else Some(AndNode(all, negatives))
@@ -1232,15 +1226,11 @@ class WikiSearchEngine(
     val d = fuzzyDist(f)
     if (!indexedFields.contains(field)) return None
     val qforms = probeForms(field, f.args(1))
-    // get/put, not computeIfAbsent: the synchronizedMap mutex must not be
-    // held across the Spark job below, or one cold fuzzy query would
-    // serialize every concurrent fuzzy planner behind its collect. A
-    // racing duplicate compute is idempotent (immutable snapshot).
-    val matched = Option(fuzzyCache.get((field, qforms, d))).getOrElse {
+    val matched = fuzzyCache.getOrElseUpdate((field, qforms, d)) {
       fuzzyVocabRuns.incrementAndGet()
       val qvars = spark.createDataFrame(
         qforms.flatMap(q => dels(q, d).map((_, q))).distinct).toDF("del", "q")
-      val terms = index.globalIndex
+      index.globalIndex
         .filter(col("fieldName") === field && length(col("fieldValue")) > 0)
         .select(col("fieldValue").as("term")).distinct()
         .withColumn("del", explode(delNeighborhood(col("term"), d)))
@@ -1249,12 +1239,10 @@ class WikiSearchEngine(
         .select("term").distinct()
         .limit(config.fuzzyExpandMax + 1)
         .collect().map(_.getString(0)).toSeq
-      fuzzyCache.put((field, qforms, d), terms)
-      terms
     }
     if (matched.size > config.fuzzyExpandMax) None
     else if (matched.isEmpty) Some(EmptyLeaf)
-    else Some(an.eqLeaf(field, matched))
+    else Some(EqLeaf(an.tag(), field, matched))
   }
 
   /** The optional maxDist arg of `f:fuzzy` (default 1; 2 = SymSpell
@@ -1285,8 +1273,7 @@ class WikiSearchEngine(
     */
   private def trigramNode(field: String, regex: String, an: Analysis): Option[PlanNode] = {
     val grams = WikiSearchEngine.requiredGrams(regex).getOrElse(return None)
-    // get/put, not computeIfAbsent — same mutex discipline as fuzzyCache.
-    val matched = Option(trigramCache.get((field, regex))).getOrElse {
+    val matched = trigramCache.getOrElseUpdate((field, regex)) {
       trigramProbeRuns.incrementAndGet()
       val cand = index.trigramIndex
         .filter(col("fieldName") === field && col("gram").isin(grams: _*))
@@ -1296,28 +1283,19 @@ class WikiSearchEngine(
         .select("fieldValue")
         .limit(config.regexExpandMax + 1)
         .collect().map(_.getString(0)).toSeq
-      val verified =
-        if (cand.size > config.regexExpandMax) cand // over cap: keep the marker size
-        else cand.filter(TextFunctions.jexlMatchesStr(_, regex))
-      trigramCache.put((field, regex), verified)
-      verified
+      if (cand.size > config.regexExpandMax) cand // over cap: keep the marker size
+      else cand.filter(TextFunctions.jexlMatchesStr(_, regex))
     }
     if (matched.size > config.regexExpandMax) None
     else if (matched.isEmpty) Some(EmptyLeaf)
-    else Some(an.eqLeaf(field, matched))
+    else Some(EqLeaf(an.tag(), field, matched))
   }
 
   /** Driver-side LRU of (field, regex) → verified vocabulary expansion —
     * the `fuzzyCache` analogue for the trigram access path; hot opaque
     * regexes plan with zero Spark jobs.
     */
-  private val trigramCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, String), Seq[String]](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String), Seq[String]]): Boolean =
-          size() > 1024
-      })
+  private val trigramCache = new graft.Lru[(String, String), Seq[String]](1024)
 
   /** Count of cold trigram probe jobs actually run (cache-miss metric). */
   private[query] val trigramProbeRuns = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -1328,13 +1306,7 @@ class WikiSearchEngine(
     * Entries are ≤ fuzzyExpandMax+1 terms; safe to share — one
     * immutable snapshot.
     */
-  private val fuzzyCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Seq[String], Int), Seq[String]](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Seq[String], Int), Seq[String]]): Boolean =
-          size() > 1024
-      })
+  private val fuzzyCache = new graft.Lru[(String, Seq[String], Int), Seq[String]](1024)
 
   /** Count of cold fuzzy vocabulary jobs actually run — a cache-miss
     * metric for serving dashboards (and the spec's observability hook).
@@ -1392,7 +1364,7 @@ class WikiSearchEngine(
     require(terms.size >= 2, s"$fn needs at least two terms: $fn(${f.args.mkString(", ")})")
     // literals normalize like TEXT literals — positional tokens are the
     // TEXT tokenizer's output for every declared field (see phraseNode)
-    an.nearLeaf(field0, terms.map(normalizeLit("TEXT", _)), k, ordered)
+    NearLeaf(an.tag(), field0, terms.map(normalizeLit("TEXT", _)), k, ordered)
   }
 
   /** `f:phrase(TEXT, 'a b ...')` → ordered-adjacency plan leaf. The
@@ -1419,7 +1391,7 @@ class WikiSearchEngine(
       .map(normalizeLit("TEXT", _))
     require(terms.size >= 2,
       s"f:phrase needs at least two tokens (use $field0 == '...' for one): '$phrase'")
-    an.phraseLeaf(field0, terms)
+    PhraseLeaf(an.tag(), field0, terms)
   }
 
   /** f:near and f:phrase are index-ENFORCED (their residuals compile to
@@ -1452,7 +1424,7 @@ class WikiSearchEngine(
     if (!indexedFields.contains(t.field)) return None
     val norm = normalizeLit(t.field, t.literal)
     t.op match {
-      case Op.EQ => Some(an.eqLeaf(t.field, probeForms(t.field, t.literal)))
+      case Op.EQ => Some(EqLeaf(an.tag(), t.field, probeForms(t.field, t.literal)))
       case Op.RE =>
         // In unevaluated mode the residual may constant-fold a SIBLING
         // branch to TRUE (an OR over an unevaluated term), so a lossy
@@ -1465,12 +1437,12 @@ class WikiSearchEngine(
           else None
         classifyRegex(norm) match {
           case Prefix(p) => // trailing wildcard → forward index prefix range
-            Some(an.scanLeaf(
+            Some(ScanLeaf(an.tag(),
               index.globalIndex
                 .filter(col("fieldName") === t.field && col("fieldValue").startsWith(p)),
               fi(_.startsWith(p))))
           case Suffix(s) => // leading wildcard → reverse index prefix range
-            Some(an.scanLeaf(
+            Some(ScanLeaf(an.tag(),
               index.reverseIndex
                 .filter(col("fieldName") === t.field &&
                   col("fieldValue").startsWith(s.reverse)),
@@ -1557,7 +1529,7 @@ class WikiSearchEngine(
     val fiVerify = // see termNode: ANY unevaluated field forces exactness
       if (config.unevaluatedFields.nonEmpty) Some(exactFieldPred(field, boundsPred))
       else None
-    Some(an.scanLeaf(ix, fiVerify))
+    Some(ScanLeaf(an.tag(), ix, fiVerify))
   }
 
   /** True iff some AND node will need per-branch cardinalities to pick
@@ -1587,18 +1559,12 @@ class WikiSearchEngine(
     * terms absent from the index). Safe to share across concurrent
     * queries: the engine serves one immutable index snapshot.
     */
-  private val termCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Seq[String]), Seq[IndexRow]](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Seq[String]), Seq[IndexRow]]): Boolean =
-          size() > config.termCacheSize
-      })
+  private val termCache = new graft.Lru[(String, Seq[String]), Seq[IndexRow]](config.termCacheSize)
 
-  /** Leaves actually reachable from the materialized plan tree — NOT the
-    * Analysis buffer, which may hold orphans from subtrees analyze()
-    * rejected (e.g. an OR branch with an unanswerable sibling); orphans
-    * would add dead pruned scans to the plan-time job.
+  /** Leaves actually reachable from the plan tree. Subtrees analyze()
+    * rejected (e.g. an OR branch with an unanswerable sibling) still
+    * consumed tags, but no reachable node carries them, so they add no
+    * dead pruned scans to the plan-time job.
     */
   private def treeLeaves(n: PlanNode): Seq[PlanNode] = n match {
     case l: EqLeaf         => Seq(l)
@@ -1624,10 +1590,7 @@ class WikiSearchEngine(
     val scans  = if (withScanCards) leaves.collect { case l: ScanLeaf => l } else Nil
     // single atomic get per key — a containsKey/get pair could race with
     // a concurrent query's LRU eviction between the two calls
-    val lookups =
-      if (config.termCacheSize > 0)
-        eqs.map(l => l -> Option(termCache.get((l.field, l.forms))))
-      else eqs.map(l => l -> None)
+    val lookups = eqs.map(l => l -> termCache.get((l.field, l.forms)))
     val hits   = lookups.collect { case (l, Some(rows)) => (l, rows) }
     val misses = lookups.collect { case (l, None) => l }
     val cachedStats = hits.map { case (l, rows) =>
@@ -1652,7 +1615,7 @@ class WikiSearchEngine(
     val fetched = misses.map { l =>
       val ixRows = byTag.getOrElse(l.tag, Array.empty).toSeq.map(r => IndexRow(
         r.getInt(1), r.getString(2), r.getLong(3), r.getBoolean(4), r.getSeq[String](5)))
-      if (config.termCacheSize > 0) termCache.put((l.field, l.forms), ixRows)
+      termCache.put((l.field, l.forms), ixRows)
       l.tag -> LeafStats(ixRows, ixRows.map(_.count).sum)
     }
     val scanStats = scans.map { l =>

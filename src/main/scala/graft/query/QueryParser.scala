@@ -214,21 +214,13 @@ object QueryParser {
 
   // Bounded parse memo — the reference keeps a Murmur-keyed LRU of parsed
   // queries (`QueryParser.java:241-308`, `QueryEvaluator.java:51-56`).
-  private val memo = new java.util.LinkedHashMap[String, QExpr](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, QExpr]): Boolean = size > 128
-  }
+  private val memo = new graft.Lru[String, QExpr](128)
 
   /** Parse + normalize (De Morgan to leaves, flattened conjunctions). */
-  def parse(query: String): QExpr = memo.synchronized {
-    val cached = memo.get(query)
-    if (cached != null) cached
-    else {
-      val p = new P(lex(query))
-      val e = p.parseExpr()
-      if (!p.atEnd) throw ParseException(s"trailing tokens after position ${p.pos} in: $query")
-      val n = QExpr.normalize(e)
-      memo.put(query, n)
-      n
-    }
+  def parse(query: String): QExpr = memo.getOrElseUpdate(query) {
+    val p = new P(lex(query))
+    val e = p.parseExpr()
+    if (!p.atEnd) throw ParseException(s"trailing tokens after position ${p.pos} in: $query")
+    QExpr.normalize(e)
   }
 }

@@ -13,12 +13,14 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 class HttpShimSpec extends SparkSuite {
 
-  private lazy val shim: HttpShim = {
+  private lazy val ix = {
     val fixture  = getClass.getResource("/enwiki-test.xml").getPath
     val articles = XmlIngest.readArticles(spark, fixture)
-    val ix       = IndexBuilder.fromArticles(spark, articles, numPartitions = 1).cacheAll()
-    new HttpShim(new QueryService(new WikiSearchEngine(spark, ix))).start()
+    IndexBuilder.fromArticles(spark, articles, numPartitions = 1).cacheAll()
   }
+
+  private lazy val shim: HttpShim =
+    new HttpShim(new QueryService(new WikiSearchEngine(spark, ix))).start()
 
   override def afterAll(): Unit = {
     try shim.stop()
@@ -73,6 +75,25 @@ class HttpShimSpec extends SparkSuite {
     val (status, ct, body) = get(s"/query?$q", accept = Some("text/html"))
     assert(status == 200 && ct.startsWith("text/html"))
     assert(body.startsWith("<table>") && body.contains("<td>655</td>"))
+  }
+
+  test("an unsupported format is a 400 before the query runs") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counting = new QueryService(new WikiSearchEngine(spark, ix)) {
+      override def query(q: String, auths: Seq[String], limit: Int): Results = {
+        calls.incrementAndGet()
+        super.query(q, auths, limit)
+      }
+    }
+    val shimC = new HttpShim(counting).start()
+    def status(path: String): Int =
+      URI.create(s"http://127.0.0.1:${shimC.boundPort}$path").toURL
+        .openConnection().asInstanceOf[HttpURLConnection].getResponseCode
+    try {
+      assert(status(s"/query?$q&format=bogus") == 400)
+      assert(calls.get == 0, "the query ran before the format was rejected")
+      assert(status(s"/query?$q&format=json") == 200 && calls.get == 1)
+    } finally shimC.stop()
   }
 
   test("content route round-trips a document pointer") {

@@ -30,8 +30,9 @@ class CountServingSpec extends SparkSuite {
       if (i % 4 == 0) "de" else "en", s"src${i % 3}", 100L + i)
   }.toDF("doc_id", "text", "lang", "source", "n_chars")
 
-  private lazy val eng = new WikiSearchEngine(spark,
-    IndexBuilder.fromDocumentsTable(spark, docs, numPartitions = 2).cacheAll())
+  private lazy val ix = IndexBuilder.fromDocumentsTable(spark, docs, numPartitions = 2).cacheAll()
+
+  private lazy val eng = new WikiSearchEngine(spark, ix)
 
   private def cnt(df: org.apache.spark.sql.DataFrame): Long =
     df.collect().map(r => (r.getLong(0))).head
@@ -104,6 +105,36 @@ class CountServingSpec extends SparkSuite {
       assert(sc.statusTracker.getJobIdsForGroup("count-serving-warm").isEmpty,
         "warm fast count submitted Spark jobs")
     } finally sc.clearJobGroup()
+  }
+
+  test("a fallback count plans once: it submits exactly the jobs of one counted run") {
+    // a bare lossy term: the uncached bare-term field lookup and the
+    // plan-time postings job are plan work, so any re-planning pass
+    // shows up as extra jobs. Fresh engines keep both sides cold.
+    val sc = spark.sparkContext
+    def jobsOf[T](group: String)(body: => T): (T, Int) = {
+      sc.setJobGroup(group, "count planning passes")
+      val out = try body finally sc.clearJobGroup()
+      // the status tracker fills from the listener bus asynchronously but
+      // in order: once a later marker job is visible, so is every job of
+      // `group`
+      val marker = s"$group-marker"
+      sc.setJobGroup(marker, "listener bus marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      (out, sc.statusTracker.getJobIdsForGroup(group).length)
+    }
+    val q = "hot"
+    val (_, runJobs) = jobsOf("count-plan-once-run") {
+      new WikiSearchEngine(spark, ix).run(q).agg(count(lit(1))).collect()
+    }
+    val (body, countJobs) = jobsOf("count-plan-once-count") {
+      new graft.api.QueryService(new WikiSearchEngine(spark, ix)).count(q)
+    }
+    assert(body == s"""{"count":${eng.run(q).count()},"fast":false}""", body)
+    assert(countJobs == runJobs, s"fallback /count ran $countJobs jobs, a counted run $runJobs")
   }
 
   test("countDocs schema is one BIGINT cnt row on both paths") {
