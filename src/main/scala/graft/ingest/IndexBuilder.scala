@@ -84,8 +84,7 @@ case class WikiIndex(
     * pruned range read and a full index scan per suffix query.
     */
   def reverseIndex: DataFrame =
-    storedReverse.getOrElse(
-      globalIndex.withColumn("fieldValue", reverse(col("fieldValue"))))
+    storedReverse.getOrElse(WikiIndex.deriveReverse(globalIndex))
 
   /** Trigram index over the VOCABULARY (pg_trgm posture): one row per
     * distinct (fieldName, gram, fieldValue), derived as a projection of
@@ -169,15 +168,8 @@ case class WikiIndex(
       .repartition(col("fieldName"))
       .sortWithinPartitions("fieldValue")
       .write.mode("overwrite").parquet(s"$dir/global_index")
-    globalIndex
-      .withColumn("fieldValue", reverse(col("fieldValue")))
-      .repartition(col("fieldName"))
-      .sortWithinPartitions("fieldValue") // sorted by REVERSED value → suffix probes prune
-      .write.mode("overwrite").parquet(s"$dir/reverse_index")
-    WikiIndex.deriveTrigrams(globalIndex)
-      .repartition(col("fieldName"))
-      .sortWithinPartitions("gram") // sorted by gram → infix probes prune
-      .write.mode("overwrite").parquet(s"$dir/trigram_index")
+    WikiIndex.sortedReverse(globalIndex).write.mode("overwrite").parquet(s"$dir/reverse_index")
+    WikiIndex.sortedTrigrams(globalIndex).write.mode("overwrite").parquet(s"$dir/trigram_index")
     metadata.coalesce(1).write.mode("overwrite").parquet(s"$dir/metadata")
     termPostings
       .repartition(col("partition"))
@@ -217,34 +209,26 @@ case class WikiIndex(
 }
 
 object WikiIndex {
-  def load(spark: SparkSession, dir: String): WikiIndex = WikiIndex(
-    docsFields = spark.read.parquet(s"$dir/docs_fields"),
-    documents = spark.read.parquet(s"$dir/documents"),
-    globalIndex = spark.read.parquet(s"$dir/global_index"),
-    metadata = spark.read.parquet(s"$dir/metadata"),
-    termPostings = spark.read.parquet(s"$dir/term_postings"),
-    storedEvents = Some(spark.read.parquet(s"$dir/events")),
-    // older saved dirs may predate the persisted reverse/trigram indexes
-    // — fall back to the derived projections
-    storedReverse =
-      try Some(spark.read.parquet(s"$dir/reverse_index"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None },
-    storedTrigram =
-      try Some(spark.read.parquet(s"$dir/trigram_index"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None },
-    storedDocLengths =
-      try Some(spark.read.parquet(s"$dir/doc_lengths"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None },
-    storedCorpusStats =
-      try Some(spark.read.parquet(s"$dir/corpus_stats"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None },
-    fieldPostings =
-      try Some(spark.read.parquet(s"$dir/field_postings"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None },
-    storedSynonyms =
-      try Some(spark.read.parquet(s"$dir/synonyms"))
+  def load(spark: SparkSession, dir: String): WikiIndex = {
+    // older saved dirs may predate the optional parts — fall back to the
+    // derived projections
+    def optional(part: String): Option[DataFrame] =
+      try Some(spark.read.parquet(s"$dir/$part"))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
-  )
+    WikiIndex(
+      docsFields = spark.read.parquet(s"$dir/docs_fields"),
+      documents = spark.read.parquet(s"$dir/documents"),
+      globalIndex = spark.read.parquet(s"$dir/global_index"),
+      metadata = spark.read.parquet(s"$dir/metadata"),
+      termPostings = spark.read.parquet(s"$dir/term_postings"),
+      storedEvents = Some(spark.read.parquet(s"$dir/events")),
+      storedReverse = optional("reverse_index"),
+      storedTrigram = optional("trigram_index"),
+      storedDocLengths = optional("doc_lengths"),
+      storedCorpusStats = optional("corpus_stats"),
+      fieldPostings = optional("field_postings"),
+      storedSynonyms = optional("synonyms"))
+  }
 
   /** The persisted (kind, name, value) synonym table — the ONE
     * serialization shared by batch stores (`withSynonyms` → `save`) and
@@ -271,6 +255,22 @@ object WikiIndex {
       .withColumn("gram",
         explode(graft.functions.TextFunctions.charTrigrams(col("fieldValue"))))
       .select("fieldName", "gram", "fieldValue")
+
+  /** The global index's rows keyed by reversed value — the derivation
+    * behind `reverseIndex`'s fallback, `save` and the live parts.
+    */
+  def deriveReverse(globalIndex: DataFrame): DataFrame =
+    globalIndex.withColumn("fieldValue", reverse(col("fieldValue")))
+
+  /** The persisted access-path layouts shared by `save` and the
+    * compacted live base: sorted by REVERSED value (suffix probes prune)
+    * and by gram (infix probes prune).
+    */
+  def sortedReverse(globalIndex: DataFrame): DataFrame =
+    deriveReverse(globalIndex).repartition(col("fieldName")).sortWithinPartitions("fieldValue")
+
+  def sortedTrigrams(globalIndex: DataFrame): DataFrame =
+    deriveTrigrams(globalIndex).repartition(col("fieldName")).sortWithinPartitions("gram")
 }
 
 /** Batch index construction — the Spark shape of the reference's ingest
@@ -303,98 +303,35 @@ object IndexBuilder {
     // field names are stored uppercase; accept any casing in the declaration
     val offsetsUp = offsetsFields.map(_.toUpperCase)
     validateFieldDecls(Set("ID", "TITLE", "TIMESTAMP", "COMMENTS"), Set.empty, offsetsUp)
-    import spark.implicits._
     graft.plans.GraftFunctions.register(spark)
-    val base = articles.toDF
-      .withColumn("partition", pmod(col("id"), lit(numPartitions)).cast("int"))
-      .withColumn("docId", col("id").cast("string"))
+    val base = documentKeys(articles.toDF, "id", numPartitions)
     base.cache()
-
     // Event fields {ID, TITLE, TIMESTAMP, COMMENTS} (ArticleExtractor.java:81-88)
-    val fieldCols = map(
-      lit("ID"), col("id").cast("string"),
-      lit("TITLE"), col("title"),
-      lit("TIMESTAMP"), col("timestamp").cast("string"),
-      lit("COMMENTS"), col("comments"))
-    val docsFields = base
-      .select(col("partition"), col("language"), col("docId"), explode(fieldCols).as(Seq("fieldName", "fieldValue")))
-      .where(col("fieldValue").isNotNull)
-
-    val documents = base.select(
-      col("partition"), col("language"), col("docId"),
-      base64(col("text").cast("binary")).as("textB64"))
-
-    // Index rows: normalized field values + distinct TEXT tokens
-    // (WikipediaMapper.java:155-191).
-    val normalizedFields = docsFields.select(
-      when(col("fieldName") === "TITLE",
-        call_function("graft_normalize", col("fieldValue"))) // native codegen'd expr
-        .otherwise(col("fieldValue")).as("fieldValue"),
-      col("fieldName"), col("partition"), col("language"), col("docId"))
-    val tokenRows = base.select(
-      col("partition"), col("language"), col("docId"),
-      explode(array_distinct(TextFunctions.tokenize(col("text")))).as("fieldValue"))
-      .withColumn("fieldName", lit("TEXT"))
-      .select("fieldValue", "fieldName", "partition", "language", "docId")
-
+    val id = "ID" -> col("id").cast("string")
+    val timestamp = "TIMESTAMP" -> col("timestamp").cast("string")
+    val comments = "COMMENTS" -> col("comments")
+    val title = col("title")
+    val lcTitle = call_function("graft_normalize", title) // native codegen'd expr
     // TITLE carries TWO normalizers (reference parity: one metadata row
     // per normalizer class, `WikipediaIngester.java:129-136` +
     // `FieldIndexQueryReWriter.orNormalizedTerms`): the Lc-normalized
     // form plus the raw form where they differ, so both an exact-cased
     // and a folded query literal hit the index.
-    val rawTitleRows = docsFields
-      .filter(col("fieldName") === "TITLE" &&
-        col("fieldValue") =!= call_function("graft_normalize", col("fieldValue")))
-      .select(col("fieldValue"), col("fieldName"), col("partition"), col("language"), col("docId"))
-    val globalIndex =
-      buildGlobalIndex(normalizedFields.unionByName(tokenRows).unionByName(rawTitleRows))
-
-    val metadata = {
-      val e = Seq("ID", "TITLE", "TIMESTAMP", "COMMENTS").map(f => (f, "e", null: String))
-      val i = Seq(
-        ("ID", "i", NoOpNormalizer), ("TITLE", "i", LcNormalizer),
-        ("TITLE", "i", NoOpNormalizer),
-        ("TIMESTAMP", "i", NoOpNormalizer), ("TEXT", "i", LcNormalizer))
-      val p = offsetsUp.toSeq.sorted.map(f => (f, "p", null: String))
-      // LAZY static rows: the per-language fan-out is a crossJoin of the
-      // distinct-language frame with a literal local relation instead of
-      // an eager `.distinct().collect()` — a builder whose caller never
-      // evaluates `metadata` (e.g. the incremental-merge path consuming
-      // only `globalIndex`) no longer pays a full corpus pass at
-      // construction time. Same rows, same schema; row order is
-      // irrelevant (metadata is a catalog, collected to a map).
-      // EVALUATE-ONCE expectation: the distinct-language scan is now
-      // part of this plan, so every evaluation of an uncached metadata
-      // frame re-runs it (and needs `base`'s session alive). save()
-      // writes it once; the serving path caches it (engine() does
-      // ix.metadata.cache()) — a caller evaluating metadata repeatedly
-      // should do the same.
-      val fieldsDf = (e ++ i ++ p).toDF("fieldName", "kind", "normalizer")
-      val static = base.select(col("language")).distinct()
-        .crossJoin(fieldsDf)
-        .select(col("fieldName"), col("kind"), col("language"), col("normalizer"))
-        .withColumn("frequency", lit(null).cast("bigint"))
-      static.unionByName(
-        frequencyRows(docsFields.unionByName(
-          tokenRows.select("partition", "language", "docId", "fieldName", "fieldValue"))))
-    }
-
-    val termPostings = buildTermPostings(
-      base.select(col("partition"), col("language"), col("docId"),
-        TextFunctions.tokenize(col("text")).as("tokens")))
-
-    val fieldPostings =
-      fieldPostingsFor(docsFields, offsetsUp, TextFunctions.tokenize(_))
-
-    WikiIndex(docsFields, documents, globalIndex, metadata, termPostings,
-      fieldPostings = fieldPostings)
+    build(Source(base,
+      events = Seq(id, "TITLE" -> title, timestamp, comments),
+      indexed = Seq(id, "TITLE" -> lcTitle, "TITLE" -> when(title =!= lcTitle, title),
+        timestamp, comments),
+      indexNulls = false,
+      catalog = Seq("ID" -> NoOpNormalizer, "TITLE" -> LcNormalizer, "TITLE" -> NoOpNormalizer,
+        "TIMESTAMP" -> NoOpNormalizer, "TEXT" -> LcNormalizer),
+      tokenizer = TextFunctions.tokenize(_), offsets = offsetsUp))
   }
 
   /** Build from the driver's synthetic `documents` table
     * (doc_id, text, lang, source, n_chars) — same engine surface over the
     * harness corpus. Whitespace tokenizer for oracle parity.
-    */
-  /** `extraFields` declares ADDITIONAL event fields as named Column
+    *
+    * `extraFields` declares ADDITIONAL event fields as named Column
     * expressions over the documents schema (e.g. a derived headline or
     * section column) — they join the pivoted event view and the
     * residual's reach, but NOT the shared `documentIndexRows`
@@ -407,111 +344,135 @@ object IndexBuilder {
     */
   def fromDocumentsTable(spark: SparkSession, docs: DataFrame, numPartitions: Int,
       extraFields: Map[String, org.apache.spark.sql.Column] = Map.empty,
-      offsetsFields: Set[String] = Set.empty): WikiIndex = {
-    import spark.implicits._
-    val offsetsUp = offsetsFields.map(_.toUpperCase)
-    val extrasUp = extraFields.keys.map(_.toUpperCase).toSet
-    validateFieldDecls(Set("ID", "SOURCE", "NCHARS"), extrasUp, offsetsUp)
-    val base = docs
-      .withColumn("partition", pmod(col("doc_id"), lit(numPartitions)).cast("int"))
-      .withColumn("docId", col("doc_id").cast("string"))
-      .withColumnRenamed("lang", "language")
-
-    val fieldCols = map(Seq(
-      Seq(lit("ID"), col("doc_id").cast("string")),
-      Seq(lit("SOURCE"), col("source")),
-      Seq(lit("NCHARS"), col("n_chars").cast("string"))).flatten ++
-      extraFields.toSeq.sortBy(_._1).flatMap { case (n, c) =>
-        Seq(lit(n.toUpperCase), c.cast("string"))
-      }: _*)
-    val docsFields = base
-      .select(col("partition"), col("language"), col("docId"),
-        explode(fieldCols).as(Seq("fieldName", "fieldValue")))
-      .where(col("fieldValue").isNotNull)
-
-    val documents = base.select(
-      col("partition"), col("language"), col("docId"),
-      base64(col("text").cast("binary")).as("textB64"))
-
-    val tokenRows = base.select(
-      col("partition"), col("language"), col("docId"),
-      explode(array_distinct(TextFunctions.tokenizeWs(col("text")))).as("fieldValue"))
-      .withColumn("fieldName", lit("TEXT"))
-      .select("fieldValue", "fieldName", "partition", "language", "docId")
-
-    val globalIndex = buildGlobalIndex(documentIndexRows(docs, numPartitions))
-
-    val metadata = {
-      val fields = Seq(
-        ("ID", "e", null: String), ("SOURCE", "e", null: String), ("NCHARS", "e", null: String),
-        ("ID", "i", NoOpNormalizer), ("SOURCE", "i", NoOpNormalizer),
-        ("NCHARS", "i", NoOpNormalizer), ("TEXT", "i", NoOpNormalizer)) ++
-        extraFields.keys.toSeq.sorted.map(n => (n.toUpperCase, "e", null: String)) ++
-        offsetsUp.toSeq.sorted.map(f => (f, "p", null: String))
-      // LAZY static rows (see fromArticles): no eager distinct+collect —
-      // ws_index_incremental builds two indexes per run and consumes only
-      // their globalIndex, so the eager language collect was two wasted
-      // corpus passes per invocation.
-      val fieldsDf = fields.toDF("fieldName", "kind", "normalizer")
-      val static = base.select(col("language")).distinct()
-        .crossJoin(fieldsDf)
-        .select(col("fieldName"), col("kind"), col("language"), col("normalizer"))
-        .withColumn("frequency", lit(null).cast("bigint"))
-      static.unionByName(
-        frequencyRows(docsFields.unionByName(
-          tokenRows.select("partition", "language", "docId", "fieldName", "fieldValue"))))
-    }
-
-    val termPostings = buildTermPostings(
-      base.select(col("partition"), col("language"), col("docId"),
-        TextFunctions.tokenizeWs(col("text")).as("tokens")))
-
-    val fieldPostings =
-      fieldPostingsFor(docsFields, offsetsUp, TextFunctions.tokenizeWs(_))
-
-    WikiIndex(docsFields, documents, globalIndex, metadata, termPostings,
-      fieldPostings = fieldPostings)
-  }
+      offsetsFields: Set[String] = Set.empty): WikiIndex =
+    build(documentsSource(docs, numPartitions, extraFields, offsetsFields))
 
   /** The (fieldValue, fieldName, partition, language, docId) index input
-    * rows for a `documents`-table batch — the shared extraction behind
-    * `fromDocumentsTable`'s global index AND the streaming live-ingest
-    * deltas (`streaming/LiveIngest`): both paths index identically by
+    * rows for a `documents`-table batch — `fromDocumentsTable`'s own
+    * index-row step, shared with the streaming live-ingest deltas
+    * (`streaming/LiveIngest`): both paths index identically by
     * construction, so an incrementally-merged index equals a from-scratch
     * build exactly (A1 merge associativity).
     */
   def documentIndexRows(docs: DataFrame, numPartitions: Int): DataFrame = {
-    val base = docs
-      .withColumn("partition", pmod(col("doc_id"), lit(numPartitions)).cast("int"))
-      .withColumn("docId", col("doc_id").cast("string"))
-      .withColumnRenamed("lang", "language")
-    val fieldCols = map(
-      lit("ID"), col("doc_id").cast("string"),
-      lit("SOURCE"), col("source"),
-      lit("NCHARS"), col("n_chars").cast("string"))
-    val fieldRows = base
-      .select(col("partition"), col("language"), col("docId"),
-        explode(fieldCols).as(Seq("fieldName", "fieldValue")))
-      .select("fieldValue", "fieldName", "partition", "language", "docId")
-    val tokenRows = base.select(
-      col("partition"), col("language"), col("docId"),
-      explode(array_distinct(TextFunctions.tokenizeWs(col("text")))).as("fieldValue"))
-      .withColumn("fieldName", lit("TEXT"))
-      .select("fieldValue", "fieldName", "partition", "language", "docId")
-    fieldRows.unionByName(tokenRows)
+    val src = documentsSource(docs, numPartitions, Map.empty, Set.empty)
+    indexRows(src, tokenRows(tokensOf(src)))
   }
 
-  /** Per-(field, language) ingested-occurrence counts — the reference's
-    * metadata `f` column family (SummingCombiner totals,
-    * `WikipediaIngester.java:129-136`): one row (fieldName, "f",
-    * language, null, frequency) per pair. Map-side-combined count, tiny
-    * output.
+  /** `(partition, docId)` for documents keyed by the id column `id` —
+    * the reference's `id % numPartitions` partitioner, shared by both
+    * builds and the live delete markers.
     */
-  private def frequencyRows(rows: DataFrame): DataFrame =
-    rows.groupBy("fieldName", "language")
-      .agg(count(lit(1)).as("frequency"))
-      .select(col("fieldName"), lit("f").as("kind"), col("language"),
-        lit(null).cast("string").as("normalizer"), col("frequency"))
+  def documentKeys(docs: DataFrame, id: String, numPartitions: Int): DataFrame =
+    docs.withColumn("partition", pmod(col(id), lit(numPartitions)).cast("int"))
+      .withColumn("docId", col(id).cast("string"))
+
+  /** What the two ingest front ends differ in: `base` (one row per
+    * document with `partition`, `language`, `docId`, `text`), the event
+    * fields over it, the indexed values in their normalizer forms (a
+    * field repeats once per form; a null value is dropped unless
+    * `indexNulls` — the documents table has always indexed a null stock
+    * value as its own row), the catalog's (fieldName, normalizer) rows,
+    * the tokenizer, and the fields declared positional.
+    */
+  private case class Source(base: DataFrame, events: Seq[(String, Column)],
+      indexed: Seq[(String, Column)], indexNulls: Boolean, catalog: Seq[(String, String)],
+      tokenizer: Column => Column, offsets: Set[String])
+
+  private def documentsSource(docs: DataFrame, numPartitions: Int,
+      extraFields: Map[String, Column], offsetsFields: Set[String]): Source = {
+    val offsets = offsetsFields.map(_.toUpperCase)
+    validateFieldDecls(Set("ID", "SOURCE", "NCHARS"),
+      extraFields.keys.map(_.toUpperCase).toSet, offsets)
+    val stock = Seq("ID" -> col("doc_id").cast("string"), "SOURCE" -> col("source"),
+      "NCHARS" -> col("n_chars").cast("string"))
+    Source(documentKeys(docs, "doc_id", numPartitions).withColumnRenamed("lang", "language"),
+      events = stock ++ extraFields.toSeq.sortBy(_._1).map { case (n, c) =>
+        n.toUpperCase -> c.cast("string") },
+      indexed = stock, indexNulls = true,
+      catalog = (stock.map(_._1) :+ "TEXT").map(_ -> NoOpNormalizer),
+      tokenizer = TextFunctions.tokenizeWs(_), offsets = offsets)
+  }
+
+  /** The one build behind both front ends: the base once, the tokenizer
+    * applied to the text once, and every table derived from the two.
+    */
+  private def build(src: Source): WikiIndex = {
+    val spark = src.base.sparkSession
+    import spark.implicits._
+    val tokens = tokensOf(src)
+    val docsFields = fieldRows(src.base, src.events).where(col("fieldValue").isNotNull)
+    val documents = src.base.select(
+      col("partition"), col("language"), col("docId"),
+      base64(col("text").cast("binary")).as("textB64"))
+    // Index rows: normalized field values + distinct TEXT tokens
+    // (WikipediaMapper.java:155-191).
+    val textRows = tokenRows(tokens)
+    val globalIndex = buildGlobalIndex(indexRows(src, textRows))
+
+    val metadata = {
+      val fieldsDf = (src.events.map(f => (f._1, "e", null: String)) ++
+        src.catalog.map { case (f, n) => (f, "i", n) } ++
+        src.offsets.toSeq.sorted.map(f => (f, "p", null: String)))
+        .toDF("fieldName", "kind", "normalizer")
+      // LAZY static rows: the per-language fan-out is a crossJoin of the
+      // distinct-language frame with a literal local relation instead of
+      // an eager `.distinct().collect()` — a builder whose caller never
+      // evaluates `metadata` (e.g. ws_index_incremental, consuming only
+      // `globalIndex`) pays no corpus pass at construction time. Row
+      // order is irrelevant (metadata is a catalog, collected to a map).
+      // EVALUATE-ONCE expectation: the distinct-language scan is part of
+      // this plan, so every evaluation of an uncached metadata frame
+      // re-runs it (and needs `base`'s session alive). save() writes it
+      // once; the serving path caches it (engine() does
+      // ix.metadata.cache()) — a caller evaluating metadata repeatedly
+      // should do the same.
+      val static = src.base.select(col("language")).distinct()
+        .crossJoin(fieldsDf)
+        .select(col("fieldName"), col("kind"), col("language"), col("normalizer"))
+        .withColumn("frequency", lit(null).cast("bigint"))
+      // Per-(field, language) ingested-occurrence counts — the
+      // reference's metadata `f` column family (SummingCombiner totals,
+      // `WikipediaIngester.java:129-136`). Map-side-combined, tiny output.
+      val frequency = docsFields.unionByName(textRows)
+        .groupBy("fieldName", "language").agg(count(lit(1)).as("frequency"))
+        .select(col("fieldName"), lit("f").as("kind"), col("language"),
+          lit(null).cast("string").as("normalizer"), col("frequency"))
+      static.unionByName(frequency)
+    }
+
+    val fieldPostings =
+      if (src.offsets.isEmpty) None
+      else Some(positionalPostings(
+        docsFields.filter(col("fieldName").isin(src.offsets.toSeq: _*)), src.tokenizer))
+
+    WikiIndex(docsFields, documents, globalIndex, metadata, buildTermPostings(tokens),
+      fieldPostings = fieldPostings)
+  }
+
+  /** (partition, language, docId, tokens): the tokenizer's one application to the text. */
+  private def tokensOf(src: Source): DataFrame =
+    src.base.select(col("partition"), col("language"), col("docId"),
+      src.tokenizer(col("text")).as("tokens"))
+
+  /** (partition, language, docId, fieldName, fieldValue) per entry of `fields`. */
+  private def fieldRows(base: DataFrame, fields: Seq[(String, Column)]): DataFrame =
+    base.select(col("partition"), col("language"), col("docId"),
+      inline(array(fields.map { case (n, c) =>
+        struct(lit(n).as("fieldName"), c.as("fieldValue")) }: _*)))
+
+  /** Each document's distinct TEXT tokens as index input rows. */
+  private def tokenRows(tokens: DataFrame): DataFrame =
+    tokens.select(col("partition"), col("language"), col("docId"),
+      explode(array_distinct(col("tokens"))).as("fieldValue"), lit("TEXT").as("fieldName"))
+
+  /** The index-row step: the indexed field values plus the TEXT tokens. */
+  private def indexRows(src: Source, textRows: DataFrame): DataFrame = {
+    val fields = fieldRows(src.base, src.indexed)
+    (if (src.indexNulls) fields else fields.where(col("fieldValue").isNotNull))
+      .unionByName(textRows)
+      .select("fieldValue", "fieldName", "partition", "language", "docId")
+  }
 
   /** (fieldValue, fieldName, partition, language, docId) rows → lossy
     * global index via the UidList aggregator (A1). GroupBy keys match the
@@ -522,12 +483,7 @@ object IndexBuilder {
     */
   def buildGlobalIndex(rows: DataFrame): DataFrame = {
     val uidAgg = udaf(new UidListAggregator())
-    rows
-      .groupBy("fieldValue", "fieldName", "partition", "language")
-      .agg(uidAgg(col("docId")).as("u"))
-      .select(
-        col("fieldValue"), col("fieldName"), col("partition"), col("language"),
-        col("u.count").as("count"), col("u.uids").as("uids"), col("u.ignore").as("ignore"))
+    indexColumns(rows.groupBy(IndexKeys.map(col): _*).agg(uidAgg(col("docId")).as("u")))
   }
 
   /** Skew-hardened index build: two-phase aggregation with a salt on the
@@ -541,16 +497,20 @@ object IndexBuilder {
   def buildGlobalIndexSalted(rows: DataFrame, salts: Int = 16): DataFrame = {
     val uidAgg   = udaf(new UidListAggregator())
     val mergeAgg = udaf(new UidListMergeAggregator())
-    rows
+    indexColumns(rows
       .withColumn("salt", pmod(hash(col("docId")), lit(salts)))
-      .groupBy("fieldValue", "fieldName", "partition", "language", "salt")
+      .groupBy((IndexKeys :+ "salt").map(col): _*)
       .agg(uidAgg(col("docId")).as("u"))
-      .groupBy("fieldValue", "fieldName", "partition", "language")
-      .agg(mergeAgg(col("u.count"), col("u.uids"), col("u.ignore")).as("u"))
-      .select(
-        col("fieldValue"), col("fieldName"), col("partition"), col("language"),
-        col("u.count").as("count"), col("u.uids").as("uids"), col("u.ignore").as("ignore"))
+      .groupBy(IndexKeys.map(col): _*)
+      .agg(mergeAgg(col("u.count"), col("u.uids"), col("u.ignore")).as("u")))
   }
+
+  private val IndexKeys = Seq("fieldValue", "fieldName", "partition", "language")
+
+  /** The grouped keys with the UidList struct `u` flattened. */
+  private def indexColumns(grouped: DataFrame): DataFrame =
+    grouped.select(IndexKeys.map(col) ++ Seq(col("u.count").as("count"),
+      col("u.uids").as("uids"), col("u.ignore").as("ignore")): _*)
 
   /** `field_postings` rebuilt from CORE data: positional postings over
     * the fields the METADATA catalog declares positional (kind = "p"
@@ -561,7 +521,7 @@ object IndexBuilder {
     * the read set does not carry the part) and
     * `Compaction.compactEngine`'s base rebuild — both agree with
     * `fromDocumentsTable`'s own construction because all three go
-    * through `buildFieldPostings`. The catalog probe is a broadcast
+    * through `positionalPostings`. The catalog probe is a broadcast
     * semi-join, not a driver collect, so the derivation stays fully
     * lazy: a store with no declared fields yields an empty frame no
     * query ever scans (the engine consults the table only for
@@ -570,24 +530,17 @@ object IndexBuilder {
   def deriveFieldPostings(docsFields: DataFrame, metadata: DataFrame): DataFrame = {
     val declared = metadata.filter(col("kind") === "p")
       .select("fieldName").distinct()
-    buildFieldPostings(
-      docsFields.join(broadcast(declared), Seq("fieldName"), "leftsemi")
-        .select(col("fieldName"), col("partition"), col("language"), col("docId"),
-          TextFunctions.tokenizeWs(col("fieldValue")).as("tokens")))
+    positionalPostings(docsFields.join(broadcast(declared), Seq("fieldName"), "leftsemi"),
+      TextFunctions.tokenizeWs(_))
   }
 
-  /** The shared fieldPostings construction for both builders: postings
-    * over the declared fields' values, tokenized with the builder's own
-    * tokenizer (the one that builds TEXT — positional literals
-    * normalize like TEXT literals on the query side).
+  /** Postings over the declared fields' `docs_fields` rows, tokenized
+    * with the builder's own tokenizer (the one that builds TEXT —
+    * positional literals normalize like TEXT literals on the query side).
     */
-  private def fieldPostingsFor(docsFields: DataFrame, offsetsUp: Set[String],
-      tokenizer: Column => Column): Option[DataFrame] =
-    if (offsetsUp.isEmpty) None
-    else Some(buildFieldPostings(
-      docsFields.filter(col("fieldName").isin(offsetsUp.toSeq: _*))
-        .select(col("fieldName"), col("partition"), col("language"), col("docId"),
-          tokenizer(col("fieldValue")).as("tokens"))))
+  private def positionalPostings(declared: DataFrame, tokenizer: Column => Column): DataFrame =
+    buildTermPostings(declared.select(col("fieldName"), col("partition"), col("language"),
+      col("docId"), tokenizer(col("fieldValue")).as("tokens")))
 
   /** Build-time validation of the field declarations: an offsets name
     * with no backing field would otherwise build a silently-empty
@@ -614,30 +567,23 @@ object IndexBuilder {
     * plan: BM25 reads ONLY the query terms' postings — no corpus-sized
     * doc-length join per query. Pure built-ins: posexplode +
     * collect_list + sort, no UDAF needed on this path.
+    *
+    * Input carrying a `fieldName` column yields the positional postings
+    * of declared non-TEXT fields (`WikiIndex.fieldPostings`): the same
+    * shuffle keyed by (field, term) — a hot term in one field never
+    * skews another's — and no `dl`.
     */
-  def buildTermPostings(docsTokens: DataFrame): DataFrame =
-    docsTokens
+  def buildTermPostings(docsTokens: DataFrame): DataFrame = {
+    val byField = docsTokens.columns.contains("fieldName")
+    val grouped = docsTokens
       .withColumn("nTokens", size(col("tokens")))
-      .select(col("partition"), col("language"), col("docId"), col("nTokens"),
-        posexplode(col("tokens")).as(Seq("pos", "term")))
-      .groupBy("term", "language", "partition", "docId")
-      .agg(
-        (count(lit(1)) / first(col("nTokens"))).cast("float").as("tf"),
-        array_sort(collect_list(col("pos"))).as("offsets"),
-        first(col("nTokens")).cast("double").as("dl"))
-
-  /** `buildTermPostings` with `fieldName` carried through the grouping —
-    * the positional postings for declared non-TEXT tokenized fields
-    * (`WikiIndex.fieldPostings`). Same shuffle shape, keyed by
-    * (field, term): a hot term in one field never skews another's.
-    */
-  def buildFieldPostings(fieldTokens: DataFrame): DataFrame =
-    fieldTokens
-      .withColumn("nTokens", size(col("tokens")))
-      .select(col("fieldName"), col("partition"), col("language"), col("docId"),
-        col("nTokens"), posexplode(col("tokens")).as(Seq("pos", "term")))
-      .groupBy("fieldName", "term", "language", "partition", "docId")
-      .agg(
-        (count(lit(1)) / first(col("nTokens"))).cast("float").as("tf"),
-        array_sort(collect_list(col("pos"))).as("offsets"))
+      .select(docsTokens.columns.filter(_ != "tokens").map(col) ++
+        Seq(col("nTokens"), posexplode(col("tokens")).as(Seq("pos", "term"))): _*)
+      .groupBy(((if (byField) Seq("fieldName") else Nil) ++
+        Seq("term", "language", "partition", "docId")).map(col): _*)
+    val tf = (count(lit(1)) / first(col("nTokens"))).cast("float").as("tf")
+    val offsets = array_sort(collect_list(col("pos"))).as("offsets")
+    if (byField) grouped.agg(tf, offsets)
+    else grouped.agg(tf, offsets, first(col("nTokens")).cast("double").as("dl"))
+  }
 }

@@ -17,12 +17,8 @@ object PipelineQueries {
 
   private val toks = "list_filter(string_split(text, ' '), x -> x <> '')"
 
-  // one trained IVF index per (session, data dir) — keyed by the session
-  // too, since the cached/assigned DataFrame is session-bound and must
-  // not outlive it (a dir-only key would serve a dead session's plan to
-  // a later one in the same JVM)
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), Similarity.IvfIndex]
+  // one trained IVF index per (session, data dir)
+  private val ivfCache = new graft.SessionMemo[Similarity.IvfIndex]
 
   /** Where the trained IVF centroids are persisted for the oracle: the
     * k-means TRAINING isn't SQL-expressible (and Spark's `avg` partial
@@ -36,27 +32,9 @@ object PipelineQueries {
     */
   private val IvfOracleCentroids = "/root/repo/target/ivf-oracle/centroids"
 
-  /** Shared cache discipline for trained ANN artifacts (IVF, PQ): ONE
-    * definition of the subtle parts — dead-session eviction (an entry
-    * whose SparkContext has stopped would otherwise pin the session,
-    * its cached DataFrames and broadcasts for the JVM lifetime) and the
-    * getOrElseUpdate build (which under a concurrent first call may
-    * evaluate twice; both evaluations write identical-schema artifacts
-    * to the same oracle path with mode=overwrite, so the last writer
-    * wins and the SQL reads a complete artifact either way).
-    */
-  private def cachedArtifact[T](
-      cache: scala.collection.concurrent.TrieMap[(org.apache.spark.sql.SparkSession, String), T],
-      s: org.apache.spark.sql.SparkSession, dir: String)(build: => T): T = {
-    cache.keySet.foreach { k =>
-      if (k._1.sparkContext.isStopped) cache.remove(k)
-    }
-    cache.getOrElseUpdate((s, dir), build)
-  }
-
   private def cachedIvf(
       s: org.apache.spark.sql.SparkSession, dir: String): Similarity.IvfIndex =
-    cachedArtifact(ivfCache, s, dir) {
+    ivfCache(s, dir) {
       val ivf = Similarity.buildIvf(Tables.load(s, dir, "embeddings"))
       import s.implicits._
       ivf.cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
@@ -72,8 +50,7 @@ object PipelineQueries {
     */
   private val LiveAnnOracleCentroids = "/root/repo/target/live-ann-oracle/centroids"
 
-  private val liveAnnCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), String]
+  private val liveAnnCache = new graft.SessionMemo[String]
 
   /** ONE live ANN store per (session, data dir) for `sim_live_asof`:
     * three pmod-3 key-split embedding batches (v0, v1, v3) around a
@@ -85,7 +62,7 @@ object PipelineQueries {
     */
   private def liveAnnStore(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    cachedArtifact(liveAnnCache, s, dir) {
+    liveAnnCache(s, dir) {
       val emb = Tables.load(s, dir, "embeddings").select("vec_id", "embedding")
       val tmp = java.nio.file.Files.createTempDirectory("graft-live-ann").toString
       val writer = new graft.streaming.LiveAnnMaintainer(s, tmp, cells = 16)
@@ -108,12 +85,11 @@ object PipelineQueries {
     */
   private val PqOracleBooks = "/root/repo/target/pq-oracle/codebooks"
 
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), Similarity.PqIndex]
+  private val pqCache = new graft.SessionMemo[Similarity.PqIndex]
 
   private def cachedPq(
       s: org.apache.spark.sql.SparkSession, dir: String): Similarity.PqIndex =
-    cachedArtifact(pqCache, s, dir) {
+    pqCache(s, dir) {
       val pq0 = Similarity.buildPq(Tables.load(s, dir, "embeddings"))
       import s.implicits._
       pq0.books.zipWithIndex.flatMap { case (book, mi) =>
@@ -170,8 +146,7 @@ object PipelineQueries {
     * is bounded by construction. This is the engine-side mirror of the
     * oracle's shared `clusterCte` prefix.
     */
-  private val compCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val compCache = new graft.SessionMemo[org.apache.spark.sql.DataFrame]
 
   /** The exact jaccard(τ=0.1, n=3, dfCap=200) pair list itself, one
     * level below `cachedComponents` — dd_ngram_jaccard serves from it
@@ -190,12 +165,11 @@ object PipelineQueries {
     * stays, and repeat serving (what the bench's warm passes measure)
     * reads the artifact.
     */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val pairsCache = new graft.SessionMemo[org.apache.spark.sql.DataFrame]
 
   private def cachedJaccardPairs(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    cachedArtifact(pairsCache, s, dir) {
+    pairsCache(s, dir) {
       val pairs = Dedup
         .jaccardPairs(Tables.load(s, dir, "documents"), n = 3, tau = 0.1, dfCap = 200)
         .cache()
@@ -205,7 +179,7 @@ object PipelineQueries {
 
   private def cachedComponents(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    cachedArtifact(compCache, s, dir) {
+    compCache(s, dir) {
       val comp = Dedup
         .connectedComponents(cachedJaccardPairs(s, dir).select("a", "b"))
         .cache()
@@ -278,8 +252,7 @@ object PipelineQueries {
       .orderBy(col("dsir_score").desc, col("doc_id"))
   }
 
-  private val liveDsirCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val liveDsirCache = new graft.SessionMemo[org.apache.spark.sql.DataFrame]
 
   private def cosSql(a: String, b: String): String = {
     def d(x: String, y: String) =
@@ -1843,7 +1816,7 @@ object PipelineQueries {
       "cu_live_dsir",
       dsirOracleSql) { (s, dir) =>
       val docs = Tables.load(s, dir, "documents")
-      val model = cachedArtifact(liveDsirCache, s, dir) {
+      val model = liveDsirCache(s, dir) {
         val tmp = java.nio.file.Files.createTempDirectory("graft-live-dsir").toString
         val writer = new graft.streaming.LiveDsirModelMaintainer(s, tmp)
         (0 until 3).foreach(b =>

@@ -174,8 +174,8 @@ object Compiler {
     // so this compiler CANNOT evaluate proximity. The engine's NearLeaf
     // enforces it from stored offsets and passes nearEnforced = true for
     // its residual; every other caller (full-scan fallback, standalone
-    // evaluators like Soak) must fail loudly rather than silently match
-    // every document.
+    // evaluators like EngineEquivalenceSpec's scan oracle) must fail
+    // loudly rather than silently match every document.
     case FnTerm(name @ ("near" | "onear"), args) if args.size >= 3 =>
       if (nearEnforced) lit(true)
       else throw new IllegalArgumentException(

@@ -1143,8 +1143,7 @@ object RelationalQueries {
   private def liveQuantileMaps(s: SparkSession, dir: String)
       : (Map[String, graft.functions.Sketches.QsOut],
          Map[String, graft.functions.Sketches.QsOut]) = {
-    evictStopped(liveQuantileCache)
-    liveQuantileCache.getOrElseUpdate((s, dir), {
+    liveQuantileCache(s, dir) {
       val li = t(s, dir, "lineitem").select(
         col("l_returnflag").as("g"),
         (col("l_orderkey") * 8 + col("l_linenumber").cast("long")).as("key"),
@@ -1155,7 +1154,7 @@ object RelationalQueries {
         writer.processBatch(li.filter(pmod(col("key"), lit(3)) === b), b.toLong))
       val reader = new graft.streaming.LiveQuantileMaintainer(s, tmp, k = 512)
       (reader.quantilesAt(), reader.quantilesAt(1L))
-    })
+    }
   }
 
   private def quantileMapDf(s: SparkSession,
@@ -1198,10 +1197,8 @@ object RelationalQueries {
        |GROUP BY r.l_returnflag, m.m ORDER BY l_returnflag""".stripMargin
 
   // one live quantile store per (session, dir), like liveCmsCache
-  private val liveQuantileCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (Map[String, graft.functions.Sketches.QsOut],
-       Map[String, graft.functions.Sketches.QsOut])]
+  private val liveQuantileCache = new graft.SessionMemo[
+    (Map[String, graft.functions.Sketches.QsOut], Map[String, graft.functions.Sketches.QsOut])]
 
   /** The CMS heavy-hitter oracle, shared VERBATIM by q36 (batch sketch)
     * and q38 (live-maintained sketch) — the share IS the claim: the
@@ -1251,12 +1248,8 @@ object RelationalQueries {
   }
 
   // one live-sketch store per (session, dir): built on first call,
-  // reused across bench passes; keyed by session so a dead session's
-  // entry can't serve a later one, and stopped-session keys are evicted
-  // so the cache never pins a dead session object (the pipeline
-  // cachedArtifact discipline)
-  private val liveCmsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Seq[Long], Seq[Long])]
+  // reused across bench passes
+  private val liveCmsCache = new graft.SessionMemo[(Seq[Long], Seq[Long])]
 
   /** ONE live CMS store build shared by q38 (latest merge) and q40
     * (time-travel merge at version 1): three pmod-3 batch deltas, then
@@ -1264,22 +1257,15 @@ object RelationalQueries {
     */
   private def liveCmsSketches(s: SparkSession, dir: String,
       ev: DataFrame): (Seq[Long], Seq[Long]) = {
-    evictStopped(liveCmsCache)
-    liveCmsCache.getOrElseUpdate((s, dir), {
+    liveCmsCache(s, dir) {
       val tmp = java.nio.file.Files.createTempDirectory("graft-live-cms").toString
       val writer = new graft.streaming.LiveSketchMaintainer(s, tmp, CmsD, CmsW)
       (0 until 3).foreach(b =>
         writer.processBatch(ev.filter(pmod(col("user_id"), lit(3)) === b), b.toLong))
       val reader = new graft.streaming.LiveSketchMaintainer(s, tmp, CmsD, CmsW)
       (reader.cmsAt(), reader.cmsAt(1L))
-    })
-  }
-
-  private def evictStopped[T](
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), T]): Unit =
-    cache.keySet.foreach { k =>
-      if (k._1.sparkContext.isStopped) cache.remove(k)
     }
+  }
 
   /** CTE chain re-deriving `Sketches.cmsBucket(x, j, w)` for every
     * user_id of `src`: salted splitmix64 (salt = golden · (j+1), the

@@ -1,13 +1,11 @@
 package graft.search
 
-import graft.{NamedQuery, Tables}
+import graft.{NamedQuery, SessionMemo, Tables}
 import graft.ingest.{IndexBuilder, WikiIndex}
 import graft.query.WikiSearchEngine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import scala.collection.concurrent.TrieMap
 
 /** The wikisearch query surface, run end-to-end (index build → JEXL-subset
   * parse → plan → index joins → residual filter) against the driver's
@@ -26,15 +24,15 @@ object SearchQueries {
   // parquet rather than in-memory caches keeps predicate pushdown,
   // column pruning, and partition pruning in play — the plan you'd get
   // at 100 TB, not a cache artifact.
-  private val cache = TrieMap.empty[String, (WikiIndex, WikiSearchEngine)]
+  private val saved = new SessionMemo[(WikiIndex, WikiSearchEngine)]
 
   private def saveDirFor(dir: String): String = {
     val sfName = dir.replaceAll("[^A-Za-z0-9.]", "_")
     s"${sys.props("java.io.tmpdir")}/graft_index/$sfName"
   }
 
-  def engine(s: SparkSession, dir: String): WikiSearchEngine =
-    cache.getOrElseUpdate(dir, {
+  private def savedIndex(s: SparkSession, dir: String): (WikiIndex, WikiSearchEngine) =
+    saved(s, dir) {
       val saveDir = saveDirFor(dir)
       IndexBuilder
         .fromDocumentsTable(s, Tables.load(s, dir, "documents"), NumPartitions)
@@ -55,11 +53,11 @@ object SearchQueries {
       val ix = WikiIndex.load(serving, saveDir)
       ix.metadata.cache() // broadcast-size catalog only
       (ix, new WikiSearchEngine(serving, ix))
-    })._2
+    }
 
-  def index(s: SparkSession, dir: String): WikiIndex = {
-    engine(s, dir); cache(dir)._1
-  }
+  def engine(s: SparkSession, dir: String): WikiSearchEngine = savedIndex(s, dir)._2
+
+  def index(s: SparkSession, dir: String): WikiIndex = savedIndex(s, dir)._1
 
   /** An engine with a QUERY-TIME SYNONYM table over the standard saved
     * index (`EngineConfig.synonyms` — the `ws_syn_q` surface): 'spark'
@@ -69,14 +67,13 @@ object SearchQueries {
     * stack against a declarative oracle. Memoized per dir like the
     * other engine variants; bound to the cached index's serving session.
     */
-  private val synCache = TrieMap.empty[String, WikiSearchEngine]
+  private val synCache = new SessionMemo[WikiSearchEngine]
   def synonymEngine(s: SparkSession, dir: String): WikiSearchEngine =
-    synCache.getOrElseUpdate(dir, {
-      engine(s, dir) // ensure the index is built and cached
-      val ix = cache(dir)._1
+    synCache(s, dir) {
+      val ix = index(s, dir)
       new WikiSearchEngine(ix.metadata.sparkSession, ix,
         graft.query.EngineConfig(synonyms = SynTable))
-    })
+    }
 
   /** The same synonym semantics REHYDRATED from index state: the cached
     * index plus a `synonyms` part is saved to a fresh store, loaded
@@ -84,16 +81,15 @@ object SearchQueries {
     * `ws_syn_persist_q` surface (two sessions sharing a saved store
     * must agree on expanded results without any session wiring).
     */
-  private val synPersistCache = TrieMap.empty[String, WikiSearchEngine]
+  private val synPersistCache = new SessionMemo[WikiSearchEngine]
   def synonymPersistEngine(s: SparkSession, dir: String): WikiSearchEngine =
-    synPersistCache.getOrElseUpdate(dir, {
-      engine(s, dir) // ensure the index is built and cached
-      val ix = cache(dir)._1
+    synPersistCache(s, dir) {
+      val ix = index(s, dir)
       val serving = ix.metadata.sparkSession
       val tmp = java.nio.file.Files.createTempDirectory("graft-syn-store").toString
       ix.withSynonyms(SynTable).save(tmp)
       new WikiSearchEngine(serving, WikiIndex.load(serving, tmp))
-    })
+    }
 
   /** Synonyms as LIVE-store state: a maintainer that DECLARES the
     * equivalence sets writes them once at store level (beside the
@@ -102,9 +98,9 @@ object SearchQueries {
     * the rehydrated semantics — the live twin of `ws_syn_persist_q`'s
     * two-sessions-one-store agreement proof.
     */
-  private val liveSynCache = TrieMap.empty[String, WikiSearchEngine]
+  private val liveSynCache = new SessionMemo[WikiSearchEngine]
   def liveSynonymEngine(s: SparkSession, dir: String): WikiSearchEngine =
-    liveSynCache.getOrElseUpdate(dir, {
+    liveSynCache(s, dir) {
       val docs = Tables.load(s, dir, "documents")
       val tmp = java.nio.file.Files.createTempDirectory("graft-live-syn").toString
       val writer = new graft.streaming.LiveEngineMaintainer(s, tmp, NumPartitions,
@@ -113,7 +109,7 @@ object SearchQueries {
         writer.processBatch(docs.filter(col("doc_id") % 3 === b), b.toLong))
       val reader = new graft.streaming.LiveEngineMaintainer(s, tmp, NumPartitions)
       new WikiSearchEngine(s, reader.latestIndex.get)
-    })
+    }
 
   /** An engine whose index declares a SECOND positional field — HEAD =
     * the document's first five whitespace tokens (derived; the harness
@@ -122,9 +118,9 @@ object SearchQueries {
     * field-generic proximity (metadata kind-p discovery, per-field
     * postings joins) end-to-end against a declarative oracle.
     */
-  private val fldCache = TrieMap.empty[String, WikiSearchEngine]
+  private val fldCache = new SessionMemo[WikiSearchEngine]
   def fieldOffsetsEngine(s: SparkSession, dir: String): WikiSearchEngine =
-    fldCache.getOrElseUpdate(dir, {
+    fldCache(s, dir) {
       val head = concat_ws(" ",
         slice(graft.functions.TextFunctions.tokenizeWs(col("text")), 1, 5))
       // in-memory index (one extra per-dir build) — cacheAll so the
@@ -132,7 +128,7 @@ object SearchQueries {
       new WikiSearchEngine(s, IndexBuilder.fromDocumentsTable(
         s, Tables.load(s, dir, "documents"), NumPartitions,
         extraFields = Map("HEAD" -> head), offsetsFields = Set("HEAD")).cacheAll())
-    })
+    }
 
   /** An engine served from a live store whose build DECLARES the same
     * positional second field as `fieldOffsetsEngine` (HEAD, first five
@@ -142,9 +138,9 @@ object SearchQueries {
     * proximity worked only against batch-built indexes). Deltas
     * deliberately left UNcompacted, like `liveEngine`.
     */
-  private val liveFldCache = TrieMap.empty[String, WikiSearchEngine]
+  private val liveFldCache = new SessionMemo[WikiSearchEngine]
   def liveFieldEngine(s: SparkSession, dir: String): WikiSearchEngine =
-    liveFldCache.getOrElseUpdate(dir, {
+    liveFldCache(s, dir) {
       val head = concat_ws(" ",
         slice(graft.functions.TextFunctions.tokenizeWs(col("text")), 1, 5))
       val docs = Tables.load(s, dir, "documents")
@@ -154,7 +150,7 @@ object SearchQueries {
       (0 until 3).foreach(b =>
         m.processBatch(docs.filter(col("doc_id") % 3 === b), b.toLong))
       new WikiSearchEngine(s, m.latestIndex.get)
-    })
+    }
 
   /** An engine served from a LIVE store: the documents table streamed
     * through `LiveEngineMaintainer` in three micro-batches, queried via
@@ -164,22 +160,21 @@ object SearchQueries {
     * (the store is immutable corpus state — same memoization
     * discipline as `engine`'s saved index).
     */
-  private val liveStoreCache =
-    TrieMap.empty[String, graft.streaming.LiveEngineMaintainer]
+  private val liveStoreCache = new SessionMemo[graft.streaming.LiveEngineMaintainer]
   private def liveStore(s: SparkSession, dir: String)
       : graft.streaming.LiveEngineMaintainer =
-    liveStoreCache.getOrElseUpdate(dir, {
+    liveStoreCache(s, dir) {
       val docs = Tables.load(s, dir, "documents")
       val tmp = java.nio.file.Files.createTempDirectory("graft-live-store").toString
       val m = new graft.streaming.LiveEngineMaintainer(s, tmp, NumPartitions)
       (0 until 3).foreach(b =>
         m.processBatch(docs.filter(col("doc_id") % 3 === b), b.toLong))
       m
-    })
+    }
 
-  private val liveCache = TrieMap.empty[String, WikiSearchEngine]
+  private val liveCache = new SessionMemo[WikiSearchEngine]
   def liveEngine(s: SparkSession, dir: String): WikiSearchEngine =
-    liveCache.getOrElseUpdate(dir, new WikiSearchEngine(s, liveStore(s, dir).latestIndex.get))
+    liveCache(s, dir)(new WikiSearchEngine(s, liveStore(s, dir).latestIndex.get))
 
   /** LSM TIME TRAVEL over the same live store: the snapshot at version
     * 1 of 2 — batch 2's documents (doc_id % 3 == 2) must be invisible,
@@ -187,9 +182,9 @@ object SearchQueries {
     * memoization discipline; shares `liveStore`'s three-batch build
     * with `liveEngine` (two engines, one store).
     */
-  private val asOfCache = TrieMap.empty[String, WikiSearchEngine]
+  private val asOfCache = new SessionMemo[WikiSearchEngine]
   def asOfEngine(s: SparkSession, dir: String): WikiSearchEngine =
-    asOfCache.getOrElseUpdate(dir, new WikiSearchEngine(s, liveStore(s, dir).indexAt(1L).get))
+    asOfCache(s, dir)(new WikiSearchEngine(s, liveStore(s, dir).indexAt(1L).get))
 
   /** An engine served from a live store WITH tombstone deletes: two
     * ingest batches (doc_id%3 ∈ {0,1}), a delete batch tombstoning
@@ -200,9 +195,9 @@ object SearchQueries {
     * Deltas deliberately UNcompacted (the masking read path is what
     * `ws_del_q` gates; physical erasure is StreamingSpec's half).
     */
-  private val liveDelCache = TrieMap.empty[String, WikiSearchEngine]
+  private val liveDelCache = new SessionMemo[WikiSearchEngine]
   def liveDeleteEngine(s: SparkSession, dir: String): WikiSearchEngine =
-    liveDelCache.getOrElseUpdate(dir, {
+    liveDelCache(s, dir) {
       val docs = Tables.load(s, dir, "documents")
       val tmp = java.nio.file.Files.createTempDirectory("graft-live-del").toString
       val m = new graft.streaming.LiveEngineMaintainer(s, tmp, NumPartitions)
@@ -211,7 +206,7 @@ object SearchQueries {
       m.processDeletes(docs.filter(col("doc_id") % 7 === 2).select("doc_id"), 2L)
       m.processBatch(docs.filter(col("doc_id") % 3 === 2), 3L)
       new WikiSearchEngine(s, m.latestIndex.get)
-    })
+    }
 
   /** Engine results → (doc_id, language) for the driver compare. */
   private def ids(df: DataFrame): DataFrame =

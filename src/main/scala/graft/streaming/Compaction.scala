@@ -157,75 +157,41 @@ object Compaction {
 
   // committed-version detection keys on the CORE parts: a round-8 store
   // (no derived parts anywhere) compacts fine — this fold never READS
-  // the derived parts at all, it rebuilds them from core data, so
-  // compaction doubles as the migration that graduates any old store to
-  // the full round-9 layout.
+  // the derived parts, it rebuilds them from core data, so compaction
+  // doubles as the migration that graduates any old store to the full
+  // layout. The folded, masked core tables form one `WikiIndex`, written
+  // through the micro-batch's part list.
   private[streaming] val engineFold: Fold = v => {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, reverse, size, sum}
-    import LiveEngineMaintainer.foldGlobal
-    // The folded global feeds three parts (global, reverse, trigram) —
-    // cache it so the merge-on-read fold runs once, not per write. The
-    // reverse/trigram bases are REBUILT from the folded global rather
-    // than folded from their own deltas: same result for reverse (the
-    // fold commutes with the value reversal), and for trigram it is the
-    // right-to-be-forgotten eraser — a deleted document's vocabulary
-    // grams must not survive in the base. Both bases are written in
-    // `WikiIndex.save`'s sorted layout so prefix/gram probes prune.
-    val foldedGlobal = v.cached(foldGlobal(VersionedState.withVer(v.read("global")), v.tombstones))
-    // documents/postings each feed their own base part AND the
-    // doc_lengths derivation — cache the masked frames so the two
-    // corpus-sized per-doc tables are read and tombstone-masked once
-    val maskedDocs  = v.cached(v.mask(v.read("documents")))
-    val maskedPosts = v.cached(v.mask(v.read("postings")))
-    // docs_fields feeds its own base part AND the field_postings rebuild
+    import graft.ingest.{IndexBuilder, WikiIndex}
+    // Each cached frame feeds several parts (the folded global: global,
+    // reverse, trigram; the masked per-doc tables: their own part plus
+    // doc_lengths or field_postings), so each is folded or masked once.
+    // reverse/trigram are REBUILT from the folded global, in `save`'s
+    // sorted layout: the fold commutes with the value reversal, and a
+    // deleted document's vocabulary grams must not survive in the base.
+    val foldedGlobal = v.cached(
+      LiveEngineMaintainer.foldGlobal(VersionedState.withVer(v.read("global")), v.tombstones))
     val maskedFields = v.cached(v.mask(v.read("docs_fields")))
-    // Per-doc BM25 token length from the masked postings — EXACT without
-    // raw text (every token position lives in exactly one term's offsets
-    // array, the WikiIndex.docLengths derivation). Feeds the doc_lengths
-    // base always, and the postings base's `dl` column whenever the read
-    // set is not UNIFORMLY dl-covered (the read path's coverage rule,
-    // `LiveEngineMaintainer.postingsUnion`): compaction is where a
-    // round-8 or mixed store graduates to a complete dl, never
-    // persisting null dl into the base.
-    val docDl = maskedPosts
-      .groupBy("partition", "language", "docId")
-      .agg(sum(size(col("offsets"))).cast("double").as("dl"))
-    val dlCovered = LiveEngineMaintainer.dlCovered(v.spark, v.paths("postings"))
-    LiveEngineMaintainer.Parts.view.map { p =>
-      p -> (p match {
-        case "global"   => foldedGlobal
-        case "reverse"  =>
-          foldedGlobal.withColumn("fieldValue", reverse(col("fieldValue")))
-            .repartition(col("fieldName")).sortWithinPartitions("fieldValue")
-        case "trigram"  =>
-          graft.ingest.WikiIndex.deriveTrigrams(foldedGlobal)
-            .repartition(col("fieldName")).sortWithinPartitions("gram")
-        case "documents"   => maskedDocs
-        case "docs_fields" => maskedFields
-        case "field_postings" =>
-          // rebuilt from core data like reverse/trigram (the metadata
-          // catalog's kind-p rows drive the derivation), so deletes
-          // erase physically and a store predating the part GRADUATES
-          // to the full layout here
-          graft.ingest.IndexBuilder.deriveFieldPostings(
-            maskedFields, v.read("metadata").distinct())
-        case "postings"  =>
-          if (dlCovered) maskedPosts
-          else maskedPosts.drop("dl")
-            .join(docDl, Seq("partition", "language", "docId"))
-        case "doc_lengths" =>
-          // WikiIndex.docLengths' derivation over the masked core
-          // tables (docless-token docs 0)
-          maskedDocs
-            .select("partition", "language", "docId")
-            .join(docDl, Seq("partition", "language", "docId"), "left")
-            .select(col("partition"), col("language"), col("docId"),
-              coalesce(col("dl"), lit(0.0)).as("dl"))
-        case "metadata"   => v.read(p).distinct()
-        case "tombstones" => v.read(p).limit(0) // applied above; base is clean
-        case _            => v.mask(v.read(p))
-      })
-    }
+    val metadata = v.read("metadata").distinct()
+    val ix = WikiIndex(maskedFields, v.cached(v.mask(v.read("documents"))), foldedGlobal,
+      metadata, v.cached(v.mask(v.read("postings"))),
+      storedEvents = Some(v.mask(v.read("events"))),
+      storedReverse = Some(WikiIndex.sortedReverse(foldedGlobal)),
+      storedTrigram = Some(WikiIndex.sortedTrigrams(foldedGlobal)),
+      // the metadata catalog's kind-p rows drive the rebuild
+      fieldPostings = Some(IndexBuilder.deriveFieldPostings(maskedFields, metadata)))
+    // The postings base keeps the read set's `dl` column only when EVERY
+    // read-set dir has it (`LiveEngineMaintainer.postingsUnion`'s
+    // coverage rule); otherwise it joins the exact per-doc lengths, so
+    // a round-8 or mixed store never persists a null dl into the base.
+    val base =
+      if (LiveEngineMaintainer.dlCovered(v.spark, v.paths("postings"))) ix
+      else ix.copy(
+        termPostings = ix.termPostings.drop("dl")
+          .join(ix.docLengths, Seq("partition", "language", "docId")),
+        storedDocLengths = Some(ix.docLengths))
+    // tombstones are applied above; the base is clean
+    LiveEngineMaintainer.indexParts(base, v.read("tombstones").limit(0))
   }
 
   /** Auto-compaction policy gate for the maintainers (the Accumulo

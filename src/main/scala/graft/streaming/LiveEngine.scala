@@ -173,31 +173,8 @@ class LiveEngineMaintainer(
     }
   }
 
-  /** The non-tombstone parts of one version's delta (nine, plus
-    * `field_postings` when the build declares `offsetsFields`), all
-    * derived from the batch's own index build (the tombstone part
-    * differs between the ingest and delete paths, so callers write it).
-    * The `reverse`/`trigram` deltas are the SAME projections
-    * `WikiIndex.save` persists, taken over the batch's global delta —
-    * so a live store keeps the saved layout's pushed-prefix access
-    * paths at O(|batch|) write amplification.
-    */
-  private def writeIndexParts(ix: WikiIndex, vdir: String): Unit = {
-    write(ix.docsFields, s"$vdir/docs_fields")
-    write(ix.documents, s"$vdir/documents")
-    write(ix.globalIndex, s"$vdir/global")
-    write(ix.termPostings, s"$vdir/postings")
-    write(ix.events, s"$vdir/events")
-    write(ix.metadata, s"$vdir/metadata")
-    write(ix.docLengths, s"$vdir/doc_lengths")
-    write(ix.globalIndex.withColumn("fieldValue", reverse(col("fieldValue"))),
-      s"$vdir/reverse")
-    write(WikiIndex.deriveTrigrams(ix.globalIndex), s"$vdir/trigram")
-    // present exactly when the build declared offsetsFields — an
-    // undeclared store simply never carries the part and the read side
-    // derives (empty) from metadata
-    ix.fieldPostings.foreach(fp => write(fp, s"$vdir/field_postings"))
-  }
+  private def writeParts(ix: WikiIndex, tombstones: DataFrame, vdir: String): Unit =
+    indexParts(ix, tombstones).foreach { case (p, df) => write(df, s"$vdir/$p") }
 
   /** One micro-batch: build the batch's index tables with the SAME
     * extraction as batch ingest and write each as this version's delta
@@ -206,9 +183,9 @@ class LiveEngineMaintainer(
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     commit(batchId) { vdir =>
-      writeIndexParts(IndexBuilder.fromDocumentsTable(
-        batch.sparkSession, batch, numPartitions, extraFields, offsetsFields), vdir)
-      write(emptyTombstones, s"$vdir/tombstones")
+      writeParts(IndexBuilder.fromDocumentsTable(
+        batch.sparkSession, batch, numPartitions, extraFields, offsetsFields),
+        emptyTombstones, vdir)
     }
     maybeCompact()
   }
@@ -230,14 +207,11 @@ class LiveEngineMaintainer(
   def processDeletes(deletes: DataFrame, batchId: Long): Unit = {
     commit(batchId) { vdir =>
       val s = deletes.sparkSession
-      val tomb = deletes
-        .withColumn("partition", pmod(col("doc_id"), lit(numPartitions)).cast("int"))
-        .withColumn("docId", col("doc_id").cast("string"))
-        .select("partition", "docId").distinct()
-      writeIndexParts(IndexBuilder.fromDocumentsTable(
+      writeParts(IndexBuilder.fromDocumentsTable(
         s, VersionedState.emptyFrame(s, DocumentsSchema),
-        numPartitions, extraFields, offsetsFields), vdir)
-      write(tomb, s"$vdir/tombstones")
+        numPartitions, extraFields, offsetsFields),
+        IndexBuilder.documentKeys(deletes, "doc_id", numPartitions)
+          .select("partition", "docId").distinct(), vdir)
     }
     maybeCompact()
   }
@@ -264,6 +238,26 @@ object LiveEngineMaintainer {
 
   /** Every part a fully-equipped version dir carries. */
   val Parts: Seq[String] = CoreParts ++ DerivedParts
+
+  /** THE part list: one version dir's (part, table) pairs from an index
+    * and its tombstone rows, in write order — shared by the micro-batch
+    * (`processBatch`), the delete batch (`processDeletes`) and the
+    * compacted base (`Compaction.engineFold`). The derived parts come
+    * before `tombstones`, the last core part, so a version never counts
+    * as committed before its derived parts exist. `reverse`/`trigram`
+    * are the index's own access paths: per-batch projections of the
+    * global delta (the prefix probe still pushes into each delta scan),
+    * or the sorted layouts a compacted base stores. `field_postings` is
+    * written exactly when the index carries it — an undeclared store
+    * never has the part and the read side derives (empty) from metadata.
+    */
+  private[streaming] def indexParts(ix: WikiIndex,
+      tombstones: DataFrame): Seq[(String, DataFrame)] =
+    Seq("docs_fields" -> ix.docsFields, "documents" -> ix.documents,
+      "global" -> ix.globalIndex, "postings" -> ix.termPostings, "events" -> ix.events,
+      "metadata" -> ix.metadata, "doc_lengths" -> ix.docLengths,
+      "reverse" -> ix.reverseIndex, "trigram" -> ix.trigramIndex) ++
+      ix.fieldPostings.map("field_postings" -> _) :+ ("tombstones" -> tombstones)
 
   /** The harness `documents` schema — the delete path needs it to write
     * schema-preserved empty doc parts.

@@ -67,7 +67,8 @@ class CompilerSpec extends SparkSuite {
 
   test("f:near outside the engine's enforced plan fails loudly, never match-all") {
     // the event view has no positions — a standalone evaluator (full
-    // scan, Soak-style ground truth) must throw, not return every doc
+    // scan, the ground truth of EngineEquivalenceSpec) must throw, not
+    // return every doc
     val e = intercept[IllegalArgumentException](
       Compiler.compile(QueryParser.parse("f:near(TEXT, 'a', 'b', 2)")))
     assert(e.getMessage.contains("index-enforced"))

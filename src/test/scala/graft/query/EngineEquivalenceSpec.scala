@@ -41,7 +41,7 @@ class EngineEquivalenceSpec extends SparkSuite {
 
   private def word() = vocab(rnd.nextInt(vocab.size))
 
-  private def leaf(): String = rnd.nextInt(10) match {
+  private def leaf(): String = rnd.nextInt(11) match {
     case 0 => s"TEXT == '${word()}'"
     case 1 => s"TEXT != '${word()}'"
     case 2 => s"SOURCE == 'src${1 + rnd.nextInt(3)}'"
@@ -63,6 +63,11 @@ class EngineEquivalenceSpec extends SparkSuite {
       val w = word()
       if (rnd.nextInt(2) == 0) s"f:fuzzy(TEXT, '${edit(w)}')"
       else s"f:fuzzy(TEXT, '${edit(edit(w))}', 2)"
+    case 10 => // opaque INFIX regex through the trigram access path,
+      // verified against the residual's jexlMatches semantics
+      val w = word()
+      val start = rnd.nextInt(w.length - 2)
+      s"TEXT =~ '.*${w.substring(start, start + 3 + rnd.nextInt(w.length - start - 2))}.*'"
   }
 
   private def expr(depth: Int): String =

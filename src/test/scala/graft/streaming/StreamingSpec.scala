@@ -393,6 +393,26 @@ class StreamingSpec extends SparkSuite {
       assert(ids(live2, q) == ids(ref2, q), s"post-compaction ingest: $q")
   }
 
+  test("a compacted engine base commits last: no derived part is written after c<k>/tombstones") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-live-commit-order").toString
+    val m = new LiveEngineMaintainer(spark, dir, numPartitions = 2)
+    m.processBatch(Seq((1L, "alpha beta", "en", "s1", 10), (2L, "gamma delta", "de", "s2", 11))
+      .toDF("doc_id", "text", "lang", "source", "n_chars"), 0L)
+    m.processDeletes(Seq(Tuple1(2L)).toDF("doc_id"), 1L)
+    m.processBatch(Seq((3L, "alpha epsilon", "en", "s1", 13))
+      .toDF("doc_id", "text", "lang", "source", "n_chars"), 2L)
+    val k = Compaction.compactEngine(spark, dir, deleteSubsumed = false)
+    assert(k == 2L)
+    // `tombstones` is the last core part: once its marker exists, c<k>
+    // counts as committed, so every derived part must already be there
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def markedAt(part: String): Long =
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/c$k/$part/_SUCCESS")).getModificationTime
+    val committedAt = markedAt("tombstones")
+    for (p <- LiveEngineMaintainer.DerivedParts)
+      assert(markedAt(p) <= committedAt, s"derived part $p was written after c$k committed")
+  }
+
   test("live store serves suffix/infix from delta reverse/trigram parts with pushed prefixes, and BM25 from materialized doc lengths") {
     import graft.query.WikiSearchEngine
     val dir = java.nio.file.Files.createTempDirectory("graft-live-paths").toString
