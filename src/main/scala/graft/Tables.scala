@@ -130,6 +130,12 @@ object Sessions {
         sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
           sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
       .config("spark.sql.session.timeZone", "UTC")
+      // FAIR between the pools of `fairscheduler.xml` (a classpath
+      // resource): live-store writes run in `ingest`, everything else in
+      // `default`, which is FIFO inside — so a session with no live
+      // writer schedules exactly as under FIFO mode, and a writer's
+      // concurrent part writes cannot queue ahead of every reader job.
+      .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -74,14 +74,21 @@ object TextFunctions {
     * them unfindable under the normalizer the metadata declares for TEXT).
     */
   def tokenize(text: Column): Column =
-    filter(split(markupLcUdf(text), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
+    array_remove(split(markupLcUdf(text), "[^\\p{L}\\p{N}]+"), "")
 
   /** Tokenize on single spaces only — exact-parity tokenizer for the
     * driver's synthetic `documents` table (space-separated words), with a
     * trivially matching DuckDB oracle (`string_split(text, ' ')`).
+    *
+    * Both tokenizers drop empty tokens with `array_remove`, never with a
+    * `filter` lambda: every frame derived from one tokenized column
+    * shares its analyzed lambda variable, and frames optimized at the
+    * same time (the concurrent part writes of a live version, each
+    * evaluating a local batch's projection on the driver) overwrite each
+    * other's value — their tables then hold other documents' tokens.
     */
   def tokenizeWs(text: Column): Column =
-    filter(split(text, " "), t => length(t) > 0)
+    array_remove(split(text, " "), "")
 
   /** Distinct tokens per document (reference collects tokens into a
     * HashSet before indexing — `WikipediaMapper.getTokens:226-234`). */

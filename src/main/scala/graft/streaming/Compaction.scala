@@ -27,9 +27,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Compaction {
 
   /** A store's compaction fold: the read set to the base's (part,
-    * table) pairs, in write order.
+    * table) pairs; `VersionedState.writeParts` writes the last pair
+    * after all the others.
     */
-  private[streaming] type Fold = ReadView => Iterable[(String, DataFrame)]
+  private[streaming] type Fold = ReadView => Seq[(String, DataFrame)]
 
   /** The fold of a single-part store: the read set's one table through
     * the store's combiner.
@@ -55,7 +56,7 @@ object Compaction {
       .majorCompact(deleteSubsumed)(dedupFold)
 
   private[streaming] val dedupFold: Fold = v =>
-    LiveNearDupMaintainer.Parts.view.map { p =>
+    LiveNearDupMaintainer.Parts.map { p =>
       p -> (if (p == "tombstones") v.read(p).limit(0) else v.mask(v.read(p)))
     }
 
@@ -73,9 +74,9 @@ object Compaction {
     *  - `Similarity.AutoCells` (−1): retrain on the masked live
     *    vectors with ~√n cells (clamped [16, 4096]); > 0: explicit
     *    cell count. New centroids are written as a `centroids` PART of
-    *    the compacted dir (BEFORE the core parts, so the base is never
-    *    visible without them) and every live vector is re-assigned
-    *    under them; readers resolve centroids base-first (see
+    *    the compacted dir (before `tombstones`, the last core part, so
+    *    the base is never visible without them) and every live vector
+    *    is re-assigned under them; readers resolve centroids base-first (see
     *    `LiveAnnMaintainer.centroids`), store-level `<dir>/centroids`
     *    remains the pre-retrain fallback. PQ codes are cell-independent
     *    (subspace quantizers), so the codes rebuild is unchanged.
@@ -120,10 +121,12 @@ object Compaction {
     val maskedAssigned = newCents.fold(maskedAssigned0)(cs =>
       v.cached(Similarity.assignIvf(cs.sortBy(_._1).map(_._2.toArray).toArray,
         maskedAssigned0.select("vec_id", "embedding"))))
-    // centroid part FIRST: the base must never become visible (core
-    // parts committed) without the centroids its assignments assume.
-    // A retrain writes the new set; otherwise a base-carried part is
-    // copied forward so later compactions preserve an earlier retrain.
+    // the centroid part is never the last one: the base must never
+    // become visible (core parts committed) without the centroids its
+    // assignments assume, and `writeParts` writes `tombstones`, the
+    // last part, only after every other part has committed. A retrain
+    // writes the new set; otherwise a base-carried part is copied
+    // forward so later compactions preserve an earlier retrain.
     val carryCents: Option[DataFrame] = newCents match {
       case Some(cs) =>
         import spark.implicits._
@@ -132,8 +135,8 @@ object Compaction {
         v.paths("centroids").filter(p => VersionedState.exists(s"$p/_SUCCESS"))
           .lastOption.map(spark.read.parquet(_)) // newest carried set
     }
-    carryCents.map(c => "centroids" -> c.coalesce(1)).toSeq.view ++
-      LiveAnnMaintainer.Parts.view.map { p =>
+    carryCents.map(c => "centroids" -> c.coalesce(1)).toSeq ++
+      LiveAnnMaintainer.Parts.map { p =>
         p -> (p match {
           case "assigned" => maskedAssigned // per-vector rows — erase deleted physically
           case "codes" => books.fold(LiveAnnMaintainer.emptyCodes(spark))(b =>
@@ -163,18 +166,20 @@ object Compaction {
   // through the micro-batch's part list.
   private[streaming] val engineFold: Fold = v => {
     import graft.ingest.{IndexBuilder, WikiIndex}
-    // Each cached frame feeds several parts (the folded global: global,
-    // reverse, trigram; the masked per-doc tables: their own part plus
-    // doc_lengths or field_postings), so each is folded or masked once.
+    // The folded global feeds three parts (global, reverse, trigram), so
+    // it is cached and folded once. The masked per-doc tables, each a
+    // scan plus at most a tombstone anti-join, are read by every part
+    // that needs them: the parts are written at the same time, and a
+    // cache would cost a job to fill before them.
     // reverse/trigram are REBUILT from the folded global, in `save`'s
     // sorted layout: the fold commutes with the value reversal, and a
     // deleted document's vocabulary grams must not survive in the base.
     val foldedGlobal = v.cached(
       LiveEngineMaintainer.foldGlobal(VersionedState.withVer(v.read("global")), v.tombstones))
-    val maskedFields = v.cached(v.mask(v.read("docs_fields")))
+    val maskedFields = v.mask(v.read("docs_fields"))
     val metadata = v.read("metadata").distinct()
-    val ix = WikiIndex(maskedFields, v.cached(v.mask(v.read("documents"))), foldedGlobal,
-      metadata, v.cached(v.mask(v.read("postings"))),
+    val ix = WikiIndex(maskedFields, v.mask(v.read("documents")), foldedGlobal,
+      metadata, v.mask(v.read("postings")),
       storedEvents = Some(v.mask(v.read("events"))),
       storedReverse = Some(WikiIndex.sortedReverse(foldedGlobal)),
       storedTrigram = Some(WikiIndex.sortedTrigrams(foldedGlobal)),

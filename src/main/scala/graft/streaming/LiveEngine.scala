@@ -99,7 +99,7 @@ class LiveEngineMaintainer(
     with StreamSink {
 
   import LiveEngineMaintainer._
-  import VersionedState.{exists, withVer, write}
+  import VersionedState.{exists, withVer, write, writeParts}
 
   private val synPath = s"$dir/synonyms"
   if (synonyms.nonEmpty && !exists(s"$synPath/_SUCCESS"))
@@ -173,9 +173,6 @@ class LiveEngineMaintainer(
     }
   }
 
-  private def writeParts(ix: WikiIndex, tombstones: DataFrame, vdir: String): Unit =
-    indexParts(ix, tombstones).foreach { case (p, df) => write(df, s"$vdir/$p") }
-
   /** One micro-batch: build the batch's index tables with the SAME
     * extraction as batch ingest and write each as this version's delta
     * (plus an empty tombstone part — the commit protocol requires every
@@ -183,9 +180,9 @@ class LiveEngineMaintainer(
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     commit(batchId) { vdir =>
-      writeParts(IndexBuilder.fromDocumentsTable(
+      writeParts(indexParts(IndexBuilder.fromDocumentsTable(
         batch.sparkSession, batch, numPartitions, extraFields, offsetsFields),
-        emptyTombstones, vdir)
+        emptyTombstones), vdir)
     }
     maybeCompact()
   }
@@ -207,11 +204,11 @@ class LiveEngineMaintainer(
   def processDeletes(deletes: DataFrame, batchId: Long): Unit = {
     commit(batchId) { vdir =>
       val s = deletes.sparkSession
-      writeParts(IndexBuilder.fromDocumentsTable(
+      writeParts(indexParts(IndexBuilder.fromDocumentsTable(
         s, VersionedState.emptyFrame(s, DocumentsSchema),
         numPartitions, extraFields, offsetsFields),
         IndexBuilder.documentKeys(deletes, "doc_id", numPartitions)
-          .select("partition", "docId").distinct(), vdir)
+          .select("partition", "docId").distinct()), vdir)
     }
     maybeCompact()
   }
@@ -240,11 +237,13 @@ object LiveEngineMaintainer {
   val Parts: Seq[String] = CoreParts ++ DerivedParts
 
   /** THE part list: one version dir's (part, table) pairs from an index
-    * and its tombstone rows, in write order — shared by the micro-batch
+    * and its tombstone rows — shared by the micro-batch
     * (`processBatch`), the delete batch (`processDeletes`) and the
-    * compacted base (`Compaction.engineFold`). The derived parts come
-    * before `tombstones`, the last core part, so a version never counts
-    * as committed before its derived parts exist. `reverse`/`trigram`
+    * compacted base (`Compaction.engineFold`), each written by
+    * `VersionedState.writeParts`. `tombstones`, the last core part, is
+    * the last pair, so it is written only after every other part
+    * (derived ones included) has committed: a version never counts as
+    * committed before its derived parts exist. `reverse`/`trigram`
     * are the index's own access paths: per-batch projections of the
     * global delta (the prefix probe still pushes into each delta scan),
     * or the sorted layouts a compacted base stores. `field_postings` is

@@ -127,6 +127,55 @@ private[streaming] object VersionedState {
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
       .parquet(path)
 
+  /** THE part writer of one version dir: every part but the last is
+    * written concurrently, one thread each, and the last only once all
+    * of them have committed — so a store whose last part is a core part
+    * (every multi-part store ends in `tombstones`) still becomes visible
+    * only after every other part exists. The first failure is rethrown
+    * as is, after every writer has ended; the last part is then never
+    * written. Threads are made per call so they inherit the caller's
+    * Spark local properties (job group, job tags, scheduler pool), and
+    * a single-part store writes its one part on the calling thread.
+    */
+  def writeParts(parts: Seq[(String, DataFrame)], vdir: String): Unit = {
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val writers = parts.init.map { case (p, df) =>
+      val t = new Thread(() =>
+        try write(df, partDir(vdir, p))
+        catch { case e: Throwable => if (!failure.compareAndSet(null, e)) failure.get.addSuppressed(e) },
+        s"$WriterThread $vdir/$p")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    try writers.foreach(_.join())
+    catch { case e: InterruptedException => writers.foreach(_.interrupt()); throw e }
+    Option(failure.get).foreach(e => throw e)
+    val (p, df) = parts.last
+    write(df, partDir(vdir, p))
+  }
+
+  /** Name prefix of the part writer's threads. */
+  val WriterThread = "graft-part-writer"
+
+  /** The scheduler pool every store write runs its jobs in
+    * (`fairscheduler.xml`: FIFO inside, the same weight as the `default`
+    * pool readers use), so under `Sessions.builder`'s FAIR mode a
+    * store's concurrent part writes share the executors with readers
+    * instead of queueing ahead of them.
+    */
+  val IngestPool = "ingest"
+
+  /** `body` with the calling thread's jobs (and those of the threads it
+    * starts) in [[IngestPool]]; the thread's previous pool is restored.
+    */
+  def inIngestPool[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.scheduler.pool")
+    sc.setLocalProperty("spark.scheduler.pool", IngestPool)
+    try body finally sc.setLocalProperty("spark.scheduler.pool", prev)
+  }
+
   def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
@@ -216,7 +265,10 @@ private[streaming] object VersionedState {
   * Commit protocol: a version counts only once the `_SUCCESS` marker of
   * EVERY part in `parts` exists (stores with optional derived parts list
   * only their core parts); every write forces the marker
-  * (`VersionedState.write`). A replayed batch id that is already
+  * (`VersionedState.write`). A version's parts go through
+  * `VersionedState.writeParts`: all but the last concurrently, in the
+  * `ingest` scheduler pool, and the last — a core part — once they have
+  * all committed. A replayed batch id that is already
   * committed is skipped: a delta depends only on its batch's rows, and
   * rewriting it in place would race a concurrent reader.
   *
@@ -321,15 +373,15 @@ class VersionedStore private[streaming] (
     */
   private[streaming] def commit(batchId: Long)(writeDelta: String => Unit): Unit = {
     if (batchId > version && !markerCommitted(dir, s"v$batchId", parts))
-      writeDelta(s"$dir/v$batchId")
+      inIngestPool(spark)(writeDelta(s"$dir/v$batchId"))
     version = math.max(version, batchId)
   }
 
   /** Major compaction through the newest committed version: `fold`
     * maps the read set to the base's parts, written into `c<through>`
-    * in order; caches the fold takes through `ReadView.cached` are
-    * released after the writes. Returns the compacted-through version,
-    * or -1 when nothing is committed.
+    * by `writeParts` (the last part last); caches the fold takes
+    * through `ReadView.cached` are released after the writes. Returns
+    * the compacted-through version, or -1 when nothing is committed.
     */
   private[streaming] def majorCompact(deleteSubsumed: Boolean)(fold: Compaction.Fold): Long = {
     val (bases, deltas) = committedSets(dir, parts)
@@ -338,9 +390,9 @@ class VersionedStore private[streaming] (
     val key = readSetFrom(bases, deltas, through)
     // a base with nothing above it already IS the fold: rewriting it in
     // place while reading it would delete the only copy of the store
-    if (key != (Some(through), Nil)) {
+    if (key != (Some(through), Nil)) inIngestPool(spark) {
       val v = view(key)
-      try fold(v).foreach { case (p, df) => write(df, partDir(s"$dir/c$through", p)) }
+      try writeParts(fold(v), s"$dir/c$through")
       finally v.release()
     }
     if (deleteSubsumed) sweep(dir, parts, through)
@@ -419,9 +471,17 @@ private[streaming] final class ReadView(
   private var held = List.empty[DataFrame]
 
   /** Cache `df` until the compaction that owns this view has written
-    * its base.
+    * its base, and fill the cache now, in one job: parts written at the
+    * same time that each found it empty would each plan and run the
+    * fill in jobs of their own.
     */
-  def cached(df: DataFrame): DataFrame = { held ::= df.cache(); df }
+  def cached(df: DataFrame): DataFrame = {
+    held ::= df.cache()
+    df.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder
+    }.foreach(b => spark.sparkContext.runJob(b.cachedColumnBuffers, (_: Iterator[_]) => ()))
+    df
+  }
 
   def release(): Unit = held.foreach(_.unpersist())
 }

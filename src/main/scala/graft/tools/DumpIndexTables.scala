@@ -29,6 +29,10 @@ object DumpIndexTables {
     case x => x.toString
   }
 
+  /** `df`'s rows rendered and sorted, its columns in name order. */
+  private[graft] def sortedRows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toSeq: _*).collect().map(render).sorted.toSeq
+
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: DumpIndexTables <sfDir> <wiki.xml> <outDir>")
     val Array(sf, xml, out) = args
@@ -37,10 +41,9 @@ object DumpIndexTables {
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(out).mkdirs()
     def dump(name: String, df: DataFrame): Unit = {
-      val cols = df.columns.sorted
-      val rows = df.select(cols.map(col): _*).collect().map(render).sorted
+      val rows = sortedRows(df)
       val w = new java.io.PrintWriter(s"$out/$name.txt")
-      try { w.println(cols.mkString(",")); rows.foreach(w.println) } finally w.close()
+      try { w.println(df.columns.sorted.mkString(",")); rows.foreach(w.println) } finally w.close()
       println(f"$name%-40s ${rows.length}%7d rows")
     }
     def dumpIndex(tag: String, ix: WikiIndex): Unit =

@@ -33,7 +33,9 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   * multi-second index-build job HOLDS the scheduler head and every
   * sub-second query queues behind it (measured 15× degradation);
   * FAIR interleaves the two pools' tasks and is what a serving
-  * deployment must configure. Run both to see the difference.
+  * deployment must configure. Run both to see the difference. Without
+  * `fair` the probe sets FIFO mode itself (`Sessions.builder` defaults
+  * to FAIR), so the pool names are ignored.
   *
   * Usage: `IngestLoadProbe [sfDir] [fair]`.
   */
@@ -45,8 +47,7 @@ object IngestLoadProbe {
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val b = Sessions.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-    val spark = (if (fair) b.config("spark.scheduler.mode", "FAIR") else b)
-      .getOrCreate()
+    val spark = b.config("spark.scheduler.mode", if (fair) "FAIR" else "FIFO").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println(s"[probe] scheduler=${if (fair) "FAIR (serving/ingest pools)" else "FIFO"}")
     // per-thread pool assignment: local properties are inherited by the

@@ -403,14 +403,143 @@ class StreamingSpec extends SparkSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars"), 2L)
     val k = Compaction.compactEngine(spark, dir, deleteSubsumed = false)
     assert(k == 2L)
-    // `tombstones` is the last core part: once its marker exists, c<k>
-    // counts as committed, so every derived part must already be there
+    // `tombstones` is the last core part: once its marker exists, a
+    // version counts as committed, so every other part must already be
+    // there — in the compacted base and in a micro-batch's delta alike
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def markedAt(part: String): Long =
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/c$k/$part/_SUCCESS")).getModificationTime
-    val committedAt = markedAt("tombstones")
-    for (p <- LiveEngineMaintainer.DerivedParts)
-      assert(markedAt(p) <= committedAt, s"derived part $p was written after c$k committed")
+    def assertCommitsLast(version: String, parts: Seq[String]): Unit = {
+      def markedAt(part: String): Long =
+        fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/$version/$part/_SUCCESS")).getModificationTime
+      val committedAt = markedAt("tombstones")
+      for (p <- parts.filter(_ != "tombstones"))
+        assert(markedAt(p) <= committedAt, s"part $p was written after $version committed")
+    }
+    assertCommitsLast(s"c$k", LiveEngineMaintainer.Parts)
+    // an undeclared store's delta carries no field_postings part
+    assertCommitsLast("v2", LiveEngineMaintainer.Parts.filter(_ != "field_postings"))
+  }
+
+  test("concurrent part writes: every part of three local batches equals the in-memory build") {
+    import graft.ingest.IndexBuilder
+    import graft.tools.DumpIndexTables.sortedRows
+    // local (createDataFrame(Seq)) batches are the shape a frame shared
+    // by concurrently optimized parts can corrupt: the optimizer
+    // evaluates their projections on the driver
+    val dir = java.nio.file.Files.createTempDirectory("graft-live-concurrent").toString
+    val m = new LiveEngineMaintainer(spark, dir, numPartitions = 4)
+    val rnd = new scala.util.Random(11)
+    val vocab = Vector.tabulate(500)(i => s"t${i * 7919 % 1000}") ++ Seq("alpha", "beta", "gamma")
+    for (b <- 0 until 3) {
+      val docs = (0 until 400).map { i =>
+        val text = Seq.fill(2 + rnd.nextInt(14))(vocab(rnd.nextInt(vocab.size)))
+          .mkString(if (rnd.nextInt(10) == 0) "  " else " ")
+        (b * 400L + i, text, if (rnd.nextBoolean()) "en" else "de", s"s${rnd.nextInt(4)}",
+          text.length.toLong)
+      }
+      val batch = spark.createDataFrame(docs).toDF("doc_id", "text", "lang", "source", "n_chars")
+      m.processBatch(batch, b.toLong)
+      val expected = LiveEngineMaintainer.indexParts(
+        IndexBuilder.fromDocumentsTable(spark, batch, 4), m.emptyTombstones)
+      assert(new java.io.File(s"$dir/v$b").list().toSet == expected.map(_._1).toSet)
+      for ((p, df) <- expected) {
+        val (got, want) = (sortedRows(spark.read.parquet(s"$dir/v$b/$p")), sortedRows(df))
+        if (got != want) fail(s"v$b/$p differs from the in-memory build: ${got.diff(want).size} " +
+          s"rows only on disk, e.g. ${got.diff(want).take(2)}; ${want.diff(got).size} only in memory")
+      }
+    }
+  }
+
+  test("a failed part write: its own error, nothing committed, no writer thread left, a fixed replay commits") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-live-failed-part").toString
+    val boom = "part write failed on purpose"
+    // the extra field feeds docs_fields, events and metadata: those parts
+    // fail for doc 99, the others write
+    val m = new LiveEngineMaintainer(spark, dir, numPartitions = 2, extraFields = Map(
+      "CHECK" -> when(col("doc_id") === 99L, raise_error(lit(boom))).otherwise(col("source"))))
+    def docs(ids: Long*) = ids.map(i => (i, s"alpha w$i", "en", "s1", 8L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    m.processBatch(docs(1L, 2L), 0L)
+    val before = (m.latestVersion, m.serveSnapshot())
+    val e = intercept[Exception](m.processBatch(docs(3L, 99L), 1L))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e.toString)
+    assert(String.valueOf(e.getMessage).contains(boom), e.toString)
+    assert(!VersionedState.exists(s"$dir/v1/tombstones/_SUCCESS"))
+    assert((m.latestVersion, m.serveSnapshot()) == before)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.isAlive && t.getName.startsWith(VersionedState.WriterThread)), "a part writer outlived its batch")
+    m.processBatch(docs(3L, 4L), 1L)
+    assert(m.latestVersion == 1L && VersionedState.exists(s"$dir/v1/tombstones/_SUCCESS"))
+    assert(m.latestIndex.get.docsFields.select("docId").distinct().as[String].collect().sorted.toSeq ==
+      Seq("1", "2", "3", "4"))
+  }
+
+  test("a live batch's and a compaction's jobs carry the caller's job group and tag in the ingest pool; a reader's carry none") {
+    import org.apache.spark.scheduler.{SchedulingMode, SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    // the pools `Sessions.builder` configures: FIFO inside each
+    assert(sc.getPoolForName(VersionedState.IngestPool).exists(_.schedulingMode == SchedulingMode.FIFO))
+    assert(sc.getPoolForName("default").exists(_.schedulingMode == SchedulingMode.FIFO))
+    val dir = java.nio.file.Files.createTempDirectory("graft-live-attribution").toString
+    val m = new LiveEngineMaintainer(spark, dir, numPartitions = 2)
+    def docs(ids: Long*) = ids.map(i => (i, s"alpha w$i", "en", "s1", 8L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    m.processBatch(docs(1L, 2L), 0L)
+    val (group, tag, readerGroup, marker) =
+      ("live-writer-group", "live-writer-tag", "live-reader-group", "live-attribution-marker")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.properties)
+    }
+    sc.addSparkListener(listener)
+    @volatile var writing = true
+    // made before the caller sets its group and tag: a thread inherits
+    // the local properties of the thread that makes it
+    val reader = new Thread(() => {
+      sc.setJobGroup(readerGroup, "reader beside the writer")
+      while (writing)
+        try m.latestIndex.get.docsFields.count()
+        catch { case _: Exception => () } // a read racing the writer may fail; its jobs count
+    })
+    try {
+      reader.start()
+      sc.setJobGroup(group, "live writer")
+      sc.addJobTag(tag)
+      try {
+        m.processBatch(docs(3L, 4L), 1L)
+        Compaction.compactEngine(spark, dir, deleteSubsumed = false)
+      } finally { sc.clearJobGroup(); sc.removeJobTag(tag) }
+      writing = false
+      reader.join()
+      // listener events arrive in order: once the marker job is seen, so
+      // is every job before it
+      sc.setJobGroup(marker, "listener bus marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      def seen = jobs.asScala.toSeq
+      while (!seen.exists(_.getProperty("spark.jobGroup.id") == marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    def tagsOf(p: java.util.Properties) =
+      Option(p.getProperty("spark.job.tags")).toSeq.flatMap(_.split(","))
+    // a streaming query some other test left running is neither side
+    val byGroup = jobs.asScala.toSeq.filter(_.getProperty("sql.streaming.queryId") == null)
+      .groupBy(p => Option(p.getProperty("spark.jobGroup.id")))
+    assert(byGroup.keySet == Set(Some(group), Some(readerGroup), Some(marker)),
+      s"jobs outside the writer and the reader: ${byGroup.keySet}")
+    val writer = byGroup(Some(group))
+    assert(writer.size >= 10, s"${writer.size} writer jobs")
+    writer.foreach { p =>
+      assert(tagsOf(p).contains(tag), p)
+      assert(p.getProperty("spark.scheduler.pool") == VersionedState.IngestPool, p)
+    }
+    val read = byGroup(Some(readerGroup))
+    assert(read.nonEmpty)
+    read.foreach { p =>
+      assert(!tagsOf(p).contains(tag), p)
+      assert(p.getProperty("spark.scheduler.pool") != VersionedState.IngestPool, p)
+    }
   }
 
   test("live store serves suffix/infix from delta reverse/trigram parts with pushed prefixes, and BM25 from materialized doc lengths") {
