@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions.tokenizeWs
 
 /** Training-data curation operators: deterministic splits, stratified
   * sampling, eval-set decontamination, domain mixture weights, and
@@ -97,7 +98,7 @@ object Curation {
       .withColumn("bucket", bucketUdf(SplitSalt)(col("doc_id")))
       .withColumn("split", splitCol(col("bucket"), trainPermille, valPermille))
       .select(col("split"), col("n_chars"),
-        size(Dedup.toks(col("text"))).cast("long").as("n_tok"),
+        size(tokenizeWs(col("text"))).cast("long").as("n_tok"),
         termUdf(col("doc_id"), col("n_chars")).as("t"))
       .groupBy("split")
       .agg(
@@ -128,18 +129,7 @@ object Curation {
     */
   def shuffleOrder(docs: DataFrame, seed: Long = ShuffleSalt,
       buckets: Int = 1024): DataFrame = {
-    require(buckets >= 1 && (buckets & (buckets - 1)) == 0,
-      s"buckets must be a power of two: $buckets")
-    // hf: sign-bit-flipped hash, so SIGNED ordering = unsigned hash
-    // order; bkt: the hash's top bits — monotone in that same order,
-    // so bucket boundaries respect it
-    val shift = 64 - java.lang.Integer.numberOfTrailingZeros(buckets)
-    val hUdf = udf { id: Long =>
-      val h = Dedup.mix64(id ^ seed)
-      ((if (buckets == 1) 0L else h >>> shift).toInt, h ^ Long.MinValue)
-    }
-    val withH = docs.select(col("doc_id"), hUdf(col("doc_id")).as("hb"))
-      .select(col("doc_id"), col("hb._1").as("bkt"), col("hb._2").as("hf"))
+    val withH = hashOrder(docs, seed, buckets)
     val counts = withH.groupBy("bkt").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = (0 until buckets).scanLeft(0L)((acc, b) => acc + counts.getOrElse(b, 0L))
@@ -178,34 +168,9 @@ object Curation {
   def sourceCap(docs: DataFrame, cap: Int, seed: Long = SourceCapSalt,
       buckets: Int = 1024): DataFrame = {
     require(cap >= 0, s"cap must be >= 0: $cap")
-    require(buckets >= 1 && (buckets & (buckets - 1)) == 0,
-      s"buckets must be a power of two: $buckets")
-    val shift = 64 - java.lang.Integer.numberOfTrailingZeros(buckets)
-    // hf: sign-bit-flipped hash (signed order = unsigned hash order);
-    // bkt: the hash's top bits — monotone in that order (shuffleOrder's
-    // construction), so (bkt, hf) sorts exactly as hf
-    val hUdf = udf { id: Long =>
-      val h = Dedup.mix64(id ^ seed)
-      ((if (buckets == 1) 0L else h >>> shift).toInt, h ^ Long.MinValue)
-    }
-    val withH = docs.select(col("doc_id"), col("source"), hUdf(col("doc_id")).as("hb"))
-      .select(col("doc_id"), col("source"), col("hb._1").as("bkt"), col("hb._2").as("hf"))
-    val wCum = org.apache.spark.sql.expressions.Window
-      .partitionBy("source").orderBy("bkt")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val cum = withH.groupBy("source", "bkt").agg(count(lit(1)).as("n"))
-      .withColumn("below", coalesce(sum(col("n")).over(wCum), lit(0L)))
-    val tagged = withH.join(cum, Seq("source", "bkt"))
-    val keepWhole = tagged.filter(col("below") + col("n") <= cap).select("doc_id")
-    val wRk = org.apache.spark.sql.expressions.Window
-      .partitionBy("source", "bkt").orderBy(col("hf"), col("doc_id"))
-    val boundary = tagged
-      .filter(col("below") < cap && col("below") + col("n") > cap)
-      .withColumn("rk", row_number().over(wRk).cast("long"))
-      .filter(col("rk") <= lit(cap.toLong) - col("below"))
-      .select("doc_id")
+    val kept = prefixKept(docs, lit(1L), cap, seed, buckets)
     docs.select(col("doc_id"), col("source"))
-      .join(keepWhole.unionByName(boundary).withColumn("kept", lit(true)),
+      .join(kept.withColumn("kept", lit(true)),
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"),
         when(col("kept"), lit("keep")).otherwise(lit("drop")).as("verdict"))
@@ -233,6 +198,24 @@ object Curation {
   def tokenBudget(docs: DataFrame, budget: Long,
       seed: Long = TokenBudgetSalt, buckets: Int = 1024): DataFrame = {
     require(budget >= 0, s"budget must be >= 0: $budget")
+    val nTokens = size(tokenizeWs(col("text"))).cast("long")
+    val kept = prefixKept(docs, nTokens, budget, seed, buckets)
+    docs.select(col("doc_id"), col("source"), nTokens.as("n_tokens"))
+      .join(kept.withColumn("kept", lit(true)),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), col("source"), col("n_tokens"),
+        when(col("kept"), lit("keep")).otherwise(lit("drop")).as("verdict"))
+  }
+
+  /** The hash order shared by `shuffleOrder`, `sourceCap` and
+    * `tokenBudget`: (doc_id, `cols`…, bkt, hf) where hf is the salted
+    * splitmix64(doc_id) with its sign bit flipped (so SIGNED ordering =
+    * unsigned hash order) and bkt the hash's top log2(buckets) bits —
+    * monotone in that same order, so bucket boundaries respect it and
+    * (bkt, hf) sorts exactly as hf.
+    */
+  private def hashOrder(docs: DataFrame, seed: Long, buckets: Int,
+      cols: Column*): DataFrame = {
     require(buckets >= 1 && (buckets & (buckets - 1)) == 0,
       s"buckets must be a power of two: $buckets")
     val shift = 64 - java.lang.Integer.numberOfTrailingZeros(buckets)
@@ -240,36 +223,42 @@ object Curation {
       val h = Dedup.mix64(id ^ seed)
       ((if (buckets == 1) 0L else h >>> shift).toInt, h ^ Long.MinValue)
     }
-    val withH = docs.select(col("doc_id"), col("source"),
-        size(Dedup.toks(col("text"))).cast("long").as("n_tokens"),
-        hUdf(col("doc_id")).as("hb"))
-      .select(col("doc_id"), col("source"), col("n_tokens"),
-        col("hb._1").as("bkt"), col("hb._2").as("hf"))
+    val withHb = docs.select(col("doc_id") +: cols :+ hUdf(col("doc_id")).as("hb"): _*)
+    withHb.select(withHb.columns.init.map(col) ++
+      Seq(col("hb._1").as("bkt"), col("hb._2").as("hf")): _*)
+  }
+
+  /** The prefix rule behind `sourceCap` (weight 1 per document) and
+    * `tokenBudget` (weight = its token count): the doc_ids each source
+    * keeps, walking its documents in hash order while the source's
+    * running `weight` total stays within `limit`. The running total
+    * below each bucket is a per-source window over ≤ `buckets` ROWS;
+    * buckets wholly under the limit keep all rows sort-free, and only
+    * the one boundary bucket per source runs an in-bucket running sum.
+    */
+  private def prefixKept(docs: DataFrame, weight: Column, limit: Long,
+      seed: Long, buckets: Int): DataFrame = {
+    val withH = hashOrder(docs, seed, buckets, col("source"), weight.as("w"))
     val wCum = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("bkt")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val cum = withH.groupBy("source", "bkt")
-      .agg(sum(col("n_tokens")).as("t"))
+      .agg(sum(col("w")).as("t"))
       .withColumn("below", coalesce(sum(col("t")).over(wCum), lit(0L)))
     val tagged = withH.join(cum, Seq("source", "bkt"))
-    val keepWhole = tagged.filter(col("below") + col("t") <= budget).select("doc_id")
+    val keepWhole = tagged.filter(col("below") + col("t") <= limit).select("doc_id")
     // exactly one boundary bucket per source: the first whose cumulative
-    // total crosses the budget. In-bucket running sum in hash order —
-    // keep while the source's running total stays within budget.
+    // total crosses the limit. In-bucket running sum in hash order —
+    // keep while the source's running total stays within the limit.
     val wRun = org.apache.spark.sql.expressions.Window
       .partitionBy("source", "bkt").orderBy(col("hf"), col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val boundary = tagged
-      .filter(col("below") < budget && col("below") + col("t") > budget)
-      .withColumn("run", sum(col("n_tokens")).over(wRun))
-      .filter(col("below") + col("run") <= budget)
+      .filter(col("below") < limit && col("below") + col("t") > limit)
+      .withColumn("run", sum(col("w")).over(wRun))
+      .filter(col("below") + col("run") <= limit)
       .select("doc_id")
-    docs.select(col("doc_id"), col("source"),
-        size(Dedup.toks(col("text"))).cast("long").as("n_tokens"))
-      .join(keepWhole.unionByName(boundary).withColumn("kept", lit(true)),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"), col("n_tokens"),
-        when(col("kept"), lit("keep")).otherwise(lit("drop")).as("verdict"))
+    keepWhole.unionByName(boundary)
   }
 
   /** Stratified downsampling: keep a document iff its (independent)
@@ -318,7 +307,7 @@ object Curation {
     require(targetDocs >= 0, s"targetDocs must be >= 0: $targetDocs")
     val per = docs.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(Dedup.toks(col("text"))).cast("long")).as("n_tokens"))
+        sum(size(tokenizeWs(col("text"))).cast("long")).as("n_tokens"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
     val weights = per.map { case (_, _, nt) => math.sqrt(nt.toDouble).toLong }
@@ -447,14 +436,10 @@ object Curation {
       col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash")
     val cand = Dedup.minhashBands(setsC, bands).as("x")
       .join(Dedup.minhashBands(setsE, bands).as("y"), bandEq)
-      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("eval_id"))
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-    val hits = cand
-      .join(setsC.select(col("doc_id"), col("elems").as("tc")), "doc_id")
-      .join(setsE.select(col("doc_id").as("eval_id"), col("elems").as("te")), "eval_id")
-      .filter(size(array_intersect(col("tc"), col("te"))) * lit(1.0) /
-        size(array_union(col("tc"), col("te"))) >= tau)
-      .groupBy("doc_id").agg(count(lit(1)).as("n_eval_neardups"))
+    val hits = Dedup.jaccardVerified(cand, setsC, setsE, tau)
+      .groupBy(col("a").as("doc_id")).agg(count(lit(1)).as("n_eval_neardups"))
     docs.select(col("doc_id"))
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -507,7 +492,7 @@ object Curation {
     val per = docs
       .groupBy(domain.as("source"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(Dedup.toks(col("text"))).cast("long")).as("n_tokens"))
+        sum(size(tokenizeWs(col("text"))).cast("long")).as("n_tokens"))
     // r13: the total derives IN-PLAN as an unpartitioned window over
     // the aggregated per-source rows, instead of the old eager
     // `per.agg(sum).collect()` — which ran the corpus-scale
@@ -610,7 +595,7 @@ object Curation {
            |  else $negB + ${div("doc_id", maxId, posB)} end as int)""".stripMargin
       }
     val withPid = docs
-      .select(col("doc_id"), size(Dedup.toks(col("text"))).cast("long").as("n_tokens"))
+      .select(col("doc_id"), size(tokenizeWs(col("text"))).cast("long").as("n_tokens"))
       // integer `div` keeps bucketing exact for any id domain (long `/`
       // would round through double)
       .withColumn("pid", expr(pidExpr))
@@ -660,7 +645,7 @@ object Curation {
     */
   def qualityGate(docs: DataFrame, qPermille: Int = 250): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scorable = docs.filter(size(TextAnalysis.toks(col("text"))) > 0)
+    val scorable = docs.filter(size(tokenizeWs(col("text"))) > 0)
     val scored = TextAnalysis.quality(scorable)
       .select(col("doc_id"), col("distinct_permille"))
     val hist = scored.groupBy("distinct_permille").agg(count(lit(1)).as("cnt"))
@@ -701,7 +686,7 @@ object Curation {
     require(chunkSize >= 1 && stride >= 1 && stride <= chunkSize,
       s"chunking needs 1 <= stride <= chunkSize: size=$chunkSize stride=$stride")
     docs
-      .select(col("doc_id"), TextAnalysis.toks(col("text")).as("tk"))
+      .select(col("doc_id"), tokenizeWs(col("text")).as("tk"))
       .filter(size(col("tk")) > 0)
       .select(col("doc_id"), col("tk"),
         explode(sequence(lit(0), size(col("tk")) - 1, lit(stride))).as("start"))
@@ -793,7 +778,7 @@ object Curation {
     */
   def dsirCounts(docs: DataFrame, isTarget: Column): DataFrame =
     docs.select(col("doc_id"), isTarget.as("tgt"),
-        explode(TextAnalysis.toks(col("text"))).as("token"))
+        explode(tokenizeWs(col("text"))).as("token"))
       .groupBy("token").agg(
         count(lit(1)).as("cr"),
         sum(when(col("tgt"), 1L).otherwise(0L)).as("ct"))
@@ -876,7 +861,7 @@ object Curation {
   def dsirScoreWithFloor(docs: DataFrame, cnt: DataFrame,
       broadcastModel: Boolean = true): DataFrame = {
     val occ = docs.select(col("doc_id"),
-        explode(TextAnalysis.toks(col("text"))).as("token"))
+        explode(tokenizeWs(col("text"))).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("occ"))
     val model = dsirModel(cnt)
     val modelSide = if (broadcastModel) broadcast(model) else model
@@ -911,7 +896,7 @@ object Curation {
   def dsirScoreWith(docs: DataFrame, model: DataFrame,
       broadcastModel: Boolean = true, oovLr: Option[Long] = None): DataFrame = {
     val occ = docs.select(col("doc_id"),
-        explode(TextAnalysis.toks(col("text"))).as("token"))
+        explode(tokenizeWs(col("text"))).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("occ"))
     val modelSide = if (broadcastModel) broadcast(model) else model
     oovLr match {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions.tokenizeWs
 
 /** Large-scale corpus deduplication operators: exact, n-gram Jaccard,
   * MinHash+LSH, SimHash. All are pure DataFrame programs on their data
@@ -10,10 +11,6 @@ import org.apache.spark.sql.functions._
   * driver-side below an explicit edge threshold.)
   */
 object Dedup {
-
-  /** Whitespace tokens (parity with the harness corpus + oracle). */
-  def toks(text: Column): Column =
-    filter(split(text, " "), t => length(t) > 0)
 
   /** Per-`n` UDF instances, built once and reused for every call.
     * This is a CACHE-CORRECTNESS device, not a convenience: Spark's
@@ -529,7 +526,7 @@ object Dedup {
     require(k >= 1, s"block size must be >= 1: $k")
     val blocks = docs
       .select(col("doc_id"),
-        filter(split(col("text"), " "), x => x =!= "").as("tk"))
+        tokenizeWs(col("text")).as("tk"))
       .filter(size(col("tk")) > 0)
       .select(col("doc_id"), posexplode(
         transform(
@@ -670,7 +667,7 @@ object Dedup {
     // to string-set jaccard up to fnv1a collisions (~|shingles|²/2⁶⁴)
     val sets =
       (if (shingleN <= 1)
-         docs.select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("shingle"))
+         docs.select(col("doc_id"), explode(array_distinct(tokenizeWs(col("text")))).as("shingle"))
            .select(col("doc_id"), tokenHashUdf(col("shingle")).as("sh"))
        else shingleHashes(docs, shingleN))
         .groupBy("doc_id").agg(collect_set(col("sh")).as("elems"))
@@ -688,15 +685,24 @@ object Dedup {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
+    jaccardVerified(candidates, sets, sets, tau)
+  }
+
+  /** The exact verify step of the MinHash family: each candidate pair
+    * (a, b) joins its two element-hash sets (a's from `setsA`, b's from
+    * `setsB`) and is kept iff its exact Jaccard is ≥ `tau`, reported to
+    * 4 dp.
+    */
+  private[pipeline] def jaccardVerified(candidates: DataFrame, setsA: DataFrame,
+      setsB: DataFrame, tau: Double): DataFrame =
     candidates
-      .join(sets.select(col("doc_id").as("a"), col("elems").as("ta")), "a")
-      .join(sets.select(col("doc_id").as("b"), col("elems").as("tb")), "b")
+      .join(setsA.select(col("doc_id").as("a"), col("elems").as("ta")), "a")
+      .join(setsB.select(col("doc_id").as("b"), col("elems").as("tb")), "b")
       .withColumn("jaccard",
         size(array_intersect(col("ta"), col("tb"))) * lit(1.0) /
           size(array_union(col("ta"), col("tb"))))
       .filter(col("jaccard") >= tau)
       .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
-  }
 
   /** Incremental MinHash LSH: near-dup pairs touching a FRESH shard —
     * fresh×fresh (a < b) plus corpus×fresh (a = corpus doc, b = fresh
@@ -754,15 +760,7 @@ object Dedup {
           bOld.as("x").join(bNew.as("y"), bandEq && col("x.doc_id") =!= col("y.doc_id"))
             .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")))
         .distinct()
-    val allSets = setsOld.union(setsNew)
-    candidates
-      .join(allSets.select(col("doc_id").as("a"), col("elems").as("ta")), "a")
-      .join(setsNew.select(col("doc_id").as("b"), col("elems").as("tb")), "b")
-      .withColumn("jaccard",
-        size(array_intersect(col("ta"), col("tb"))) * lit(1.0) /
-          size(array_union(col("ta"), col("tb"))))
-      .filter(col("jaccard") >= tau)
-      .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
+    jaccardVerified(candidates, setsOld.union(setsNew), setsNew, tau)
   }
 
   // ---- SimHash ------------------------------------------------------------
@@ -785,7 +783,7 @@ object Dedup {
 
   def simhashes(docs: DataFrame): DataFrame =
     graft.Tables.fanOut(docs)
-      .select(col("doc_id"), simhashUdf(toks(col("text"))).as("simhash"))
+      .select(col("doc_id"), simhashUdf(tokenizeWs(col("text"))).as("simhash"))
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxDist, found by
     * chunk-banding (pigeonhole: distance ≤ c-1 over c chunks guarantees

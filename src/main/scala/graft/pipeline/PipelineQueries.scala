@@ -260,6 +260,53 @@ object PipelineQueries {
     s"(${d(a, b)} / (sqrt(${d(a, a)}) * sqrt(${d(b, b)})))"
   }
 
+  /** Exact brute-force top-5 of every 100th vector — the oracle of
+    * `sim_topk`, and of `sim_ivf_full_probe`, whose full probe must equal it.
+    */
+  private def bruteTopKSql: String =
+    s"""SELECT query_id, rank, neighbor_id, cosine FROM (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |    ROUND(${cosSql("q.embedding", "c.embedding")}, 4) AS cosine,
+       |    CAST(row_number() OVER (PARTITION BY q.vec_id
+       |      ORDER BY ${cosSql("q.embedding", "c.embedding")} DESC, c.vec_id)
+       |      AS INTEGER) AS rank
+       |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+       |  WHERE q.vec_id % 100 = 0) t
+       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** The λ = 0.5, k = 4 MMR greedy over a `pool` CTE (query_id, nid,
+    * rel) — the oracle side of `Similarity.mmrGreedy`, shared by
+    * `sim_mmr` and `sim_mmr_ivf`, which differ only in their pool. Its
+    * lines keep their `|` margins: the caller's `stripMargin` strips them.
+    */
+  private def mmrGreedySql: String =
+    s"""pp AS (
+       |  SELECT a.query_id, a.nid AS x, b.nid AS y,
+       |    ${cosSql("ea.embedding", "eb.embedding")} AS sim
+       |  FROM pool a JOIN pool b ON a.query_id = b.query_id AND a.nid <> b.nid
+       |  JOIN embeddings ea ON ea.vec_id = a.nid
+       |  JOIN embeddings eb ON eb.vec_id = b.nid),
+       |sel AS (
+       |  SELECT query_id, 1 AS rank, nid, rel, rel AS score, [nid] AS picked
+       |  FROM (SELECT query_id, nid, rel,
+       |          row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, nid) AS rn
+       |        FROM pool) t WHERE rn = 1
+       |  UNION ALL
+       |  SELECT s.query_id, s.rank + 1, c.nid, c.rel, c.score,
+       |         list_append(s.picked, c.nid)
+       |  FROM sel s, LATERAL (
+       |    SELECT p.nid, p.rel,
+       |      0.5 * p.rel - 0.5 * (SELECT max(pp.sim) FROM pp
+       |        WHERE pp.query_id = s.query_id AND pp.x = p.nid
+       |          AND list_contains(s.picked, pp.y)) AS score
+       |    FROM pool p
+       |    WHERE p.query_id = s.query_id AND NOT list_contains(s.picked, p.nid)
+       |    ORDER BY score DESC, p.nid LIMIT 1) c
+       |  WHERE s.rank < 4)
+       |SELECT query_id, CAST(rank AS INTEGER) AS rank, nid AS neighbor_id,
+       |  ROUND(rel, 4) AS cosine, ROUND(score, 4) AS mmr
+       |FROM sel ORDER BY query_id, rank"""
+
   /** DuckDB re-derivation of `Similarity.lshPairs` / `lshPairsMulti`:
     * plane weights from the same fnv1a+fmix64 integer hash (mod-2⁶⁴
     * arithmetic via HUGEINT, exactly the dd_simhash technique), bucket =
@@ -618,15 +665,7 @@ object PipelineQueries {
 
     NamedQuery(
       "sim_topk",
-      s"""SELECT query_id, rank, neighbor_id, cosine FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ROUND(${cosSql("q.embedding", "c.embedding")}, 4) AS cosine,
-         |    CAST(row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${cosSql("q.embedding", "c.embedding")} DESC, c.vec_id)
-         |      AS INTEGER) AS rank
-         |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         |  WHERE q.vec_id % 100 = 0) t
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
+      bruteTopKSql) { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
       Similarity.topK(emb, emb.filter(col("vec_id") % 100 === 0), k = 5)
         .orderBy("query_id", "rank")
@@ -713,32 +752,7 @@ object PipelineQueries {
          |    FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
          |    WHERE q.vec_id % 100 = 0) t
          |  WHERE rn <= 8),
-         |pp AS (
-         |  SELECT a.query_id, a.nid AS x, b.nid AS y,
-         |    ${cosSql("ea.embedding", "eb.embedding")} AS sim
-         |  FROM pool a JOIN pool b ON a.query_id = b.query_id AND a.nid <> b.nid
-         |  JOIN embeddings ea ON ea.vec_id = a.nid
-         |  JOIN embeddings eb ON eb.vec_id = b.nid),
-         |sel AS (
-         |  SELECT query_id, 1 AS rank, nid, rel, rel AS score, [nid] AS picked
-         |  FROM (SELECT query_id, nid, rel,
-         |          row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, nid) AS rn
-         |        FROM pool) t WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.query_id, s.rank + 1, c.nid, c.rel, c.score,
-         |         list_append(s.picked, c.nid)
-         |  FROM sel s, LATERAL (
-         |    SELECT p.nid, p.rel,
-         |      0.5 * p.rel - 0.5 * (SELECT max(pp.sim) FROM pp
-         |        WHERE pp.query_id = s.query_id AND pp.x = p.nid
-         |          AND list_contains(s.picked, pp.y)) AS score
-         |    FROM pool p
-         |    WHERE p.query_id = s.query_id AND NOT list_contains(s.picked, p.nid)
-         |    ORDER BY score DESC, p.nid LIMIT 1) c
-         |  WHERE s.rank < 4)
-         |SELECT query_id, CAST(rank AS INTEGER) AS rank, nid AS neighbor_id,
-         |  ROUND(rel, 4) AS cosine, ROUND(score, 4) AS mmr
-         |FROM sel ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
+         |$mmrGreedySql""".stripMargin) { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
       Similarity.mmrTopK(emb, emb.filter(col("vec_id") % 100 === 0),
           k = 4, pool = 8)
@@ -781,32 +795,7 @@ object PipelineQueries {
          |    JOIN embeddings eq ON eq.vec_id = p.query_id
          |    JOIN embeddings ec ON ec.vec_id = a.vec_id) t
          |  WHERE rn <= 8),
-         |pp AS (
-         |  SELECT a.query_id, a.nid AS x, b.nid AS y,
-         |    ${cosSql("ea.embedding", "eb.embedding")} AS sim
-         |  FROM pool a JOIN pool b ON a.query_id = b.query_id AND a.nid <> b.nid
-         |  JOIN embeddings ea ON ea.vec_id = a.nid
-         |  JOIN embeddings eb ON eb.vec_id = b.nid),
-         |sel AS (
-         |  SELECT query_id, 1 AS rank, nid, rel, rel AS score, [nid] AS picked
-         |  FROM (SELECT query_id, nid, rel,
-         |          row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, nid) AS rn
-         |        FROM pool) t WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.query_id, s.rank + 1, c.nid, c.rel, c.score,
-         |         list_append(s.picked, c.nid)
-         |  FROM sel s, LATERAL (
-         |    SELECT p.nid, p.rel,
-         |      0.5 * p.rel - 0.5 * (SELECT max(pp.sim) FROM pp
-         |        WHERE pp.query_id = s.query_id AND pp.x = p.nid
-         |          AND list_contains(s.picked, pp.y)) AS score
-         |    FROM pool p
-         |    WHERE p.query_id = s.query_id AND NOT list_contains(s.picked, p.nid)
-         |    ORDER BY score DESC, p.nid LIMIT 1) c
-         |  WHERE s.rank < 4)
-         |SELECT query_id, CAST(rank AS INTEGER) AS rank, nid AS neighbor_id,
-         |  ROUND(rel, 4) AS cosine, ROUND(score, 4) AS mmr
-         |FROM sel ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
+         |$mmrGreedySql""".stripMargin) { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
       val ivf = cachedIvf(s, dir)
       Similarity.mmrTopKWith(ivf, emb.filter(col("vec_id") % 100 === 0),
@@ -1004,15 +993,7 @@ object PipelineQueries {
     // merge) that complements sim_ivf_topk's centroid-derived oracle.
     NamedQuery(
       "sim_ivf_full_probe",
-      s"""SELECT query_id, rank, neighbor_id, cosine FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ROUND(${cosSql("q.embedding", "c.embedding")}, 4) AS cosine,
-         |    CAST(row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${cosSql("q.embedding", "c.embedding")} DESC, c.vec_id)
-         |      AS INTEGER) AS rank
-         |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         |  WHERE q.vec_id % 100 = 0) t
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
+      bruteTopKSql) { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
       val ivf = cachedIvf(s, dir)
       Similarity.ivfTopKWith(ivf, emb.filter(col("vec_id") % 100 === 0), k = 5,

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -117,27 +118,86 @@ object Similarity {
     s
   }
 
+  // ---- the vector-search stages ------------------------------------------
+  //
+  // Every search below is a candidate source (all rows, probed IVF cells
+  // or PQ codes), an exact cosine rerank and a per-query result shape,
+  // composed from these stages — one query projection, one cosine, one
+  // scored join, one ranking window, one cell probe.
+
+  /** Query vectors as the broadcast side of a scored join: (query_id,
+    * qemb, qnrm) plus `extra`.
+    */
+  private def queryRows(queries: DataFrame, extra: Column*): DataFrame = {
+    graft.plans.GraftFunctions.register(queries.sparkSession)
+    queries.select(Seq(col("vec_id").as("query_id"), col("embedding").as("qemb"),
+      norm(col("embedding")).as("qnrm")) ++ extra: _*)
+  }
+
+  /** Corpus vectors with their norm — the brute-force candidate source
+    * (`IvfIndex.assigned` carries the same `nrm`, computed at assignment).
+    */
+  private def corpusRows(emb: DataFrame, extra: Column*): DataFrame = {
+    graft.plans.GraftFunctions.register(emb.sparkSession)
+    emb.select(Seq(col("vec_id"), col("embedding"),
+      norm(col("embedding")).as("nrm")) ++ extra: _*)
+  }
+
+  /** Exact cosine of a candidate (embedding, nrm) and its query (qemb, qnrm). */
+  private def exactCosine: Column =
+    (dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cosine")
+
+  /** The scored join: candidate rows to broadcast query rows, projected
+    * to (query_id, neighbor_id, `cols`…). With `onCell` the query rows
+    * carry their probed cells and the join is the equi-join on `cell`
+    * (IVF); otherwise it is the nested-loop `vec_id =!= query_id` join
+    * (brute force). `excludeSelf = false` is for EXTERNAL query vectors
+    * (e.g. /ann?q=…) on the cell join: their query_id is a placeholder,
+    * and filtering on it would silently drop any stored vector that
+    * happens to share the id.
+    */
+  private def scoredJoin(corpus: DataFrame, qs: DataFrame, onCell: Boolean,
+      cols: Seq[Column] = Seq(exactCosine), excludeSelf: Boolean = true): DataFrame = {
+    val joined =
+      if (!onCell) corpus.join(broadcast(qs), col("vec_id") =!= col("query_id"))
+      else {
+        val j = corpus.join(broadcast(qs), Seq("cell"))
+        if (excludeSelf) j.filter(col("vec_id") =!= col("query_id")) else j
+      }
+    joined.select(Seq(col("query_id"), col("vec_id").as("neighbor_id")) ++ cols: _*)
+  }
+
+  /** Brute force: every corpus row scored against every other query. */
+  private def flatScored(emb: DataFrame, queries: DataFrame,
+      cols: Seq[Column] = Seq(exactCosine)): DataFrame =
+    scoredJoin(corpusRows(emb), queryRows(queries), onCell = false, cols)
+
+  /** The per-query ranking: row numbers by (`key` desc, neighbor_id) as
+    * `rank`, first `k` kept (a WindowGroupLimit keeps per-task state at
+    * `k` rows). The unrounded key orders; ties break by neighbor id.
+    */
+  private def ranked(scored: DataFrame, k: Int, key: String = "cosine"): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col(key).desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** The top-k result: (query_id, rank, neighbor_id, cosine to 4 dp). */
+  private def topKOf(scored: DataFrame, k: Int): DataFrame =
+    ranked(scored, k).select(col("query_id"), col("rank"), col("neighbor_id"),
+      round(col("cosine"), 4).as("cosine"))
+
+  /** The range result: every scored row whose UNROUNDED cosine is ≥
+    * `tau`, as (query_id, neighbor_id, cosine to 4 dp).
+    */
+  private def rangeOf(scored: DataFrame, tau: Double): DataFrame =
+    scored.filter(col("cosine") >= tau)
+      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"))
+
   /** Brute-force top-k neighbors for a set of query vectors (broadcast
     * the queries — they are small by definition; the corpus streams).
     */
-  def topK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftFunctions.register(emb.sparkSession)
-    val corpus = emb.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-    val qs = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qemb"), norm(col("embedding")).as("qnrm"))
-    val scored = corpus.join(broadcast(qs), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
-  }
+  def topK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topKOf(flatScored(emb, queries), k)
 
   /** Radius (range) search: every corpus neighbor with cosine ≥ `tau`
     * of each query vector — the all-neighbors companion to `topK`
@@ -153,19 +213,8 @@ object Similarity {
     * source like the other exact producers (IVF cells / LSH buckets
     * prefilter, this thresholds the verified candidates).
     */
-  def rangeSearch(emb: DataFrame, queries: DataFrame, tau: Double): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
-    val corpus = emb.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-    val qs = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qemb"), norm(col("embedding")).as("qnrm"))
-    corpus.join(broadcast(qs), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm"))).as("c"))
-      .filter(col("c") >= tau)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("c"), 4).as("cosine"))
-  }
+  def rangeSearch(emb: DataFrame, queries: DataFrame, tau: Double): DataFrame =
+    rangeOf(flatScored(emb, queries), tau)
 
   /** k-NN majority-vote classification: each query vector takes the modal
     * label among its k nearest CORPUS neighbors by exact cosine (most
@@ -182,7 +231,6 @@ object Similarity {
     */
   def knnClassify(corpus: DataFrame, queries: DataFrame, k: Int,
       neighbors: (DataFrame, DataFrame, Int) => DataFrame = topK): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val nn = neighbors(corpus, queries, k)
       .select(col("query_id"), col("neighbor_id"))
     val labels = corpus.select(col("vec_id").as("neighbor_id"), col("label"))
@@ -228,16 +276,29 @@ object Similarity {
     cents
   }
 
+  /** Nearest centroid (or PQ codeword) by squared L2: strict `<` keeps
+    * the LOWEST index on ties — the oracles' `ORDER BY d, cell` (`code`)
+    * tie-break.
+    */
   def nearestCell(v: Array[Float], cents: Array[Array[Double]]): Int = {
     var best = 0; var bestD = Double.MaxValue; var c = 0
     while (c < cents.length) {
-      val ct = cents(c); var d = 0.0; var i = 0
-      val n = math.min(v.length, ct.length)
-      while (i < n) { val t = v(i) - ct(i); d += t * t; i += 1 }
+      val d = sqDist(v, cents(c))
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
     best
+  }
+
+  /** Squared L2 over the common prefix, folded in dimension order — the
+    * one distance behind cell assignment, the cell probe, PQ encoding
+    * and the ADC table.
+    */
+  private def sqDist(v: Array[Float], ct: Array[Double]): Double = {
+    var d = 0.0; var i = 0
+    val n = math.min(v.length, ct.length)
+    while (i < n) { val t = v(i) - ct(i); d += t * t; i += 1 }
+    d
   }
 
   /** IVF-accelerated top-k: corpus partitioned into k cells (one narrow
@@ -433,24 +494,14 @@ object Similarity {
     */
   def rpTopK(emb: DataFrame, queries: DataFrame, k: Int, dim: Int,
       outDim: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftFunctions.register(emb.sparkSession)
-    val corpus = randomProject(emb, dim, outDim)
-      .select(col("vec_id"), col("embedding"), col("rp"),
-        norm(col("embedding")).as("nrm"), norm(col("rp")).as("rnrm"))
-    val qs = randomProject(queries, dim, outDim)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qemb"),
-        col("rp").as("qrp"), norm(col("embedding")).as("qnrm"),
-        norm(col("rp")).as("qrnrm"))
-    val scored = corpus.join(broadcast(qs), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("rp"), col("qrp")) / (col("rnrm") * col("qrnrm"))).as("rp_cosine"),
-        (dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rp_cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val corpus = corpusRows(randomProject(emb, dim, outDim),
+      col("rp"), norm(col("rp")).as("rnrm"))
+    val qs = queryRows(randomProject(queries, dim, outDim),
+      col("rp").as("qrp"), norm(col("rp")).as("qrnrm"))
+    val scored = scoredJoin(corpus, qs, onCell = false, Seq(
+      (dot(col("rp"), col("qrp")) / (col("rnrm") * col("qrnrm"))).as("rp_cosine"),
+      exactCosine))
+    ranked(scored, k, key = "rp_cosine")
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("rp_cosine"), 4).as("rp_cosine"),
         round(col("cosine"), 4).as("cosine"))
@@ -477,15 +528,7 @@ object Similarity {
   def mmrTopK(emb: DataFrame, queries: DataFrame, k: Int, pool: Int,
       lam: Double = 0.5): DataFrame = {
     require(k >= 1 && pool >= k, s"mmr needs 1 <= k <= pool: k=$k pool=$pool")
-    graft.plans.GraftFunctions.register(emb.sparkSession)
-    val corpus = emb.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-    val qs = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qemb"), norm(col("embedding")).as("qnrm"))
-    val scored = corpus.join(broadcast(qs), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("embedding"),
-        (dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm"))).as("rel"))
-    mmrGreedy(mmrPool(scored, pool), k, lam)
+    mmrGreedy(flatScored(emb, queries, Seq(col("embedding"), exactCosine)), k, pool, lam)
   }
 
   /** MMR over a prebuilt IVF index — the at-scale pool producer: the
@@ -504,34 +547,22 @@ object Similarity {
       lam: Double = 0.5, nprobe: Int = 4,
       allowed: Option[DataFrame] = None): DataFrame = {
     require(k >= 1 && pool >= k, s"mmr needs 1 <= k <= pool: k=$k pool=$pool")
-    val scored = ivfScored(ivf, queries, nprobe, allowed, withEmbedding = true)
-      .withColumnRenamed("cosine", "rel")
-    mmrGreedy(mmrPool(scored, pool), k, lam)
+    mmrGreedy(ivfScored(ivf, queries, nprobe, allowed, Seq(col("embedding"), exactCosine)),
+      k, pool, lam)
   }
 
-  /** Top-`pool` relevance window over a scored candidate set
-    * (query_id, neighbor_id, embedding, rel) — the shared pool stage.
-    * WindowGroupLimit keeps per-task state at `pool` rows.
+  /** Both MMR entry points over a scored candidate set (query_id,
+    * neighbor_id, embedding, cosine): the top-`pool` relevance window,
+    * then the inherently-sequential greedy loop over the pool, run
+    * INSIDE the per-query aggregation row (collect the ≤pool candidates,
+    * one UDF pass) — distributed per query, never a driver loop, bounded
+    * by `pool`, not the corpus.
     */
-  private def mmrPool(scored: DataFrame, pool: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("neighbor_id"))
-    scored
-      // a null embedding yields a null rel (dot is null-intolerant);
-      // topK lets such rows sort last, but here they would NPE the
-      // greedy's pair-cosine folds — excluded from the pool outright
-      .filter(col("rel").isNotNull)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= pool)
-  }
-
-  /** Stage 2 of both MMR entry points: the inherently-sequential greedy
-    * loop over the pool, run INSIDE the per-query aggregation row
-    * (collect the ≤pool candidates, one UDF pass) — distributed per
-    * query, never a driver loop, bounded by `pool`, not the corpus.
-    */
-  private def mmrGreedy(pooled: DataFrame, k: Int, lam: Double): DataFrame = {
+  private def mmrGreedy(scored: DataFrame, k: Int, pool: Int, lam: Double): DataFrame = {
+    // a null embedding yields a null cosine (dot is null-intolerant);
+    // topK lets such rows sort last, but here they would NPE the
+    // greedy's pair-cosine folds — excluded from the pool outright
+    val pooled = ranked(scored.filter(col("cosine").isNotNull), pool)
     val greedy = udf { cands: Seq[org.apache.spark.sql.Row] =>
       val cs = cands.map(r => (r.getLong(0), r.getDouble(1),
         r.getSeq[Float](2).toArray)).toArray
@@ -559,7 +590,7 @@ object Similarity {
     }
     pooled
       .groupBy("query_id")
-      .agg(collect_list(struct(col("neighbor_id"), col("rel"), col("embedding")))
+      .agg(collect_list(struct(col("neighbor_id"), col("cosine"), col("embedding")))
         .as("cands"))
       .select(col("query_id"), explode(greedy(col("cands"))).as("pick"))
       .filter(col("pick._1") <= k)
@@ -703,21 +734,6 @@ object Similarity {
     out
   }
 
-  /** Nearest codeword: strict `<` keeps the LOWEST index on ties — the
-    * oracle's `ORDER BY d, code` tie-break.
-    */
-  private def nearestCode(sv: Array[Float], book: Array[Array[Double]]): Int = {
-    var best = 0; var bestD = Double.MaxValue; var c = 0
-    while (c < book.length) {
-      val cw = book(c); var d = 0.0; var j = 0
-      val n = math.min(sv.length, cw.length)
-      while (j < n) { val t = sv(j) - cw(j); d += t * t; j += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
   /** Train a product quantizer: the embedding space splits into `m`
     * subspaces; each gets its own `k`-codeword k-means. Training runs on
     * a bounded DETERMINISTIC sample (first `trainN` by vec_id — a top-k
@@ -748,7 +764,7 @@ object Similarity {
         .flatMap { v =>
           (0 until m).map { mi =>
             val sv = subvec(v, mi, subDim)
-            (mi, nearestCode(sv, bc.value(mi)), sv.map(_.toDouble))
+            (mi, nearestCell(sv, bc.value(mi)), sv.map(_.toDouble))
           }
         }
         .toDF("m", "code", "sv")
@@ -790,7 +806,7 @@ object Similarity {
     val encodeUdf = udf((v: Seq[Float]) => {
       val a = v.toArray
       Array.tabulate(bc.value.length)(mi =>
-        nearestCode(subvec(a, mi, subDim), bc.value(mi)))
+        nearestCell(subvec(a, mi, subDim), bc.value(mi)))
     })
     emb.select(col("vec_id"), col("embedding"),
       encodeUdf(col("embedding")).as("code"))
@@ -808,61 +824,8 @@ object Similarity {
     * pipeline. Corpus scan cost: one streamed pass over CODES (m bytes
     * per row), not embeddings.
     */
-  def pqTopK(pq: PqIndex, queries: DataFrame, k: Int, shortlist: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = pq.codes.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    val m = pq.books.length
-    val kCodes = pq.books.head.length
-    val subDim = pq.books.head.head.length
-    val bc = spark.sparkContext.broadcast(pq.books)
-    val adcTableUdf = udf((q: Seq[Float]) => {
-      val a = q.toArray
-      val tbl = new Array[Double](m * kCodes)
-      var mi = 0
-      while (mi < m) {
-        var ci = 0
-        while (ci < kCodes) {
-          val cw = bc.value(mi)(ci); var d = 0.0; var j = 0
-          while (j < subDim) { val t = a(mi * subDim + j) - cw(j); d += t * t; j += 1 }
-          tbl(mi * kCodes + ci) = d
-          ci += 1
-        }
-        mi += 1
-      }
-      tbl
-    })
-    val adcDistUdf = udf((tbl: Seq[Double], code: Seq[Int]) => {
-      var d = 0.0; var mi = 0
-      while (mi < m) { d += tbl(mi * kCodes + code(mi)); mi += 1 }
-      d
-    })
-    val qs = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qemb"), adcTableUdf(col("embedding")).as("tbl"))
-    // stage 1: ADC over codes only (ids + m-byte codes wide, never
-    // embeddings), shortlist per query
-    val adc = pq.codes.select(col("vec_id"), col("code"))
-      .join(broadcast(qs.select(col("query_id"), col("tbl"))),
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcDistUdf(col("tbl"), col("code")).as("adc"))
-    val ws = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("neighbor_id"))
-    val short = adc.withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= shortlist)
-      .select("query_id", "neighbor_id")
-    // stage 2: exact cosine rerank of the shortlist only
-    val scored = short
-      .join(pq.codes.select(col("vec_id").as("neighbor_id"),
-        col("embedding"), norm(col("embedding")).as("nrm")), Seq("neighbor_id"))
-      .join(broadcast(qs.select(col("query_id"), col("qemb"),
-        norm(col("qemb")).as("qnrm"))), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cosine"))
-    val wk = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(wk)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
-  }
+  def pqTopK(pq: PqIndex, queries: DataFrame, k: Int, shortlist: Int = 20): DataFrame =
+    adcTopK(pq, None, queries, k, shortlist)
 
   /** IVF-PQ: the standard billion-scale ANN composition — IVF cells
     * prune WHICH candidates are scored (each query reads ~nprobe/cells
@@ -876,60 +839,52 @@ object Similarity {
     * SQL-re-derivable from the two persisted training artifacts.
     */
   def ivfPqTopK(ivf: IvfIndex, pq: PqIndex, queries: DataFrame, k: Int,
-      nprobe: Int = 4, shortlist: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = pq.codes.sparkSession
-    graft.plans.GraftFunctions.register(spark)
+      nprobe: Int = 4, shortlist: Int = 20): DataFrame =
+    adcTopK(pq, Some((ivf, nprobe)), queries, k, shortlist)
+
+  /** The two-stage PQ search behind `pqTopK` and `ivfPqTopK`. Stage 1
+    * ADC-scores candidates over CODES only (ids + m-byte codes, never
+    * embeddings): every code, or with `ivf` the codes of each query's
+    * `nprobe` probed cells. Each query's m×k table of subspace squared
+    * distances to every codeword rides the broadcast; a code's distance
+    * is its m table entries summed in subspace order. The `shortlist`
+    * nearest by (adc, neighbor_id) go to stage 2, the exact cosine
+    * rerank and top-k.
+    */
+  private def adcTopK(pq: PqIndex, ivf: Option[(IvfIndex, Int)], queries: DataFrame,
+      k: Int, shortlist: Int): DataFrame = {
     val m = pq.books.length
     val kCodes = pq.books.head.length
     val subDim = pq.books.head.head.length
-    val bcB = spark.sparkContext.broadcast(pq.books)
-    val bcC = spark.sparkContext.broadcast(ivf.cents)
-    val probeUdf = udf((v: Seq[Float]) => {
-      val a = v.toArray
-      bcC.value.indices
-        .map(c => (c, {
-          var d = 0.0; var i = 0
-          val ct = bcC.value(c); val n = math.min(a.length, ct.length)
-          while (i < n) { val t = a(i) - ct(i); d += t * t; i += 1 }
-          d
-        }))
-        .sortBy(_._2).take(nprobe).map(_._1)
-    })
+    val bc = pq.codes.sparkSession.sparkContext.broadcast(pq.books)
     val adcTableUdf = udf((q: Seq[Float]) => {
       val a = q.toArray
-      val tbl = new Array[Double](m * kCodes)
-      var mi = 0
-      while (mi < m) {
-        var ci = 0
-        while (ci < kCodes) {
-          val cw = bcB.value(mi)(ci); var d = 0.0; var j = 0
-          while (j < subDim) { val t = a(mi * subDim + j) - cw(j); d += t * t; j += 1 }
-          tbl(mi * kCodes + ci) = d
-          ci += 1
-        }
-        mi += 1
-      }
-      tbl
+      Array.tabulate(m) { mi =>
+        val sv = subvec(a, mi, subDim)
+        bc.value(mi).map(sqDist(sv, _))
+      }.flatten
     })
     val adcDistUdf = udf((tbl: Seq[Double], code: Seq[Int]) => {
       var d = 0.0; var mi = 0
       while (mi < m) { d += tbl(mi * kCodes + code(mi)); mi += 1 }
       d
     })
-    val qs = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qemb"), adcTableUdf(col("embedding")).as("tbl"),
-      explode(probeUdf(col("embedding"))).as("cell"))
-    // coded + cell-assigned corpus: at ingest this would be ONE table
-    // (cell-partitioned parquet carrying the code column); here the two
-    // independently-built artifacts join on vec_id
-    val corpus = ivf.assigned.select(col("vec_id"), col("cell"))
-      .join(pq.codes.select(col("vec_id"), col("code")), Seq("vec_id"))
-    val adc = corpus
-      .join(broadcast(qs.select(col("query_id"), col("tbl"), col("cell"))), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcDistUdf(col("tbl"), col("code")).as("adc"))
+    val qs = queryRows(queries, adcTableUdf(col("embedding")).as("tbl"))
+    val codes = pq.codes.select(col("vec_id"), col("code"))
+    val adcCol = Seq(adcDistUdf(col("tbl"), col("code")).as("adc"))
+    val adc = ivf match {
+      case None =>
+        scoredJoin(codes, qs.select(col("query_id"), col("tbl")), onCell = false, adcCol)
+      case Some((ix, nprobe)) =>
+        // coded + cell-assigned corpus: at ingest this would be ONE table
+        // (cell-partitioned parquet carrying the code column); here the
+        // two independently-built artifacts join on vec_id. The queries
+        // explode to one row per probed cell for this join only.
+        scoredJoin(ix.assigned.select(col("vec_id"), col("cell")).join(codes, Seq("vec_id")),
+          qs.select(col("query_id"), col("tbl"),
+            explode(probeCells(ix, nprobe)(col("qemb"))).as("cell")),
+          onCell = true, adcCol)
+    }
     val ws = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("neighbor_id"))
     val short = adc.withColumn("srank", row_number().over(ws))
       .filter(col("srank") <= shortlist)
@@ -937,14 +892,9 @@ object Similarity {
     val scored = short
       .join(pq.codes.select(col("vec_id").as("neighbor_id"),
         col("embedding"), norm(col("embedding")).as("nrm")), Seq("neighbor_id"))
-      .join(broadcast(qs.select(col("query_id"), col("qemb"),
-        norm(col("qemb")).as("qnrm")).distinct()), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cosine"))
-    val wk = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(wk)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
+      .join(broadcast(qs.select(col("query_id"), col("qemb"), col("qnrm"))), Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"), exactCosine)
+    topKOf(scored, k)
   }
 
   /** Probe a prebuilt IVF index (same semantics as `ivfTopK`, minus the
@@ -961,14 +911,8 @@ object Similarity {
     * predicate is index-pushable).
     */
   def ivfTopKWith(ivf: IvfIndex, queries: DataFrame, k: Int, nprobe: Int = 4,
-      allowed: Option[DataFrame] = None, excludeSelf: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = ivfScored(ivf, queries, nprobe, allowed, excludeSelf = excludeSelf)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
-  }
+      allowed: Option[DataFrame] = None, excludeSelf: Boolean = true): DataFrame =
+    topKOf(ivfScored(ivf, queries, nprobe, allowed, excludeSelf = excludeSelf), k)
 
   /** Radius search over a prebuilt IVF index: `rangeSearch`'s threshold
     * semantics restricted to the probed cells — the scale path for
@@ -981,38 +925,31 @@ object Similarity {
     */
   def rangeSearchWith(ivf: IvfIndex, queries: DataFrame, tau: Double,
       nprobe: Int = 4, allowed: Option[DataFrame] = None): DataFrame =
-    ivfScored(ivf, queries, nprobe, allowed)
-      .filter(col("cosine") >= tau)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
+    rangeOf(ivfScored(ivf, queries, nprobe, allowed), tau)
 
-  /** The shared probe-join-score stage behind `ivfTopKWith` (bounded
-    * top-k window on top), `rangeSearchWith` (threshold filter on top)
-    * and `mmrTopKWith` (pool window + greedy on top): per-query nprobe
-    * nearest cells, corpus joined on cell, exact cosine per candidate.
-    * `withEmbedding` additionally carries the candidate's embedding —
-    * only MMR pays the wider rows (its greedy needs pair cosines); the
+  /** The cell probe: a vector's `nprobe` nearest centroids by squared L2
+    * (a stable sort, so ties go to the lower cell).
+    */
+  private def probeCells(ivf: IvfIndex, nprobe: Int): UserDefinedFunction = {
+    val bc = ivf.assigned.sparkSession.sparkContext.broadcast(ivf.cents)
+    udf((v: Seq[Float]) => {
+      val a = v.toArray
+      bc.value.indices.map(c => (c, sqDist(a, bc.value(c))))
+        .sortBy(_._2).take(nprobe).map(_._1)
+    })
+  }
+
+  /** The probe-join-score stage behind `ivfTopKWith` (top-k on top),
+    * `rangeSearchWith` (threshold filter on top) and `mmrTopKWith` (pool
+    * window + greedy on top): per-query nprobe nearest cells, corpus
+    * joined on cell, `cols` per candidate — MMR alone adds the
+    * candidate's embedding (its greedy needs pair cosines); the
     * rank/threshold consumers keep the narrow schema.
     */
   private def ivfScored(ivf: IvfIndex, queries: DataFrame, nprobe: Int,
-      allowed: Option[DataFrame], withEmbedding: Boolean = false,
+      allowed: Option[DataFrame], cols: Seq[Column] = Seq(exactCosine),
       excludeSelf: Boolean = true): DataFrame = {
-    val spark = ivf.assigned.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    val bc = spark.sparkContext.broadcast(ivf.cents)
-    val probeUdf = udf((v: Seq[Float]) => {
-      val a = v.toArray
-      bc.value.indices
-        .map(c => (c, {
-          var d = 0.0; var i = 0
-          val ct = bc.value(c); val n = math.min(a.length, ct.length)
-          while (i < n) { val t = a(i) - ct(i); d += t * t; i += 1 }
-          d
-        }))
-        .sortBy(_._2).take(nprobe).map(_._1)
-    })
-    val qs = queries.select(col("vec_id").as("query_id"), col("embedding").as("qemb"),
-      explode(probeUdf(col("embedding"))).as("cell"), norm(col("embedding")).as("qnrm"))
+    val qs = queryRows(queries, explode(probeCells(ivf, nprobe)(col("embedding"))).as("cell"))
     // Static cell pruning (parquet-backed indexes only): collect the
     // batch's probed cell set (queries are small by contract — one tiny
     // query-side job) and push it into the corpus scan as an IN filter,
@@ -1029,18 +966,7 @@ object Similarity {
       }
     val filtered = allowed.fold(corpus)(a =>
       corpus.join(a.select("vec_id"), Seq("vec_id"), "left_semi"))
-    // excludeSelf = false for EXTERNAL query vectors (e.g. /ann?q=…):
-    // their query_id is a placeholder, and filtering on it would
-    // silently drop any stored vector that happens to share the id
-    val joined = filtered.join(broadcast(qs), Seq("cell"))
-    val base =
-      if (excludeSelf) joined.filter(col("vec_id") =!= col("query_id"))
-      else joined
-    val cos = (dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm"))).as("cosine")
-    if (withEmbedding)
-      base.select(col("query_id"), col("vec_id").as("neighbor_id"), col("embedding"), cos)
-    else
-      base.select(col("query_id"), col("vec_id").as("neighbor_id"), cos)
+    scoredJoin(filtered, qs, onCell = true, cols, excludeSelf)
   }
 
   /** Recall@k of an approximate ANN result against the exact one — the

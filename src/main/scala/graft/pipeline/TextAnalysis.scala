@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions.tokenizeWs
 
 /** Text-analysis operators for training-data pipelines: per-document
   * statistics, quality signals, heuristic language ID, token counting,
@@ -13,12 +14,9 @@ object TextAnalysis {
 
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "in", "to")
 
-  def toks(text: Column): Column =
-    filter(split(text, " "), t => length(t) > 0)
-
   /** Per-document corpus statistics (all integer-valued — exact). */
   def stats(docs: DataFrame): DataFrame = {
-    val tk = toks(col("text"))
+    val tk = tokenizeWs(col("text"))
     docs.select(
       col("doc_id"),
       size(tk).as("n_tokens"),
@@ -33,7 +31,7 @@ object TextAnalysis {
     * computed in integer arithmetic) so it is portable across engines.
     */
   def quality(docs: DataFrame): DataFrame = {
-    val tk = toks(col("text"))
+    val tk = tokenizeWs(col("text"))
     val nTok = size(tk)
     val nDis = size(array_distinct(tk))
     val nStop = size(filter(tk, t => t.isin(Stopwords: _*)))
@@ -53,7 +51,7 @@ object TextAnalysis {
     * what transfers to a real n-gram model.)
     */
   def langId(docs: DataFrame): DataFrame = {
-    val tk = toks(col("text"))
+    val tk = tokenizeWs(col("text"))
     val nStop = size(filter(tk, t => t.isin(Stopwords: _*)))
     docs.select(
       col("doc_id"),
@@ -75,7 +73,7 @@ object TextAnalysis {
     * A narrow projection — the 100 TB shape is one scan, no shuffle.
     */
   def tokenCounts(docs: DataFrame): DataFrame = {
-    val nWs  = size(toks(col("text")))
+    val nWs  = size(tokenizeWs(col("text")))
     val nBpe = size(regexp_extract_all(col("text"), lit(BpePattern), lit(0)))
     docs.select(
       col("doc_id"),
@@ -92,7 +90,7 @@ object TextAnalysis {
     * dedup ops) is `Dedup.fnv1a`.
     */
   def fingerprint(docs: DataFrame): DataFrame = {
-    val tk = toks(col("text"))
+    val tk = tokenizeWs(col("text"))
     val terms = transform(tk, (t, i) =>
       (i.cast("bigint") + 1) * (length(t).cast("bigint") * 31 + ascii(substring(t, 1, 1))))
     docs.select(
@@ -133,7 +131,7 @@ object TextAnalysis {
     */
   def entropy(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val occ = docs.select(col("doc_id"), explode(toks(col("text"))).as("token"))
+    val occ = docs.select(col("doc_id"), explode(tokenizeWs(col("text"))).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("c"))
     val w = Window.partitionBy("doc_id")
     occ.withColumn("n", sum(col("c")).over(w))
@@ -261,7 +259,7 @@ object TextAnalysis {
       labelCol: String = "lang", broadcastModel: Boolean = true): DataFrame = {
     val scale = lit(1000000.0)
     val tokTrain = train.select(col(labelCol).as("label"),
-      explode(toks(col("text"))).as("token"))
+      explode(tokenizeWs(col("text"))).as("token"))
     // ONE pass over the exploded training corpus: `tot` (per-label token
     // total) and `vocab` both DERIVE from the (label, token) counts —
     // identical numbers (Σ cnt per label ≡ count of occurrences), and
@@ -287,7 +285,7 @@ object TextAnalysis {
         round(log(col("nd").cast("double") / col("ntot").cast("double")) * scale)
           .cast("bigint").as("prior"))
     val occ = test.select(col("doc_id"), col(labelCol).as("actual"),
-        explode(toks(col("text"))).as("token"))
+        explode(tokenizeWs(col("text"))).as("token"))
       .groupBy("doc_id", "actual", "token").agg(count(lit(1)).as("occ"))
     val modelSide = if (broadcastModel) broadcast(model) else model
     val scores = occ.join(modelSide, "token")

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.Sessions
 import graft.api.{AnalyticsService, HttpShim, QueryService}
+import graft.functions.TextFunctions.tokenizeWs
 
 import org.apache.spark.sql.functions._
 
@@ -45,7 +46,7 @@ object AnnServeProbe {
     mm.processBatch(docs, col("lang") === "en", 0L)
 
     val someIds = emb.select("vec_id").limit(n).collect().map(_.getLong(0))
-    val someTok = docs.select(explode(graft.pipeline.TextAnalysis.toks(col("text"))))
+    val someTok = docs.select(explode(tokenizeWs(col("text"))))
       .limit(n).collect().map(_.getString(0))
 
     val svc = new AnalyticsService(Some(cm), Some(qm), Some(mm), None, Some(am))

@@ -861,6 +861,12 @@ class PipelineSpec extends SparkSuite {
       .ivfPqTopK(ivf, pq, queries, k = 3, nprobe = 4, shortlist = 40)
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(composed == want)
+    // full probe makes IVF-PQ's ADC candidates every code, as pqTopK's
+    // are: the two equal row for row at a shortlist below the corpus too
+    assert(Similarity.ivfPqTopK(ivf, pq, queries, k = 3, nprobe = 4, shortlist = 5)
+      .as[(Long, Int, Long, Double)].collect().toSet ==
+      Similarity.pqTopK(pq, queries, k = 3, shortlist = 5)
+        .as[(Long, Int, Long, Double)].collect().toSet)
   }
 
   test("quality gate: rank-defined exact quantile on a planted distribution") {
