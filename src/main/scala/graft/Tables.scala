@@ -10,6 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicate pushdown handled by the parquet source.
   */
 object Tables {
+  /** The running checkout's `target/` (above `target/scala-2.13/classes`), where a
+    * run keeps what it writes for itself: two checkouts' runs never share it.
+    */
+  val BuildDir: String = java.nio.file.Paths.get(
+    getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getParent.getParent.toString
+
   val tpch: Seq[String] =
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
   val all: Seq[String] = tpch ++ Seq("events", "documents", "embeddings")

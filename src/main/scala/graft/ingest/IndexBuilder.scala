@@ -211,9 +211,13 @@ case class WikiIndex(
 object WikiIndex {
   def load(spark: SparkSession, dir: String): WikiIndex = {
     // older saved dirs may predate the optional parts — fall back to the
-    // derived projections
+    // derived projections. `exists` first: Spark logs a failed read of a
+    // missing dir as a FileStreamSink trace
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def optional(part: String): Option[DataFrame] =
-      try Some(spark.read.parquet(s"$dir/$part"))
+      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$part"))) None
+      else try Some(spark.read.parquet(s"$dir/$part"))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     WikiIndex(
       docsFields = spark.read.parquet(s"$dir/docs_fields"),

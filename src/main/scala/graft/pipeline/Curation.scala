@@ -323,6 +323,13 @@ object Curation {
       .select(col("doc_id"), col("source"))
   }
 
+  /** Decontamination output: per corpus doc, its `hits` count `n` (0 if absent) and verdict. */
+  private def verdicts(docs: DataFrame, hits: DataFrame, n: String): DataFrame =
+    docs.select(col("doc_id"))
+      .join(hits, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col(n), lit(0L)).as(n))
+      .withColumn("verdict", when(col(n) > 0, lit("contaminated")).otherwise(lit("clean")))
+
   /** Eval-set decontamination: per corpus document, the number of its
     * distinct word n-grams that also occur anywhere in the eval set.
     *
@@ -340,12 +347,7 @@ object Curation {
     val hits = Dedup.shingleHashes(docs, n)
       .join(broadcast(evalSh), Seq("sh"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
-    docs.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"))
-      .withColumn("verdict",
-        when(col("n_contaminated") > 0, lit("contaminated")).otherwise(lit("clean")))
+    verdicts(docs, hits, "n_contaminated")
   }
 
   /** Decontamination for eval sets too big to broadcast — same result
@@ -402,12 +404,7 @@ object Curation {
       .filter(might(col("sh")))           // narrow: inside the shingling stage
       .join(evalSh, Seq("sh"), "left_semi") // exact verify, keyed on sh, NOT broadcast
       .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
-    docs.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"))
-      .withColumn("verdict",
-        when(col("n_contaminated") > 0, lit("contaminated")).otherwise(lit("clean")))
+    verdicts(docs, hits, "n_contaminated")
   }
 
   /** Near-duplicate (fuzzy) decontamination — the PARAPHRASE-leakage
@@ -418,9 +415,9 @@ object Curation {
     * verbatim?", this answers "is the document substantially an eval
     * document?" — the dedup-grade similarity the eval-leakage
     * literature targets for paraphrased splits. Candidates come
-    * from the SAME minhash band machinery as `Dedup.minhashPairs` —
-    * corpus bands join eval bands on (band, band_hash), so corpus ×
-    * corpus pairs are never formed and the corpus side's only wide ops
+    * from `Dedup.minhashPairs`' bands and band join in its `DisjointIds`
+    * form (a corpus doc and an eval doc may share a `doc_id`), so corpus
+    * × corpus pairs are never formed and the corpus side's only wide ops
     * are the band shuffle and the candidate join (both keyed, both
     * bounded; the 32×2 band geometry is the same recall dial, certain
     * at τ = 0.6). Exact Jaccard verification on candidates only — like
@@ -432,20 +429,12 @@ object Curation {
       bands: Int = 32, shingleN: Int = 3): DataFrame = {
     val setsC = Dedup.shingleSets(docs, shingleN)
     val setsE = Dedup.shingleSets(evalDocs, shingleN)
-    val bandEq =
-      col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash")
-    val cand = Dedup.minhashBands(setsC, bands).as("x")
-      .join(Dedup.minhashBands(setsE, bands).as("y"), bandEq)
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+    val cand = Banding.bandPairs(Dedup.minhashBands(setsC, bands),
+        Dedup.minhashBands(setsE, bands), Banding.DisjointIds, "doc_id", Dedup.BandKeys)
       .distinct()
     val hits = Dedup.jaccardVerified(cand, setsC, setsE, tau)
       .groupBy(col("a").as("doc_id")).agg(count(lit(1)).as("n_eval_neardups"))
-    docs.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_eval_neardups"), lit(0L)).as("n_eval_neardups"))
-      .withColumn("verdict",
-        when(col("n_eval_neardups") > 0, lit("contaminated")).otherwise(lit("clean")))
+    verdicts(docs, hits, "n_eval_neardups")
   }
 
   /** Graded decontamination — the overlap-FRACTION form (the GPT-3

@@ -551,16 +551,19 @@ object Dedup {
     * standard keep-first dedup rule. Pairs come from the blocked
     * all-pairs baseline here; at corpus scale substitute
     * `Similarity.lshPairs` for the candidate source (same contract:
-    * (a, b, cosine) with a < b).
+    * (a, b, cosine) with a < b, `Banding.bandPairs`' `Self` form).
     */
   def embeddingDedupVerdicts(emb: DataFrame, tau: Double): DataFrame = {
     val dups = Similarity.bruteForcePairs(emb, tau)
       .select(col("b").as("vec_id")).distinct()
-    emb.select(col("vec_id"))
-      .join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("dup"), lit("drop")).otherwise(lit("keep")).as("verdict"))
+    keepDropVerdicts(emb.select(col("vec_id")), dups, "vec_id")
   }
+
+  /** Each `ids` row plus "drop" if its `id` is in `dropIds` (one distinct column), else "keep". */
+  private[graft] def keepDropVerdicts(ids: DataFrame, dropIds: DataFrame, id: String): DataFrame =
+    ids.join(dropIds.withColumn("dropped", lit(true)), Seq(id), "left")
+      .select(ids.columns.toIndexedSeq.map(col) :+
+        when(col("dropped"), lit("drop")).otherwise(lit("keep")).as("verdict"): _*)
 
   // ---- MinHash + LSH ------------------------------------------------------
 
@@ -619,8 +622,6 @@ object Dedup {
   }
 
   private val minhashUdf = udf((es: Seq[Long]) => minhashSignatureHashed(es))
-  // object-level for canonical plan equality across calls (see sharedUdf)
-  private val tokenHashUdf = udf((t: String) => fnv1a(t, 0L))
 
   /** (doc_id, band, band_hash): LSH banding of a MinHash signature over
     * the given per-doc element-hash sets (doc_id, elems: array<long>).
@@ -665,13 +666,14 @@ object Dedup {
     // jaccardPairs): the corpus-wide pass never materializes or shuffles
     // shingle strings; exact verification intersects hash sets — equal
     // to string-set jaccard up to fnv1a collisions (~|shingles|²/2⁶⁴)
-    val sets =
-      (if (shingleN <= 1)
-         docs.select(col("doc_id"), explode(array_distinct(tokenizeWs(col("text")))).as("shingle"))
-           .select(col("doc_id"), tokenHashUdf(col("shingle")).as("sh"))
-       else shingleHashes(docs, shingleN))
-        .groupBy("doc_id").agg(collect_set(col("sh")).as("elems"))
-        .cache()
+    val sets = shingleSets(docs, shingleN).cache()
+    jaccardVerified(minhashCandidates(sets, bands), sets, sets, tau)
+  }
+
+  private[pipeline] val BandKeys = Seq("band", "band_hash") // minhashBands' keys
+
+  /** `minhashPairs`' candidates (a < b, distinct), also `graft.tools.LshProbe`'s count. */
+  private[graft] def minhashCandidates(sets: DataFrame, bands: Int): DataFrame = {
     // cached: the band table feeds a SELF-join — uncached, the
     // 64-hash/element signature UDF (the operator's CPU-heavy pass)
     // executes once per join side; and because minhashUdf is an
@@ -679,13 +681,7 @@ object Dedup {
     // so repeat invocations on the same corpus reuse this too (bounded:
     // docs × bands small rows per corpus)
     val b = minhashBands(sets, bands).cache()
-    val candidates = b.as("x")
-      .join(b.as("y"),
-        col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    jaccardVerified(candidates, sets, sets, tau)
+    Banding.bandPairs(b, b, Banding.Self, "doc_id", BandKeys).distinct()
   }
 
   /** The exact verify step of the MinHash family: each candidate pair
@@ -750,16 +746,11 @@ object Dedup {
     */
   def minhashPairsFromParts(setsOld: DataFrame, bOld: DataFrame,
       setsNew: DataFrame, bNew: DataFrame, tau: Double): DataFrame = {
-    val bandEq = col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash")
-    val candidates =
-      bNew.as("x").join(bNew.as("y"), bandEq && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-        .union(
-          // a =!= b guards the degenerate overlap where a doc appears in
-          // both inputs (contract is disjoint ids; self-pairs stay out)
-          bOld.as("x").join(bNew.as("y"), bandEq && col("x.doc_id") =!= col("y.doc_id"))
-            .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")))
-        .distinct()
+    val candidates = Banding.bandPairs(bNew, bNew, Banding.Self, "doc_id", BandKeys)
+      // SharedIds guards the degenerate overlap where a doc appears in
+      // both inputs (contract is disjoint ids; self-pairs stay out)
+      .union(Banding.bandPairs(bOld, bNew, Banding.SharedIds, "doc_id", BandKeys))
+      .distinct()
     jaccardVerified(candidates, setsOld.union(setsNew), setsNew, tau)
   }
 
@@ -799,12 +790,10 @@ object Dedup {
       shiftrightunsigned(col("simhash"), c * width).bitwiseAND(lit((1L << width) - 1)))
     val banded = sh.select(col("doc_id"), col("simhash"),
       posexplode(array(chunkCols: _*)).as(Seq("chunk", "chunk_val")))
-    banded.as("x")
-      .join(banded.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.chunk_val") === col("y.chunk_val") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("dist"))
+    Banding.bandPairs(
+        banded, banded, Banding.Self, "doc_id", Seq("chunk", "chunk_val"), Seq("simhash"))
+      .select(col("a"), col("b"),
+        bit_count(col("a_simhash").bitwiseXOR(col("b_simhash"))).as("dist"))
       // Hamming filter BEFORE the dedup: `dist` is deterministic per
       // pair, so filtering first is result-identical and the distinct
       // aggregates only the matches instead of every candidate

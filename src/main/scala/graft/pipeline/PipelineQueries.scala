@@ -26,11 +26,11 @@ object PipelineQueries {
     * SERVING is — given the centroid values, nearest-cell assignment,
     * the probe set, and the exact rerank are pure SQL. So each run
     * writes its own trained centroids (16 rows × 64 dims — trivial)
-    * where the `sim_ivf_topk` oracle re-reads them. Fixed absolute path
-    * because oracle SQL is static; single-writer by the driver contract
-    * (verify and bench never run concurrently in one sandbox).
+    * where the `sim_ivf_topk` oracle re-reads them: an absolute path
+    * (oracle SQL is static) under `Tables.BuildDir`, so two checkouts'
+    * runs never share an artifact.
     */
-  private val IvfOracleCentroids = "/root/repo/target/ivf-oracle/centroids"
+  private val IvfOracleCentroids = s"${Tables.BuildDir}/ivf-oracle/centroids"
 
   private def cachedIvf(
       s: org.apache.spark.sql.SparkSession, dir: String): Similarity.IvfIndex =
@@ -48,7 +48,7 @@ object PipelineQueries {
     * contract applied to the streaming store (training stays un-oracled;
     * serving at a version is pure SQL given the centroid values).
     */
-  private val LiveAnnOracleCentroids = "/root/repo/target/live-ann-oracle/centroids"
+  private val LiveAnnOracleCentroids = s"${Tables.BuildDir}/live-ann-oracle/centroids"
 
   private val liveAnnCache = new graft.SessionMemo[String]
 
@@ -83,7 +83,7 @@ object PipelineQueries {
     * oracle hardcodes the (m=8, k=16, subDim=8) geometry — it is part
     * of the query's definition, like the LSH bit counts.
     */
-  private val PqOracleBooks = "/root/repo/target/pq-oracle/codebooks"
+  private val PqOracleBooks = s"${Tables.BuildDir}/pq-oracle/codebooks"
 
   private val pqCache = new graft.SessionMemo[Similarity.PqIndex]
 

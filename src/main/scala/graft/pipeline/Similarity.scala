@@ -386,20 +386,24 @@ object Similarity {
     emb.select(col("vec_id"), col("embedding"),
       bucketsUdf(dim, bits, tables = 1, planeOffset)(col("embedding")).getItem(0).as("bucket"))
 
-  /** LSH-accelerated near-neighbor pairs: bucket-join candidates, exact
-    * cosine rerank, threshold. Approximate (recall < 1) by construction.
+  /** LSH-accelerated near-neighbor pairs: bucket-join candidates
+    * (`Banding.bandPairs`, `Self`), exact cosine rerank, threshold.
+    * Approximate (recall < 1) by construction.
     */
   def lshPairs(emb: DataFrame, dim: Int, tau: Double, bits: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     // no cache: the self-join shuffles both sides identically, so the
     // bucket projection runs once under ReusedExchange — and nothing is
     // left pinned in the storage pool after the query
     val b = lshBuckets(emb, dim, bits)
-    b.as("x")
-      .join(b.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
-        cosine(col("x.embedding"), col("y.embedding")).as("cosine"))
+    cosineVerified(
+      Banding.bandPairs(b, b, Banding.Self, "vec_id", Seq("bucket"), Seq("embedding")), tau)
+  }
+
+  /** Cosine verify: candidates (a, b, a_embedding, b_embedding) with cosine ≥ `tau`, to 4 dp. */
+  private def cosineVerified(candidates: DataFrame, tau: Double): DataFrame = {
+    graft.plans.GraftFunctions.register(candidates.sparkSession)
+    candidates
+      .select(col("a"), col("b"), cosine(col("a_embedding"), col("b_embedding")).as("cosine"))
       .filter(col("cosine") >= tau)
       .select(col("a"), col("b"), round(col("cosine"), 4).as("cosine"))
   }
@@ -417,7 +421,6 @@ object Similarity {
     */
   def lshPairsMulti(
       emb: DataFrame, dim: Int, tau: Double, bits: Int = 8, tables: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col("vec_id"), col("embedding"))
     // ALL tables' buckets in ONE compiled projection pass (`bucketsUdf`),
     // posexplode to (vec_id, table, bucket). One scan instead of `tables`
@@ -429,17 +432,11 @@ object Similarity {
     val b = e.select(col("vec_id"),
       posexplode(bucketsUdf(dim, bits, tables, planeOffset = 0)(col("embedding")))
         .as(Seq("table", "bucket")))
-    val candidates = b.as("x").join(b.as("y"),
-        col("x.table") === col("y.table") && col("x.bucket") === col("y.bucket") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
+    val candidates = Banding.bandPairs(b, b, Banding.Self, "vec_id", Seq("table", "bucket"))
       .distinct() // dedup across tables BEFORE the exact rerank
-    candidates
-      .join(e.select(col("vec_id").as("a"), col("embedding").as("ea")), Seq("a"))
-      .join(e.select(col("vec_id").as("b"), col("embedding").as("eb")), Seq("b"))
-      .select(col("a"), col("b"), cosine(col("ea"), col("eb")).as("cosine"))
-      .filter(col("cosine") >= tau)
-      .select(col("a"), col("b"), round(col("cosine"), 4).as("cosine"))
+    cosineVerified(candidates
+      .join(e.select(col("vec_id").as("a"), col("embedding").as("a_embedding")), Seq("a"))
+      .join(e.select(col("vec_id").as("b"), col("embedding").as("b_embedding")), Seq("b")), tau)
   }
 
   // ---- random projection (JL embedding compression) -----------------------
@@ -676,17 +673,10 @@ object Similarity {
     * over an existing index is one keyed self-join + verdict join.
     */
   def semDedup(ivf: IvfIndex, tau: Double): DataFrame = {
-    graft.plans.GraftFunctions.register(ivf.assigned.sparkSession)
-    val x = ivf.assigned.select(col("cell"), col("vec_id"), col("embedding"))
-    val dropIds = x.as("a")
-      .join(x.as("b"),
-        col("a.cell") === col("b.cell") && col("b.vec_id") < col("a.vec_id"))
-      .filter(cosine(col("a.embedding"), col("b.embedding")) >= tau)
-      .select(col("a.vec_id").as("vec_id")).distinct()
-    ivf.assigned.select(col("vec_id"), col("cell"))
-      .join(dropIds.withColumn("d", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        when(col("d").isNotNull, lit("drop")).otherwise(lit("keep")).as("verdict"))
+    val dropIds = cosineVerified(Banding.bandPairs(
+        ivf.assigned, ivf.assigned, Banding.Self, "vec_id", Seq("cell"), Seq("embedding")), tau)
+      .select(col("b").as("vec_id")).distinct()
+    Dedup.keepDropVerdicts(ivf.assigned.select(col("vec_id"), col("cell")), dropIds, "vec_id")
   }
 
   /** Persist a trained IVF index: the assigned corpus as parquet
@@ -972,7 +962,7 @@ object Similarity {
   /** Recall@k of an approximate ANN result against the exact one — the
     * evaluation metric the nprobe/L/band dials are tuned against.
     * Inputs are two top-k result sets with (query_id, neighbor_id)
-    * columns (`ivfTopKWith`/`pqTopK`/`lshPairs`-shaped vs `topK`);
+    * columns (`ivfTopKWith`/`pqTopK`-shaped vs `topK`);
     * output is per-query hits and integer recall permille (hits·1000
     * div k — no float ratio). Both inputs are |Q|·k rows — metric-sized,
     * never corpus-sized — so the joins here are trivial at any corpus

@@ -28,7 +28,7 @@ object SearchQueries {
 
   private def saveDirFor(dir: String): String = {
     val sfName = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft_index/$sfName"
+    s"${Tables.BuildDir}/graft_index/$sfName"
   }
 
   private def savedIndex(s: SparkSession, dir: String): (WikiIndex, WikiSearchEngine) =

@@ -91,11 +91,7 @@ class LiveNearDupMaintainer(
       val dropIds = freshComp.join(keepers, Seq("doc_id"), "left_anti")
         .select("doc_id").distinct().cache()
 
-      val verdicts = freshIds
-        .join(dropIds.withColumn("dropped", lit(true)), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("dropped"), lit("drop")).otherwise(lit("keep")).as("verdict"))
-      write(verdicts, s"$dir/verdicts/v$batchId")
+      write(Dedup.keepDropVerdicts(freshIds, dropIds, "doc_id"), s"$dir/verdicts/v$batchId")
 
       // delta-only writes: this batch's keepers, O(|batch|) bytes
       val keptIds = freshIds.join(dropIds, Seq("doc_id"), "left_anti")

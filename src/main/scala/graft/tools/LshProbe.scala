@@ -1,11 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
 /** Diagnostic: decompose `dd_minhash_lsh`'s cost into CANDIDATE pairs
   * (band-bucket collisions — what LSH actually pays for) vs VERIFIED
-  * pairs (exact Jaccard ≥ τ — the true output) per corpus, using the
-  * operator's own public stages (same shingling, banding, join shape).
+  * pairs (exact Jaccard ≥ τ — the true output) per corpus, from the
+  * operator's own stages (`Dedup.shingleSets`, `Dedup.minhashCandidates`).
   * The round-10 scaling appendix's claim that the sf10 second decade is
   * candidate-density-bound, not corpus-size-bound, is checked with this.
   * Usage: `LshProbe <sfDir>...`.
@@ -17,19 +15,11 @@ object LshProbe {
     import graft.pipeline.Dedup
     args.foreach { dir =>
       val docs = graft.Tables.load(spark, dir, "documents")
-      val sets = Dedup.shingleHashes(docs, 3)
-        .groupBy("doc_id").agg(collect_set(col("sh")).as("elems")).cache()
-      val b = Dedup.minhashBands(sets, 32).cache()
-      val cands = b.as("x")
-        .join(b.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.band_hash") === col("y.band_hash") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-        .distinct().count()
+      val sets = Dedup.shingleSets(docs, 3).cache()
+      val cands = Dedup.minhashCandidates(sets, 32).count()
       val verified = Dedup.minhashPairs(docs, tau = 0.6).count()
       println(s"$dir docs=${docs.count()} candidates=$cands verified=$verified")
-      sets.unpersist(); b.unpersist()
+      sets.unpersist(); Dedup.minhashBands(sets, 32).unpersist()
     }
     spark.stop()
   }

@@ -518,6 +518,59 @@ class PipelineSpec extends SparkSuite {
     assert(exact(2L) == "contaminated") // the complementary verdict
   }
 
+  test("fuzzyContamination keeps a corpus/eval near-dup pair that shares its doc_id") {
+    // corpus and eval ids are separate id spaces: an equal id is a
+    // different document, so the band join must not drop the pair
+    val base = "the quick brown fox jumps over the lazy dog again and"
+    val evals = Seq((1L, s"$base again"), (7L, "nothing like any corpus text at all here"))
+      .toDF("doc_id", "text")
+    val corpus = Seq(
+      (1L, s"$base more"),
+      (2L, "entirely different text about columnar execution engines")
+    ).toDF("doc_id", "text")
+    val fuzzy = Curation.fuzzyContamination(corpus, evals)
+      .as[(Long, Long, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(fuzzy == Map(1L -> ((1L, "contaminated")), 2L -> ((0L, "clean"))))
+  }
+
+  test("bandPairs: self, shared-id and disjoint-id pairings equal a driver-side brute force") {
+    val rnd = new scala.util.Random(31)
+    val bands = 4
+    (1 to 3).foreach { trial =>
+      // (id, band, key, tag): keys from a 3-value domain so buckets collide
+      def table(ids: Seq[Long], side: Int) = for (id <- ids; b <- 0 until bands)
+        yield (id, b, rnd.nextInt(3), id * 10 + side)
+      val xs = table(1L to 20L, 0)
+      // ids 15..20 overlap xs; id 15 copies its xs keys, so it shares every band
+      val ys = table(15L to 30L, 1).map { case r @ (id, b, _, tag) =>
+        if (id == 15L) (id, b, xs.find(x => x._1 == 15L && x._2 == b).get._3, tag) else r }
+      def keys(t: Seq[(Long, Int, Int, Long)]) = t.map(r => (r._1, r._2) -> r._3).toMap
+      def brute(x: Seq[(Long, Int, Int, Long)], y: Seq[(Long, Int, Int, Long)],
+          idOk: (Long, Long) => Boolean): Set[(Long, Long)] = {
+        val (kx, ky) = (keys(x), keys(y))
+        (for (i <- x.map(_._1).distinct; j <- y.map(_._1).distinct
+             if idOk(i, j) && (0 until bands).exists(b => kx((i, b)) == ky((j, b)))) yield (i, j)).toSet
+      }
+      def run(x: Seq[(Long, Int, Int, Long)], y: Seq[(Long, Int, Int, Long)], p: Banding.Pairing) = {
+        val rows = Banding.bandPairs(x.toDF("id", "band", "key", "tag"),
+            y.toDF("id", "band", "key", "tag"), p, "id", Seq("band", "key"), Seq("tag"))
+          .select("a", "b", "a_tag", "b_tag").as[(Long, Long, Long, Long)].collect()
+        val sideY = if (x eq y) 0 else 1
+        assert(rows.forall(r => r._3 == r._1 * 10 && r._4 == r._2 * 10 + sideY),
+          s"trial $trial: payload columns not carried from their own side")
+        rows.map(r => (r._1, r._2)).toSet
+      }
+      val self = run(xs, xs, Banding.Self)
+      assert(self.nonEmpty && self == brute(xs, xs, _ < _), s"trial $trial: self form")
+      val shared = run(xs, ys, Banding.SharedIds)
+      assert(shared == brute(xs, ys, _ != _), s"trial $trial: shared-id form")
+      assert(!shared.exists(p => p._1 == p._2), s"trial $trial: shared-id form paired an id with itself")
+      val disjoint = run(xs, ys, Banding.DisjointIds)
+      assert(disjoint == brute(xs, ys, (_, _) => true), s"trial $trial: disjoint-id form")
+      assert(disjoint.contains((15L, 15L)), s"trial $trial: disjoint-id form dropped an equal-id pair")
+    }
+  }
+
   test("contaminationBloom is result-identical to contamination at any fpp") {
     val evals = Seq(
       (100L, "secret eval question about spark joins"),
