@@ -324,9 +324,9 @@ object QueryService {
     * are invalid raw in JSON strings, and `tokenizeWs` splits on single
     * spaces only, so a stored token CAN carry a literal newline/tab.
     * ONE escaping for every interpolated string on the serving edge
-    * (shared with `AnalyticsService`).
+    * (shared with `AnalyticsService`) and for `Verify`'s oracle SQL file.
     */
-  private[api] def jstr(s: String): String =
+  private[graft] def jstr(s: String): String =
     s.flatMap {
       case '"'          => "\\\""
       case '\\'         => "\\\\"

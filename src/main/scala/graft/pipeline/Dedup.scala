@@ -576,7 +576,6 @@ object Dedup {
   }
 
   val NumHashes = 64
-  val NumBands  = 16 // 16 bands × 4 rows
 
   /** MinHash signature of a token set: k independent permutations
     * simulated by k seeded hashes, min per seed.

@@ -101,12 +101,8 @@ object SearchQueries {
   private val liveSynCache = new SessionMemo[WikiSearchEngine]
   def liveSynonymEngine(s: SparkSession, dir: String): WikiSearchEngine =
     liveSynCache(s, dir) {
-      val docs = Tables.load(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-live-syn").toString
-      val writer = new graft.streaming.LiveEngineMaintainer(s, tmp, NumPartitions,
-        synonyms = SynTable)
-      (0 until 3).foreach(b =>
-        writer.processBatch(docs.filter(col("doc_id") % 3 === b), b.toLong))
+      val (tmp, _) = threeBatchStore(s, dir, "graft-live-syn")(
+        new graft.streaming.LiveEngineMaintainer(s, _, NumPartitions, synonyms = SynTable))
       val reader = new graft.streaming.LiveEngineMaintainer(s, tmp, NumPartitions)
       new WikiSearchEngine(s, reader.latestIndex.get)
     }
@@ -143,12 +139,9 @@ object SearchQueries {
     liveFldCache(s, dir) {
       val head = concat_ws(" ",
         slice(graft.functions.TextFunctions.tokenizeWs(col("text")), 1, 5))
-      val docs = Tables.load(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-live-fld").toString
-      val m = new graft.streaming.LiveEngineMaintainer(s, tmp, NumPartitions,
-        extraFields = Map("HEAD" -> head), offsetsFields = Set("HEAD"))
-      (0 until 3).foreach(b =>
-        m.processBatch(docs.filter(col("doc_id") % 3 === b), b.toLong))
+      val (_, m) = threeBatchStore(s, dir, "graft-live-fld")(
+        new graft.streaming.LiveEngineMaintainer(s, _, NumPartitions,
+          extraFields = Map("HEAD" -> head), offsetsFields = Set("HEAD")))
       new WikiSearchEngine(s, m.latestIndex.get)
     }
 
@@ -164,13 +157,23 @@ object SearchQueries {
   private def liveStore(s: SparkSession, dir: String)
       : graft.streaming.LiveEngineMaintainer =
     liveStoreCache(s, dir) {
-      val docs = Tables.load(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-live-store").toString
-      val m = new graft.streaming.LiveEngineMaintainer(s, tmp, NumPartitions)
-      (0 until 3).foreach(b =>
-        m.processBatch(docs.filter(col("doc_id") % 3 === b), b.toLong))
-      m
+      threeBatchStore(s, dir, "graft-live-store")(
+        new graft.streaming.LiveEngineMaintainer(s, _, NumPartitions))._2
     }
+
+  /** The documents table streamed into a new temp live store, opened by
+    * `open`, in three micro-batches (batch b holds `doc_id % 3 == b`):
+    * the store dir and its maintainer.
+    */
+  private def threeBatchStore(s: SparkSession, dir: String, prefix: String)(
+      open: String => graft.streaming.LiveEngineMaintainer)
+      : (String, graft.streaming.LiveEngineMaintainer) = {
+    val docs = Tables.load(s, dir, "documents")
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    val m = open(tmp)
+    (0 until 3).foreach(b => m.processBatch(docs.filter(col("doc_id") % 3 === b), b.toLong))
+    (tmp, m)
+  }
 
   private val liveCache = new SessionMemo[WikiSearchEngine]
   def liveEngine(s: SparkSession, dir: String): WikiSearchEngine =

@@ -51,10 +51,10 @@ class LiveAnnMaintainer(
     // anywhere) serves flat IVF untouched, and `compactAnn` rebuilds the
     // codes base from the masked assignments whenever books exist, so
     // one compaction graduates any store to full IVF-PQ coverage.
-    extends VersionedStore(spark, dir, LiveAnnMaintainer.CoreParts, LiveAnnMaintainer.Tombstone)
-    with StreamSink {
+    extends VersionedStore(spark, dir, LiveAnnMaintainer.kind(), autoCompactEvery)
+    with StreamSink with Deletes {
 
-  import LiveAnnMaintainer._
+  import LiveAnnMaintainer.{emptyCodes, readBooks, AssignedSchema}
   import VersionedState.{exists, write}
 
   /** The current centroid set, resolved BASE-FIRST: a compaction that
@@ -163,8 +163,8 @@ class LiveAnnMaintainer(
     * (assignment depends only on the batch's rows + the frozen
     * centroids).
     */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    commit(batchId) { vdir =>
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    commit(batchId) {
       val cents = centroids.getOrElse {
         // cells = Similarity.AutoCells sizes from the FIRST batch
         // (~√n clamped [16, 4096]); as the store outgrows that, a
@@ -180,7 +180,6 @@ class LiveAnnMaintainer(
           .toSeq.toDF("cell", "centroid").coalesce(1), s"$dir/centroids")
         trained
       }
-      write(Similarity.assignIvf(cents, batch), s"$vdir/assigned")
       val codesDelta =
         if (pqM <= 0) emptyCodes(spark)
         else {
@@ -217,31 +216,15 @@ class LiveAnnMaintainer(
               uncoded.map(_.unionByName(fresh)).getOrElse(fresh))
           }
         }
-      write(codesDelta, s"$vdir/codes")
-      write(emptyTombstones, s"$vdir/tombstones")
+      Seq("assigned" -> Similarity.assignIvf(cents, batch), "codes" -> codesDelta,
+        "tombstones" -> emptyTombstones)
     }
-    maybeCompact()
-  }
 
-  // Policy-driven major compaction (`Compaction.maybeCompact` dial);
-  // the frozen codebook is store-level state and never folds. Also the
-  // tombstone eraser for deleted vectors.
-  private def maybeCompact(): Unit =
-    Compaction.maybeCompact(autoCompactEvery, this)(Compaction.annFold(retrainCells = 0))
-
-  /** One DELETE micro-batch: `deletes` carries a `vec_id` column. Same
-    * LSM contract as the engine store — O(|deletes|) tombstone bytes,
-    * masking at read scope, physical removal at `Compaction.compactAnn`,
-    * re-embedding after the tombstone resurrects the vector.
-    */
-  def processDeletes(deletes: DataFrame, batchId: Long): Unit = {
-    commit(batchId) { vdir =>
-      write(VersionedState.emptyFrame(spark, AssignedSchema), s"$vdir/assigned")
-      write(emptyCodes(spark), s"$vdir/codes")
-      write(deletes.select("vec_id").distinct(), s"$vdir/tombstones")
-    }
-    maybeCompact()
-  }
+  // A delete batch carries a `vec_id` column; re-embedding after the
+  // tombstone resurrects the vector. The frozen codebook is store-level
+  // state and never folds.
+  protected def emptyParts: Seq[(String, DataFrame)] =
+    Seq("assigned" -> VersionedState.emptyFrame(spark, AssignedSchema), "codes" -> emptyCodes(spark))
 }
 
 object LiveAnnMaintainer {
@@ -270,8 +253,6 @@ object LiveAnnMaintainer {
     */
   val Parts: Seq[String] = Seq("assigned", "codes", "tombstones")
 
-  private[streaming] val Tombstone = StructType.fromDDL("vec_id BIGINT")
-
   /** Schema of an `assigned` delta (the delete path writes an empty one
     * so the commit protocol stays uniform across version kinds).
     */
@@ -281,4 +262,64 @@ object LiveAnnMaintainer {
   /** Schema-preserved empty `codes` delta (PQ off, and the delete path). */
   private[streaming] def emptyCodes(s: SparkSession): DataFrame = VersionedState.emptyFrame(s,
     StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, code ARRAY<INT>"))
+
+  /** The ANN store: delete markers keyed on vec_id, and a fold that
+    * concatenates the assignments with tombstones applied physically,
+    * re-sizing the IVF index when `retrainCells` ≠ 0
+    * (`Compaction.compactAnn`).
+    *
+    * Committed-version detection keys on the CORE parts (a round-8 store
+    * has no codes part anywhere); the codes base is REBUILT from the
+    * masked assignments whenever PQ books exist — encodePq is
+    * deterministic per vector, so the rebuild is row-identical to
+    * folding the code deltas AND it covers vectors ingested before PQ
+    * was enabled: compaction is the migration that graduates any store
+    * to full IVF-PQ coverage. No books ⇒ schema-preserved empty base.
+    */
+  private[streaming] def kind(retrainCells: Int = 0): StoreKind = StoreKind(v => {
+    val spark = v.spark
+    val books = readBooks(spark, v.dir)
+    // the masked assignment union feeds BOTH the assigned base and the
+    // codes re-encode — cache it so the store's largest table is read
+    // and tombstone-masked once (the foldedGlobal discipline)
+    val maskedAssigned0 = v.cached(v.mask(v.read("assigned")))
+    // resolve the retrain FIRST: the re-assigned rows feed both the
+    // assigned base and the codes re-encode below
+    val newCents: Option[Seq[(Int, Seq[Double])]] =
+      if (retrainCells == 0) None
+      else {
+        val live = maskedAssigned0.select("vec_id", "embedding")
+        val k =
+          if (retrainCells > 0) retrainCells
+          else Similarity.autoCellCount(live.count())
+        Some(Similarity.trainIvf(live, k).zipWithIndex
+          .map { case (c, i) => (i, c.toSeq) }.toSeq)
+      }
+    val maskedAssigned = newCents.fold(maskedAssigned0)(cs =>
+      v.cached(Similarity.assignIvf(cs.sortBy(_._1).map(_._2.toArray).toArray,
+        maskedAssigned0.select("vec_id", "embedding"))))
+    // the centroid part is never the last one: the base must never
+    // become visible (core parts committed) without the centroids its
+    // assignments assume, and `writeParts` writes `tombstones`, the
+    // last part, only after every other part has committed. A retrain
+    // writes the new set; otherwise a base-carried part is copied
+    // forward so later compactions preserve an earlier retrain.
+    val carryCents: Option[DataFrame] = newCents match {
+      case Some(cs) =>
+        import spark.implicits._
+        Some(cs.toDF("cell", "centroid"))
+      case None =>
+        v.paths("centroids").filter(p => VersionedState.exists(s"$p/_SUCCESS"))
+          .lastOption.map(spark.read.parquet(_)) // newest carried set
+    }
+    carryCents.map(c => "centroids" -> c.coalesce(1)).toSeq ++
+      Parts.map { p =>
+        p -> (p match {
+          case "assigned" => maskedAssigned // per-vector rows — erase deleted physically
+          case "codes" => books.fold(emptyCodes(spark))(b =>
+            Similarity.encodePq(b, maskedAssigned.select("vec_id", "embedding")))
+          case _ => v.read(p).limit(0) // tombstones: applied above; base is clean
+        })
+      }
+  }, CoreParts, StructType.fromDDL("vec_id BIGINT"))
 }

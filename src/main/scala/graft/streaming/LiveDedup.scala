@@ -46,10 +46,8 @@ class LiveNearDupMaintainer(
     bands: Int = 32,
     shingleN: Int = 3,
     autoCompactEvery: Int = 0)
-    extends VersionedStore(spark, dir, LiveNearDupMaintainer.Parts, LiveNearDupMaintainer.Tombstone)
-    with StreamSink {
-
-  import VersionedState.write
+    extends VersionedStore(spark, dir, LiveNearDupMaintainer.Kind, autoCompactEvery)
+    with StreamSink with Deletes {
 
   /** The KEPT corpus (deduped documents): union of committed deltas,
     * minus tombstoned docs.
@@ -64,7 +62,8 @@ class LiveNearDupMaintainer(
     * callable directly for tests and backfills).
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    commit(batchId) { vdir =>
+    var held = Seq.empty[DataFrame]
+    try commit(batchId) {
       val b = batch.cache()
       // Corpus state visible to a (re)played batch: everything
       // committed strictly below its id (merging a replayed delta
@@ -90,42 +89,29 @@ class LiveNearDupMaintainer(
         .select("doc_id")
       val dropIds = freshComp.join(keepers, Seq("doc_id"), "left_anti")
         .select("doc_id").distinct().cache()
+      // `commit` writes the parts after this block returns: release the
+      // caches they read only then
+      held = Seq(b, setsNew, bandsNew, dropIds)
 
-      write(Dedup.keepDropVerdicts(freshIds, dropIds, "doc_id"), s"$dir/verdicts/v$batchId")
+      VersionedState.write(Dedup.keepDropVerdicts(freshIds, dropIds, "doc_id"),
+        s"$dir/verdicts/v$batchId")
 
-      // delta-only writes: this batch's keepers, O(|batch|) bytes
+      // delta-only parts: this batch's keepers, O(|batch|) bytes
       val keptIds = freshIds.join(dropIds, Seq("doc_id"), "left_anti")
-      write(setsNew.join(keptIds, Seq("doc_id"), "left_semi"), s"$vdir/sets")
-      write(bandsNew.join(keptIds, Seq("doc_id"), "left_semi"), s"$vdir/bands")
-      write(b.join(dropIds, Seq("doc_id"), "left_anti"), s"$vdir/docs")
-      write(emptyTombstones, s"$vdir/tombstones")
-      Seq(b, setsNew, bandsNew, dropIds).foreach(_.unpersist())
-    }
-    maybeCompact()
+      Seq("sets" -> setsNew.join(keptIds, Seq("doc_id"), "left_semi"),
+        "bands" -> bandsNew.join(keptIds, Seq("doc_id"), "left_semi"),
+        "docs" -> b.join(dropIds, Seq("doc_id"), "left_anti"),
+        "tombstones" -> emptyTombstones)
+    } finally held.foreach(_.unpersist())
   }
 
-  // Policy-driven major compaction (`Compaction.maybeCompact` dial) —
-  // also the tombstone eraser; per-batch `verdicts/` history is
-  // untouched, only corpus state folds.
-  private def maybeCompact(): Unit =
-    Compaction.maybeCompact(autoCompactEvery, this)(Compaction.dedupFold)
-
-  /** One DELETE micro-batch: `deletes` carries a `doc_id` column. The
-    * corpus-state contract of the other stores — O(|deletes|) tombstone
-    * bytes; the doc's text AND its LSH artifacts (sets/bands) stop
-    * matching at read scope; physical removal at
-    * `Compaction.compactDedup`. Already-written verdicts are history
-    * (per-batch output), untouched.
-    */
-  def processDeletes(deletes: DataFrame, batchId: Long): Unit = {
-    commit(batchId) { vdir =>
-      val emptyDocs = VersionedState.emptyFrame(spark, LiveEngineMaintainer.DocumentsSchema)
-      write(emptyDocs, s"$vdir/docs")
-      write(Dedup.shingleSets(emptyDocs, shingleN), s"$vdir/sets")
-      write(Dedup.minhashBands(Dedup.shingleSets(emptyDocs, shingleN), bands), s"$vdir/bands")
-      write(deletes.select("doc_id").distinct(), s"$vdir/tombstones")
-    }
-    maybeCompact()
+  // A delete batch carries a `doc_id` column: the doc's text AND its LSH
+  // artifacts (sets/bands) stop matching at read scope; already-written
+  // verdicts are history (per-batch output), untouched.
+  protected def emptyParts: Seq[(String, DataFrame)] = {
+    val docs = VersionedState.emptyFrame(spark, LiveEngineMaintainer.DocumentsSchema)
+    val sets = Dedup.shingleSets(docs, shingleN)
+    Seq("docs" -> docs, "sets" -> sets, "bands" -> Dedup.minhashBands(sets, bands))
   }
 }
 
@@ -136,5 +122,10 @@ object LiveNearDupMaintainer {
     */
   val Parts: Seq[String] = Seq("docs", "sets", "bands", "tombstones")
 
-  private[streaming] val Tombstone = org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
+  /** The near-dup store: delete markers keyed on doc_id; its fold
+    * concatenates every part with the tombstones applied physically.
+    */
+  private[streaming] val Kind = StoreKind(
+    v => Parts.map(p => p -> (if (p == "tombstones") v.read(p).limit(0) else v.mask(v.read(p)))),
+    Parts, org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT"))
 }

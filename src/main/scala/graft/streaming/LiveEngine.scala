@@ -95,11 +95,11 @@ class LiveEngineMaintainer(
     // A round-8 store, or a crash window between the core commit and a
     // derived write, serves through WikiIndex's derived fallbacks; the
     // next `compactEngine` rebuilds every derived part from core data.
-    extends VersionedStore(spark, dir, LiveEngineMaintainer.CoreParts, LiveEngineMaintainer.Tombstone)
-    with StreamSink {
+    extends VersionedStore(spark, dir, LiveEngineMaintainer.Kind, autoCompactEvery)
+    with StreamSink with Deletes {
 
   import LiveEngineMaintainer._
-  import VersionedState.{exists, withVer, write, writeParts}
+  import VersionedState.{exists, withVer, write}
 
   private val synPath = s"$dir/synonyms"
   if (synonyms.nonEmpty && !exists(s"$synPath/_SUCCESS"))
@@ -178,40 +178,21 @@ class LiveEngineMaintainer(
     * (plus an empty tombstone part — the commit protocol requires every
     * part). Replay is idempotent (deltas depend only on the batch's rows).
     */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    commit(batchId) { vdir =>
-      writeParts(indexParts(IndexBuilder.fromDocumentsTable(
-        batch.sparkSession, batch, numPartitions, extraFields, offsetsFields),
-        emptyTombstones), vdir)
-    }
-    maybeCompact()
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit = commit(batchId)(batchParts(batch))
 
-  // Policy-driven major compaction (`Compaction.maybeCompact` dial, with
-  // its one-cycle reader grace window). Doubles as the tombstone eraser:
-  // deletes are applied physically in the new base; the deleted doc's
-  // delta bytes are swept one cycle later.
-  private def maybeCompact(): Unit =
-    Compaction.maybeCompact(autoCompactEvery, this)(Compaction.engineFold)
+  private def batchParts(docs: DataFrame): Seq[(String, DataFrame)] =
+    indexParts(IndexBuilder.fromDocumentsTable(
+      docs.sparkSession, docs, numPartitions, extraFields, offsetsFields), emptyTombstones)
 
-  /** One DELETE micro-batch: `deletes` carries a `doc_id` column; this
-    * version's delta is the tombstone rows plus empty doc parts (uniform
-    * commit protocol). A tombstone masks every ingest of that doc in a
-    * version ≤ its own; later re-ingest resurrects the doc. O(|deletes|)
-    * bytes at any corpus size — the store is never rewritten here;
-    * physical erasure happens at `Compaction.compactEngine`.
-    */
-  def processDeletes(deletes: DataFrame, batchId: Long): Unit = {
-    commit(batchId) { vdir =>
-      val s = deletes.sparkSession
-      writeParts(indexParts(IndexBuilder.fromDocumentsTable(
-        s, VersionedState.emptyFrame(s, DocumentsSchema),
-        numPartitions, extraFields, offsetsFields),
-        IndexBuilder.documentKeys(deletes, "doc_id", numPartitions)
-          .select("partition", "docId").distinct()), vdir)
-    }
-    maybeCompact()
-  }
+  // a delete version's doc parts are an empty batch's: `tombstones`, its
+  // last pair, is the one the delete batch fills
+  protected def emptyParts: Seq[(String, DataFrame)] =
+    batchParts(VersionedState.emptyFrame(spark, DocumentsSchema)).init
+
+  // a delete batch names documents by `doc_id`; tombstones key them the
+  // way the index does
+  override protected def deleteKeys(deletes: DataFrame): DataFrame =
+    IndexBuilder.documentKeys(deletes, "doc_id", numPartitions)
 }
 
 object LiveEngineMaintainer {
@@ -239,7 +220,7 @@ object LiveEngineMaintainer {
   /** THE part list: one version dir's (part, table) pairs from an index
     * and its tombstone rows — shared by the micro-batch
     * (`processBatch`), the delete batch (`processDeletes`) and the
-    * compacted base (`Compaction.engineFold`), each written by
+    * compacted base (`Kind`'s fold), each written by
     * `VersionedState.writeParts`. `tombstones`, the last core part, is
     * the last pair, so it is written only after every other part
     * (derived ones included) has committed: a version never counts as
@@ -269,9 +250,46 @@ object LiveEngineMaintainer {
       StructField("n_chars", LongType)))
   }
 
-  /** Delete markers: (partition, docId); masking keys on docId. */
-  private[streaming] val Tombstone =
-    org.apache.spark.sql.types.StructType.fromDDL("partition INT, docId STRING")
+  /** The engine store: delete markers (partition, docId), masking keys
+    * on docId. Commit detection keys on the CORE parts: a round-8 store
+    * (no derived parts anywhere) compacts fine — the fold never READS the
+    * derived parts, it rebuilds them from core data, so compaction
+    * graduates any old store to the full layout. The folded, masked core
+    * tables form one `WikiIndex`, written through the batch's part list.
+    */
+  private[streaming] val Kind = StoreKind(v => {
+    // The folded global feeds three parts (global, reverse, trigram), so
+    // it is cached and folded once. The masked per-doc tables, each a
+    // scan plus at most a tombstone anti-join, are read by every part
+    // that needs them: the parts are written at the same time, and a
+    // cache would cost a job to fill before them.
+    // reverse/trigram are REBUILT from the folded global, in `save`'s
+    // sorted layout: the fold commutes with the value reversal, and a
+    // deleted document's vocabulary grams must not survive in the base.
+    val foldedGlobal = v.cached(
+      foldGlobal(VersionedState.withVer(v.read("global")), v.tombstones))
+    val maskedFields = v.mask(v.read("docs_fields"))
+    val metadata = v.read("metadata").distinct()
+    val ix = WikiIndex(maskedFields, v.mask(v.read("documents")), foldedGlobal,
+      metadata, v.mask(v.read("postings")),
+      storedEvents = Some(v.mask(v.read("events"))),
+      storedReverse = Some(WikiIndex.sortedReverse(foldedGlobal)),
+      storedTrigram = Some(WikiIndex.sortedTrigrams(foldedGlobal)),
+      // the metadata catalog's kind-p rows drive the rebuild
+      fieldPostings = Some(IndexBuilder.deriveFieldPostings(maskedFields, metadata)))
+    // The postings base keeps the read set's `dl` column only when EVERY
+    // read-set dir has it (`postingsUnion`'s coverage rule); otherwise it
+    // joins the exact per-doc lengths, so a round-8 or mixed store never
+    // persists a null dl into the base.
+    val base =
+      if (dlCovered(v.spark, v.paths("postings"))) ix
+      else ix.copy(
+        termPostings = ix.termPostings.drop("dl")
+          .join(ix.docLengths, Seq("partition", "language", "docId")),
+        storedDocLengths = Some(ix.docLengths))
+    // tombstones are applied above; the base is clean
+    indexParts(base, v.read("tombstones").limit(0))
+  }, CoreParts, org.apache.spark.sql.types.StructType.fromDDL("partition INT, docId STRING"))
 
   /** Every read-set postings dir carries the denormalized `dl` column
     * (one driver-side footer read per dir).

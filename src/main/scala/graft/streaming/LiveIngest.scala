@@ -35,7 +35,8 @@ class LiveIndexMaintainer(
     spark: SparkSession,
     dir: String,
     numPartitions: Int,
-    autoCompactEvery: Int = 0) extends VersionedStore(spark, dir) with StreamSink {
+    autoCompactEvery: Int = 0)
+    extends VersionedStore(spark, dir, LiveIndexMaintainer.Kind, autoCompactEvery) with StreamSink {
 
   /** Merged read view of the global index at the latest committed
     * version, if any batch has been processed yet: newest compacted
@@ -46,16 +47,14 @@ class LiveIndexMaintainer(
   /** One micro-batch of the maintenance loop (the `foreachBatch` body,
     * callable directly for tests and backfills).
     */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    commit(batchId)(VersionedState.write(IndexBuilder.buildGlobalIndex(
-      IndexBuilder.documentIndexRows(batch, numPartitions)), _))
-    // Policy-driven major compaction (autoCompactEvery > 0): once the
-    // committed delta count reaches the dial, fold base+deltas into one
-    // c<k> — read amplification stays bounded without an operator in
-    // the loop. Runs inside the batch turn, so the maintainer pauses
-    // for one fold every N batches (Accumulo's blocking-major analogue;
-    // size the dial to the corpus like its compaction ratio).
-    Compaction.maybeCompact(autoCompactEvery, this)(
-      Compaction.single(IncrementalIndex.mergeAll))
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    commit(batchId)(Seq("" -> IndexBuilder.buildGlobalIndex(
+      IndexBuilder.documentIndexRows(batch, numPartitions))))
+}
+
+object LiveIndexMaintainer {
+  /** The global-index store: one table, folded through the lossy-UidList
+    * merge.
+    */
+  private[streaming] val Kind = StoreKind(Compaction.single(IncrementalIndex.mergeAll))
 }

@@ -19,15 +19,16 @@ import org.apache.spark.sql.functions._
   * per micro-batch without ever re-scanning accumulated data.
   *
   * A single-part [[VersionedStore]]: `v<id>` count deltas, `c<k>` bases
-  * (compact() folds the read set through the same keyed sum — a
+  * (`compact()` folds the read set through the same keyed sum — a
   * DataFrame job, since the state is vocabulary-sized), time travel via
   * `modelAt(upTo)`.
   */
 class LiveDsirModelMaintainer(
     spark: SparkSession,
-    dir: String) extends VersionedStore(spark, dir) {
+    dir: String) extends VersionedStore(spark, dir, LiveDsirModelMaintainer.Kind) {
 
   import graft.pipeline.Curation
+  import LiveDsirModelMaintainer.merge
 
   /** Fold one micro-batch of documents into a count-table delta. The
     * only corpus-touching work is the batch's own explode+count pass;
@@ -36,7 +37,7 @@ class LiveDsirModelMaintainer(
     * only on the batch's rows).
     */
   def processBatch(batch: DataFrame, isTarget: Column, batchId: Long): Unit =
-    commit(batchId)(VersionedState.write(Curation.dsirCounts(batch, isTarget), _))
+    commit(batchId)(Seq("" -> Curation.dsirCounts(batch, isTarget)))
 
   /** The merged count table at version `upTo` — union of the read set
     * + one keyed integer sum (distributed; nothing driver-sized about
@@ -54,9 +55,6 @@ class LiveDsirModelMaintainer(
     */
   def countsFor(key: (Option[Long], Seq[Long])): Option[DataFrame] = view(key).exact()(merge)
 
-  private def merge(rows: DataFrame): DataFrame =
-    rows.groupBy("token").agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
-
   /** The quantized importance model at `upTo` — the SAME derivation the
     * batch operator uses (`Curation.dsirModel`), over the merged table.
     */
@@ -66,11 +64,14 @@ class LiveDsirModelMaintainer(
   /** The model over EXACTLY the given read set (see `countsFor`). */
   def modelFor(key: (Option[Long], Seq[Long])): Option[DataFrame] =
     countsFor(key).map(Curation.dsirModel)
+}
 
-  /** Fold every committed version into a `c<latest>` count-table base —
-    * one distributed keyed sum, then the standard compact-then-sweep
-    * protocol.
+object LiveDsirModelMaintainer {
+  private def merge(rows: DataFrame): DataFrame =
+    rows.groupBy("token").agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
+
+  /** The DSIR store: one count table, folded by the same distributed
+    * keyed sum the reads merge with.
     */
-  def compact(deleteSubsumed: Boolean = true): Long =
-    majorCompact(deleteSubsumed)(Compaction.single(merge))
+  private[streaming] val Kind = StoreKind(Compaction.single(merge))
 }

@@ -25,15 +25,20 @@ import org.apache.spark.sql.functions._
   *
   * Time travel (`cmsAt(v)`), restart recovery, and the
   * compact-then-sweep protocol all come with the store. `compact()`
-  * folds every committed version into a `c<latest>` base — after it, a
-  * reader merges exactly one row until the next delta lands.
+  * folds every committed version into a `c<latest>` base of one row —
+  * after it, a reader merges exactly one row until the next delta
+  * lands; `compact(deleteSubsumed = false)` defers the sweep for a
+  * reader grace window (`Compaction.sweepSubsumed(dir, Nil)` later).
   */
 class LiveSketchMaintainer(
     spark: SparkSession,
     dir: String,
     val d: Int = 4,
     val w: Int = 512,
-    keyCol: String = "user_id") extends VersionedStore(spark, dir) with StreamSink {
+    keyCol: String = "user_id")
+    extends VersionedStore(spark, dir, LiveSketchMaintainer.kind(d, w)) with StreamSink {
+
+  import LiveSketchMaintainer.merge
 
   private val cms = udaf(new graft.functions.Sketches.CmsAggregator(d, w))
 
@@ -42,7 +47,7 @@ class LiveSketchMaintainer(
     * that shuffles); the delta is a single (version, sk) row.
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
-    commit(batchId)(VersionedState.write(batch.agg(cms(col(keyCol)).as("sk")).coalesce(1), _))
+    commit(batchId)(Seq("" -> batch.agg(cms(col(keyCol)).as("sk")).coalesce(1)))
 
   /** The merged sketch at version `upTo` (default: latest) — element-wise
     * sum over the read set's partial rows, driver-side over bounded
@@ -52,7 +57,7 @@ class LiveSketchMaintainer(
     * resolved snapshot's exact set via `cmsFor` instead.
     */
   def cmsAt(upTo: Long = Long.MaxValue): Seq[Long] =
-    mergedAt(upTo)(merge).getOrElse(new Array[Long](d * w).toSeq)
+    mergedAt(upTo)(merge(d * w)).getOrElse(new Array[Long](d * w).toSeq)
 
   /** The merged sketch over EXACTLY the given read set (a resolved
     * `ServeSnapshot.keyAt`) — NO second directory listing, so a
@@ -60,10 +65,15 @@ class LiveSketchMaintainer(
     * cannot silently shrink the merge to the zero sketch: a swept path
     * is None, which the serving edge maps to its 404.
     */
-  def cmsFor(key: (Option[Long], Seq[Long])): Option[Seq[Long]] = view(key).exact()(merge)
+  def cmsFor(key: (Option[Long], Seq[Long])): Option[Seq[Long]] = view(key).exact()(merge(d * w))
+}
 
-  private def merge(rows: DataFrame): Seq[Long] = {
-    val acc = new Array[Long](d * w)
+object LiveSketchMaintainer {
+  /** Element-wise sum of a read set's partial sketches of `size`
+    * counters, driver-side over bounded state.
+    */
+  private def merge(size: Int)(rows: DataFrame): Seq[Long] = {
+    val acc = new Array[Long](size)
     rows.collect().foreach { r =>
       val sk = r.getSeq[Long](r.fieldIndex("sk"))
       var i = 0
@@ -72,15 +82,13 @@ class LiveSketchMaintainer(
     acc.toSeq
   }
 
-  /** Fold every committed version into a `c<latest>` base of one row.
-    * `deleteSubsumed = false` defers the sweep for a reader grace
-    * window (`Compaction.sweepSubsumed(dir, Nil)` later).
+  /** A d×w CMS store: its fold merges every committed version into a
+    * base of one row.
     */
-  def compact(deleteSubsumed: Boolean = true): Long = {
-    import spark.implicits._
-    majorCompact(deleteSubsumed)(Compaction.single(rows =>
-      Seq(Tuple1(merge(rows))).toDF("sk").coalesce(1)))
-  }
+  private[streaming] def kind(d: Int, w: Int): StoreKind = StoreKind(Compaction.single { rows =>
+    import rows.sparkSession.implicits._
+    Seq(Tuple1(merge(d * w)(rows))).toDF("sk").coalesce(1)
+  })
 }
 
 /** The bottom-k quantile twin of `LiveSketchMaintainer`, PER GROUP —
@@ -102,7 +110,8 @@ class LiveSketchMaintainer(
 class LiveQuantileMaintainer(
     spark: SparkSession,
     dir: String,
-    val k: Int = 512) extends VersionedStore(spark, dir) with StreamSink {
+    val k: Int = 512)
+    extends VersionedStore(spark, dir, LiveQuantileMaintainer.kind(k)) with StreamSink {
 
   import graft.functions.Sketches
 
@@ -112,8 +121,8 @@ class LiveQuantileMaintainer(
     * buffers are all that shuffles; the delta is ≤|groups| rows.
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
-    commit(batchId)(VersionedState.write(
-      batch.groupBy("g").agg(sample(col("key"), col("v")).as("sk")).coalesce(1), _))
+    commit(batchId)(Seq("" ->
+      batch.groupBy("g").agg(sample(col("key"), col("v")).as("sk")).coalesce(1)))
 
   /** Per-group merged samples at version `upTo`, finished with the
     * rank-rule quantiles — driver-side over |groups|·k·versions pairs.
@@ -130,7 +139,15 @@ class LiveQuantileMaintainer(
   def quantilesFor(key: (Option[Long], Seq[Long])): Option[Map[String, Sketches.QsOut]] =
     view(key).exact()(finish)
 
-  private def merge(rows: DataFrame): Map[String, Sketches.QsBuf] =
+  private def finish(rows: DataFrame): Map[String, Sketches.QsOut] =
+    LiveQuantileMaintainer.merge(k)(rows).map { case (g, b) => g -> Sketches.qsFinish(b) }
+}
+
+object LiveQuantileMaintainer {
+  import graft.functions.Sketches
+
+  /** Per-group bottom-k merge of a read set's partial samples. */
+  private def merge(k: Int)(rows: DataFrame): Map[String, Sketches.QsBuf] =
     rows.collect().map { r =>
       val sk = r.getStruct(r.fieldIndex("sk"))
       (r.getString(r.fieldIndex("g")),
@@ -139,16 +156,12 @@ class LiveQuantileMaintainer(
       g -> bs.map(_._2).reduce(Sketches.qsMerge(_, _, k))
     }
 
-  private def finish(rows: DataFrame): Map[String, Sketches.QsOut] =
-    merge(rows).map { case (g, b) => g -> Sketches.qsFinish(b) }
-
-  /** Fold every committed version into a `c<latest>` base (per-group
-    * MERGED partials — NOT finished quantiles, so ingest continues to
-    * merge past it). Same compact-then-sweep protocol as the CMS store.
+  /** A bottom-k quantile store: its fold merges every committed version
+    * into a base of per-group MERGED partials — NOT finished quantiles,
+    * so ingest continues to merge past it.
     */
-  def compact(deleteSubsumed: Boolean = true): Long = {
-    import spark.implicits._
-    majorCompact(deleteSubsumed)(Compaction.single(rows =>
-      merge(rows).toSeq.sortBy(_._1).toDF("g", "sk").coalesce(1)))
-  }
+  private[streaming] def kind(k: Int): StoreKind = StoreKind(Compaction.single { rows =>
+    import rows.sparkSession.implicits._
+    merge(k)(rows).toSeq.sortBy(_._1).toDF("g", "sk").coalesce(1)
+  })
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -217,7 +218,6 @@ private[streaming] object VersionedState {
     * common case skips the joins entirely).
     */
   def tombstoneSet(tombs: Option[DataFrame], key: String): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
     tombs
       .map(t => withVer(t).select(col(key), col("ver").as("tver")).distinct())
       .filter(!_.isEmpty)
@@ -237,19 +237,31 @@ private[streaming] object VersionedState {
     }
 }
 
+/** One live store kind's facts, declared once in its maintainer's
+  * companion: its compaction `fold` (the combiner at compact scope), its
+  * committed `parts` (Nil: the single-part layout, the version dir is
+  * the table) and, for a store with deletes, its `tombstone` schema,
+  * whose LAST column is the delete key.
+  */
+private[streaming] final case class StoreKind(
+    fold: Compaction.Fold,
+    parts: Seq[String] = Nil,
+    tombstone: StructType = new StructType())
+
 /** The lifecycle every live store shares — the Spark shape of the
   * reference's one sorted LSM table per store, where only the combiner
   * ("aggregator") that folds entries at ingest, compaction and scan
-  * varies per table. A maintainer extends this class and supplies its
-  * per-batch delta and its per-part fold (`Compaction`); everything
-  * else — recovery, commit, snapshots, masked reads, compaction — is
-  * here, once.
+  * varies per table. A maintainer extends this class with its
+  * [[StoreKind]] and supplies its per-batch delta, the (part, table)
+  * pairs of one version; everything else — recovery, commit, the
+  * auto-compaction dial, snapshots, masked reads, compaction and (with
+  * [[Deletes]]) the delete batch — is here, once.
   *
   * Layout under `dir`:
   *   - `v<batchId>/` — a DELTA holding only that micro-batch's output
   *     (O(|batch|) bytes at any accumulated corpus size);
   *   - `c<k>/`       — a COMPACTED BASE subsuming every version ≤ k
-  *     (written by `majorCompact`, never by ingest).
+  *     (written by `compact`, never by ingest).
   * A multi-part store keeps one parquet subdir per part in each; a
   * single-part store (`parts` empty) keeps its table in the version dir
   * itself, addressed as part "".
@@ -265,12 +277,12 @@ private[streaming] object VersionedState {
   * Commit protocol: a version counts only once the `_SUCCESS` marker of
   * EVERY part in `parts` exists (stores with optional derived parts list
   * only their core parts); every write forces the marker
-  * (`VersionedState.write`). A version's parts go through
-  * `VersionedState.writeParts`: all but the last concurrently, in the
-  * `ingest` scheduler pool, and the last — a core part — once they have
-  * all committed. A replayed batch id that is already
-  * committed is skipped: a delta depends only on its batch's rows, and
-  * rewriting it in place would race a concurrent reader.
+  * (`VersionedState.write`). Every version — delta, delete batch or
+  * compacted base — goes through `VersionedState.writeParts`: all parts
+  * but the last concurrently, in the `ingest` scheduler pool, and the
+  * last — a core part — once they have all committed. A replayed batch
+  * id that is already committed is skipped: a delta depends only on its
+  * batch's rows, and rewriting it in place would race a concurrent reader.
   *
   * Deletes: a `tombstones` part (schema `tombstone`, whose LAST column
   * is the delete key) masks every row of its key at the row's version
@@ -280,8 +292,8 @@ private[streaming] object VersionedState {
   * Compaction writes `c<through>` with forced markers (readers never see
   * a partial base), then deletes the dirs it subsumes — eagerly, or
   * after a reader grace window (`deleteSubsumed = false`, then
-  * `Compaction.sweepSubsumed`; the auto dial `Compaction.maybeCompact`
-  * sweeps one cycle late).
+  * `Compaction.sweepSubsumed`; the auto dial `Compaction.maybeCompact`,
+  * which every commit runs at `autoCompactEvery`, sweeps one cycle late).
   *
   * SINGLE-WRITER CONTRACT: the protocol is safe for ONE writer beside
   * any number of readers — a reader either sees a version's full marker
@@ -300,10 +312,12 @@ private[streaming] object VersionedState {
 class VersionedStore private[streaming] (
     spark: SparkSession,
     private[streaming] val dir: String,
-    private[streaming] val parts: Seq[String] = Nil,
-    tombstone: StructType = new StructType()) {
+    private[streaming] val kind: StoreKind,
+    autoCompactEvery: Int = 0) {
 
   import VersionedState._
+
+  private[streaming] def parts: Seq[String] = kind.parts
 
   // The recovery pointer: a restarted store resumes at its last
   // committed version — Structured Streaming's checkpoint resumes at the
@@ -352,7 +366,7 @@ class VersionedStore private[streaming] (
   def snapshotKey(upTo: Long): (Option[Long], Seq[Long]) = readSet(dir, parts, upTo)
 
   private[streaming] def view(key: (Option[Long], Seq[Long])): ReadView =
-    new ReadView(spark, dir, key, tombstone)
+    new ReadView(spark, dir, key, kind.tombstone)
 
   private[streaming] def viewAt(upTo: Long): ReadView = view(snapshotKey(upTo))
 
@@ -364,26 +378,30 @@ class VersionedStore private[streaming] (
   private[streaming] def mergedAt[T](upTo: Long)(merge: DataFrame => T): Option[T] =
     viewAt(math.min(upTo, version)).union().map(merge)
 
-  private[streaming] def emptyTombstones: DataFrame = emptyFrame(spark, tombstone)
+  private[streaming] def emptyTombstones: DataFrame = emptyFrame(spark, kind.tombstone)
 
-  /** Replay-skip-then-commit: write batch `batchId`'s delta into its
-    * version dir unless that id is already committed (at or below the
-    * pointer, or every part's marker on disk), then advance the pointer
-    * — last, once the delta is committed.
+  /** Replay-skip-then-commit: write batch `batchId`'s `delta`, its
+    * (part, table) pairs, into its version dir through `writeParts`
+    * unless that id is already committed (at or below the pointer, or
+    * every part's marker on disk), then advance the pointer — last, once
+    * the delta is committed — and run the auto-compaction dial.
     */
-  private[streaming] def commit(batchId: Long)(writeDelta: String => Unit): Unit = {
+  private[streaming] def commit(batchId: Long)(delta: => Seq[(String, DataFrame)]): Unit = {
     if (batchId > version && !markerCommitted(dir, s"v$batchId", parts))
-      inIngestPool(spark)(writeDelta(s"$dir/v$batchId"))
+      inIngestPool(spark)(writeParts(delta, s"$dir/v$batchId"))
     version = math.max(version, batchId)
+    Compaction.maybeCompact(autoCompactEvery, this)
   }
 
-  /** Major compaction through the newest committed version: `fold`
-    * maps the read set to the base's parts, written into `c<through>`
-    * by `writeParts` (the last part last); caches the fold takes
-    * through `ReadView.cached` are released after the writes. Returns
-    * the compacted-through version, or -1 when nothing is committed.
+  /** Major compaction through the newest committed version: the kind's
+    * fold maps the read set to the base's parts, written into
+    * `c<through>` by `writeParts` (the last part last); caches the fold
+    * takes through `ReadView.cached` are released after the writes.
+    * `deleteSubsumed = false` keeps the subsumed dirs for a reader grace
+    * window (`Compaction.sweepSubsumed` later). Returns the
+    * compacted-through version, or -1 when nothing is committed.
     */
-  private[streaming] def majorCompact(deleteSubsumed: Boolean)(fold: Compaction.Fold): Long = {
+  def compact(deleteSubsumed: Boolean = true): Long = {
     val (bases, deltas) = committedSets(dir, parts)
     val through = newest((bases, deltas))
     if (through < 0) return -1L
@@ -392,7 +410,7 @@ class VersionedStore private[streaming] (
     // place while reading it would delete the only copy of the store
     if (key != (Some(through), Nil)) inIngestPool(spark) {
       val v = view(key)
-      try writeParts(fold(v), s"$dir/c$through")
+      try writeParts(kind.fold(v), s"$dir/c$through")
       finally v.release()
     }
     if (deleteSubsumed) sweep(dir, parts, through)
@@ -419,6 +437,28 @@ trait StreamSink extends VersionedStore {
         processBatch(batch.toDF, batchId)
       }
       .start())
+}
+
+/** A store with deletes (Lucene liveDocs / Accumulo delete entries):
+  * one DELETE micro-batch commits a version of the store's empty
+  * non-tombstone parts plus a `tombstones` part holding the batch's
+  * distinct keys in the kind's tombstone schema. O(|deletes|) bytes at
+  * any corpus size: the store is never rewritten here; rows are masked
+  * at read scope, version-ordered (a re-ingest after the tombstone
+  * resurrects), and erased physically by the next compaction.
+  */
+trait Deletes extends VersionedStore {
+
+  /** Every part but `tombstones`, schema-preserved empty. */
+  protected def emptyParts: Seq[(String, DataFrame)]
+
+  /** The delete batch's rows carrying the tombstone columns. */
+  protected def deleteKeys(deletes: DataFrame): DataFrame = deletes
+
+  def processDeletes(deletes: DataFrame, batchId: Long): Unit =
+    commit(batchId)(emptyParts :+ ("tombstones" -> deleteKeys(deletes)
+      .select(kind.tombstone.fieldNames.toSeq.map(col): _*)
+      .distinct()))
 }
 
 /** One resolved read set `key` of a store — the read primitive of both

@@ -474,6 +474,100 @@ class StreamingSpec extends SparkSuite {
       Seq("1", "2", "3", "4"))
   }
 
+  /** Version `v` of the store at `dir` holds exactly `expected`'s parts,
+    * each the same row multiset as its frame evaluated on its own.
+    */
+  private def assertPartsEqual(dir: String, v: Long,
+      expected: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
+    import graft.tools.DumpIndexTables.sortedRows
+    assert(new java.io.File(s"$dir/v$v").list().toSet == expected.map(_._1).toSet)
+    for ((p, df) <- expected) {
+      val (got, want) = (sortedRows(spark.read.parquet(s"$dir/v$v/$p")), sortedRows(df))
+      if (got != want) fail(s"v$v/$p differs from the in-memory frame: ${got.diff(want).size} " +
+        s"rows only on disk, e.g. ${got.diff(want).take(2)}; ${want.diff(got).size} only in memory")
+    }
+  }
+
+  test("concurrent part writes: every near-dup part of three local batches and a delete batch equals the in-memory frames") {
+    import graft.pipeline.Dedup
+    val dir = java.nio.file.Files.createTempDirectory("graft-live-dedup-concurrent").toString
+    val m = new LiveNearDupMaintainer(spark, dir, tau = 0.6)
+    val rnd = new scala.util.Random(13)
+    val vocab = Vector.tabulate(200)(i => s"w${i * 7919 % 1000}")
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    var dropped = 0L
+    for (b <- 0 until 3) {
+      // every fourth doc is a one-word variant of an earlier doc of this
+      // batch or of the corpus: drops inside the batch and against it
+      val docs = (0 until 40).map { i =>
+        val text =
+          if (i % 4 == 3) texts(rnd.nextInt(texts.size)).split(" ").init.mkString(" ") + " tail"
+          else Seq.fill(10)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+        texts += text
+        (b * 40L + i, text, "en", "s", text.length.toLong)
+      }
+      val batch = spark.createDataFrame(docs).toDF("doc_id", "text", "lang", "source", "n_chars")
+      m.processBatch(batch, b.toLong)
+      val dropIds = m.verdictsFor(b.toLong).filter(col("verdict") === "drop").select("doc_id")
+      dropped += dropIds.count()
+      val keptIds = batch.select("doc_id").join(dropIds, Seq("doc_id"), "left_anti")
+      val sets = Dedup.shingleSets(batch, 3)
+      assertPartsEqual(dir, b, Seq(
+        "sets" -> sets.join(keptIds, Seq("doc_id"), "left_semi"),
+        "bands" -> Dedup.minhashBands(sets, 32).join(keptIds, Seq("doc_id"), "left_semi"),
+        "docs" -> batch.join(dropIds, Seq("doc_id"), "left_anti"),
+        "tombstones" -> m.emptyTombstones))
+    }
+    assert(dropped > 0, "no near-duplicate dropped: the batches exercise only the keep path")
+    m.processDeletes(spark.createDataFrame(Seq(Tuple1(0L), Tuple1(0L), Tuple1(5L))).toDF("doc_id"), 3L)
+    assertPartsEqual(dir, 3L, Seq("docs" -> spark.emptyDataFrame, "sets" -> spark.emptyDataFrame,
+      "bands" -> spark.emptyDataFrame, "tombstones" -> Seq(0L, 5L).toDF("doc_id")))
+  }
+
+  test("concurrent part writes: every ANN part of three local batches and a delete batch equals the in-memory frames") {
+    import graft.pipeline.Similarity
+    val dir = java.nio.file.Files.createTempDirectory("graft-live-ann-concurrent").toString
+    val m = new LiveAnnMaintainer(spark, dir, cells = 4, pqM = 2, pqK = 4)
+    val rnd = new scala.util.Random(17)
+    for (b <- 0 until 3) {
+      val vecs = (0 until 120).map(i => (b * 120L + i, Array.fill(8)(rnd.nextFloat())))
+      val batch = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
+      m.processBatch(batch, b.toLong)
+      assertPartsEqual(dir, b, Seq(
+        "assigned" -> Similarity.assignIvf(m.centroids.get, batch),
+        "codes" -> Similarity.encodePq(m.pqBooks.get, batch),
+        "tombstones" -> m.emptyTombstones))
+    }
+    m.processDeletes(spark.createDataFrame(Seq(Tuple1(3L), Tuple1(3L), Tuple1(200L))).toDF("vec_id"), 3L)
+    assertPartsEqual(dir, 3L, Seq("assigned" -> spark.emptyDataFrame, "codes" -> spark.emptyDataFrame,
+      "tombstones" -> Seq(3L, 200L).toDF("vec_id")))
+  }
+
+  test("a failed ANN part write: its own error, nothing committed, no writer thread left, a fixed replay commits") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-live-ann-failed-part").toString
+    val boom = "ann part write failed on purpose"
+    val m = new LiveAnnMaintainer(spark, dir, cells = 2, pqM = 2, pqK = 2)
+    def vecs(ids: Long*) = spark.createDataFrame(ids.map(i => (i, Array.tabulate(4)(d => (i * 4 + d).toFloat))))
+      .toDF("vec_id", "embedding")
+    m.processBatch(vecs(1L, 2L, 3L, 4L), 0L)
+    val before = (m.latestVersion, m.serveSnapshot())
+    // vector 99's embedding raises: `assigned` and `codes`, written at
+    // the same time, both fail for it
+    val e = intercept[Exception](m.processBatch(vecs(5L, 99L).withColumn("embedding",
+      when(col("vec_id") === 99L, raise_error(lit(boom))).otherwise(col("embedding"))), 1L))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e.toString)
+    assert(String.valueOf(e.getMessage).contains(boom), e.toString)
+    assert(!VersionedState.exists(s"$dir/v1/tombstones/_SUCCESS"))
+    assert((m.latestVersion, m.serveSnapshot()) == before)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.isAlive && t.getName.startsWith(VersionedState.WriterThread)), "a part writer outlived its batch")
+    m.processBatch(vecs(5L, 6L), 1L)
+    assert(m.latestVersion == 1L && VersionedState.exists(s"$dir/v1/tombstones/_SUCCESS"))
+    assert(m.latestIndex.get.assigned.select("vec_id").as[Long].collect().sorted.toSeq == (1L to 6L))
+    assert(m.latestPq.get.codes.select("vec_id").as[Long].collect().sorted.toSeq == (1L to 6L))
+  }
+
   test("a live batch's and a compaction's jobs carry the caller's job group and tag in the ingest pool; a reader's carry none") {
     import org.apache.spark.scheduler.{SchedulingMode, SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
